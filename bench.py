@@ -304,13 +304,17 @@ def _steal_gate(threshold_cs: float = 2.0, max_wait_s: float = 120.0) -> dict:
         time.sleep(4.0)
         waited += 5.0
         cur = _rate()
-    return {
+    gate = {
         "threshold_core_s_per_s": threshold_cs,
         "start": round(start, 2),
-        "at_measure": None if cur is None else round(cur, 2),
         "waited_s": round(waited, 1),
-        "timed_out": cur is not None and cur > threshold_cs,
     }
+    if cur is None:
+        # /proc/stat went unreadable mid-wait: the gate neither passed
+        # nor timed out, and must not read like a clean pass
+        return {**gate, "unavailable": True}
+    return {**gate, "at_measure": round(cur, 2),
+            "timed_out": cur > threshold_cs}
 
 
 def _loadavg_gate(threshold: float = 2.0, max_wait_s: float = 300.0) -> dict:
@@ -377,11 +381,10 @@ def main() -> None:
         gate = _loadavg_gate()
         steal_gate = _steal_gate()
     spark = get_spark("bench")
-    # OFF, not ERROR: the lazy-resolution keys intentionally trigger
-    # (and handle) TABLE_OR_VIEW_NOT_FOUND, which Spark 4's
-    # DataFrameQueryContextLogger would otherwise print as a JSON
-    # stack fragment into the artifact tail (BENCH_r05's blemish);
-    # the bench contract is exactly one metric line on stdout.
+    # OFF, not ERROR: Spark 4's DataFrameQueryContextLogger prints a
+    # handled AnalysisException as a JSON stack fragment into the
+    # artifact tail (BENCH_r05's blemish); the bench contract is
+    # exactly one metric line on stdout.
     spark.sparkContext.setLogLevel("OFF")
 
     # warmup: touch the big table once so JVM/codegen/FS caches are hot
@@ -402,7 +405,7 @@ def main() -> None:
     # is the mean, so one stolen run moves it half as far as it moves a
     # sum of per-run values and the artifact shows which run it was).
     run_arrays: dict[str, list[float]] = {}
-    steal_per_key: dict[str, int] = {}
+    steal_per_key: dict[str, int | None] = {}
     row_counts: dict[str, int] = {}
     steal0 = _steal_jiffies()
     for name in headline:
@@ -417,9 +420,9 @@ def main() -> None:
             start = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - start)
-        kd = _steal_delta(k0, _steal_jiffies())
-        if kd is not None:
-            steal_per_key[name] = kd
+        # None (null) when /proc/stat was unreadable, like
+        # cpu_steal_jiffies: a missing measurement stays visible
+        steal_per_key[name] = _steal_delta(k0, _steal_jiffies())
         run_arrays[name] = [round(x, 3) for x in runs]
         timings[name] = round(min(runs), 3)
         # result-row counts for the scaling artifacts (r9 verdict item
@@ -514,6 +517,10 @@ def main() -> None:
         # (see _steal_jiffies): 100 jiffies == 1 stolen core-second;
         # null means /proc/stat was unreadable, not a clean run
         "cpu_steal_jiffies": steal_headline,
+        # the window cpu_steal_jiffies covers; artifacts without this
+        # field covered up to record-build time and recorded 0, not
+        # null, for an unreadable /proc/stat
+        "cpu_steal_window": "headline_timed_loop",
         # burst-resistant companion total (additive; headline `value`
         # stays best-of-2 for round-over-round comparability)
         "median_total": round(

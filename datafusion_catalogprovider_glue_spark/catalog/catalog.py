@@ -17,6 +17,8 @@ the views, exactly as the reference delegates execution to DataFusion
 from __future__ import annotations
 
 import enum
+import re
+import threading
 from dataclasses import dataclass, field
 from typing import Optional, Union
 
@@ -115,6 +117,10 @@ class GlueCatalog:
         # schema-provider map of the reference (glue.rs:286-296) is a
         # plain nested dict here.
         self._registry: dict[str, dict[str, TableEntry]] = {}
+        # single-flight lazy registration: one lock per (db, table),
+        # created under _flights_lock
+        self._flights: dict[tuple[str, str], threading.Lock] = {}
+        self._flights_lock = threading.Lock()
 
     # -- naming -----------------------------------------------------------
     def view_name(self, database: str, table: str) -> str:
@@ -417,7 +423,10 @@ class GlueCatalog:
         discovery.  ``expression`` (A13d) goes to the SERVICE verbatim
         (GetPartitions Expression=...), which filters before paging —
         the page budget scales with matching partitions, not the
-        table's partition count."""
+        table's partition count.  A failing call raises: returning []
+        (or the pages fetched so far) would silently re-register the
+        table through directory discovery, with other partitions and
+        other types than Glue declares."""
         getter = getattr(self.client, "get_partitions", None)
         if getter is None:
             return []
@@ -425,17 +434,9 @@ class GlueCatalog:
         parts: list[dict] = []
         token: dict = {}
         while True:
-            try:
-                response = getter(
-                    DatabaseName=database, TableName=name, **extra, **token
-                )
-            except Exception:
-                if expression:
-                    # a user-supplied expression must fail LOUDLY — a
-                    # silent [] here would register the table with no
-                    # partitions and quietly serve zero rows
-                    raise
-                return []
+            response = getter(
+                DatabaseName=database, TableName=name, **extra, **token
+            )
             parts.extend(response.get("Partitions") or [])
             next_token = response.get("NextToken")
             if not next_token:
@@ -878,13 +879,26 @@ class GlueCatalog:
         catalog that is the difference between one round trip for the
         one table a query touches and 10k GetTable+read registrations
         before the first query runs."""
-        entry = self.table(database, name)
-        if entry is None:
-            entry = self.register_table(database, name)
-        return self.spark.table(entry.view)
+        return self.spark.table(self._resolve(database, name).view)
 
-    # view names look like {prefix}{db}__{table}; used by sql() to map
-    # an unresolved relation back to the Glue coordinates to fetch
+    def _resolve(self, database: str, name: str) -> TableEntry:
+        """The registry entry for ``database.name``, registered with one
+        GetTable on a miss.  Single-flight per table: callers that miss
+        on the same table at once wait for the first registration and
+        then read it from the registry, so concurrent ``sql()`` /
+        ``df()`` calls make one GetTable and one registration, not one
+        each with the last writer winning."""
+        entry = self.table(database, name)
+        if entry is not None:
+            return entry
+        with self._flights_lock:
+            flight = self._flights.setdefault((database, name), threading.Lock())
+        with flight:
+            entry = self.table(database, name)
+            return entry if entry is not None else self.register_table(database, name)
+
+    # view names look like {prefix}{db}__{table}; maps a view name the
+    # SQL text uses back to the Glue coordinates to fetch
     def _parse_view_name(self, view: str) -> Optional[tuple[str, str]]:
         if not view.startswith(self.view_prefix):
             return None
@@ -896,10 +910,11 @@ class GlueCatalog:
     # identifier or a backquoted one
     _IDENT_RE = r"(?:[A-Za-z_][A-Za-z0-9_]*|`[^`]+`)"
 
-    def _rewrite_three_part(self, text: str) -> str:
+    def _rewrite_three_part(self, text: str) -> tuple[str, list[tuple[str, str]]]:
         """Rewrite ``glue.db.table`` THREE-PART identifiers (how the
         reference's users address tables, demo.rs:68-90) onto the
-        ``{prefix}db__table`` view namespace before analysis.  Only
+        ``{prefix}db__table`` view namespace before analysis, and
+        collect the catalog tables the text references.  Only
         segments OUTSIDE string literals ('…' with '' escapes AND
         Spark's default "…" double-quoted literal form) and outside
         ``--``/``/* */`` comments rewrite, and only references
@@ -907,23 +922,44 @@ class GlueCatalog:
         names pass through to Spark untouched.  Backquoted parts
         unquote, and a rewritten name whose segments were quoted is
         RE-backquoted (``glue.`my db`.`t-1``` must stay one legal
-        identifier after the rewrite).  The rewrite is purely
-        textual; resolution/registration stays with sql()'s lazy
-        loop, so the one-GetTable budget holds.  Known textual
-        limit: a struct access through a table alias literally named
-        ``glue`` (``glue.col.field``) is indistinguishable from a
-        three-part reference without a full parse."""
-        import re
+        identifier after the rewrite).
 
+        Returns the rewritten text and, in text order without
+        repeats, the ``(db, table)`` of every ``{prefix}db__table``
+        identifier in its code segments: rewritten three-part names
+        and view names written directly, bare or backquoted, or as the
+        string argument of an ``IDENTIFIER('…')`` clause.  A name
+        qualified by a dot (``other.glue__a__b``) is not ours.  This
+        list is what sql() registers before its one analysis.  Known
+        textual limits: a struct access through a table alias
+        literally named ``glue`` (``glue.col.field``) is
+        indistinguishable from a three-part reference, and a column
+        or CTE spelled like a view name is collected too (sql()
+        tolerates the failed lookup) — telling them apart needs a
+        full parse."""
         pat = re.compile(
             rf"\b{CATALOG_NAME}\.({self._IDENT_RE})\.({self._IDENT_RE})"
         )
+        prefix = re.escape(self.view_prefix)
+        view_ref = re.compile(rf"(?<![\w.`])(?:`({prefix}[^`]+)`|({prefix}\w+))")
+        refs: dict[tuple[str, str], None] = {}
 
         def _sub(m: "re.Match[str]") -> str:
             quoted = any(g.startswith("`") for g in m.groups())
             db, table = (g.strip("`") for g in m.groups())
             name = self.view_name(db, table)
             return f"`{name}`" if quoted else name
+
+        def _collect(name: str) -> None:
+            coords = self._parse_view_name(name)
+            if coords is not None:
+                refs.setdefault(coords)
+
+        def _code(segment: str) -> str:
+            segment = pat.sub(_sub, segment)
+            for m in view_ref.finditer(segment):
+                _collect(m.group(1) or m.group(2))
+            return segment
 
         # split out every literal/comment span; only even (code)
         # segments rewrite
@@ -934,37 +970,56 @@ class GlueCatalog:
             r"|/\*.*?\*/)"              # block comment
         )
         parts = re.split(mask, text, flags=re.S)
-        return "".join(
-            p if i % 2 else pat.sub(_sub, p) for i, p in enumerate(parts)
-        )
+        out = []
+        for i, p in enumerate(parts):
+            if i % 2 == 0:
+                p = _code(p)
+            elif p[0] in "'\"" and re.search(
+                r"\bIDENTIFIER\s*\(\s*$", parts[i - 1], re.I
+            ):
+                # IDENTIFIER('view') names a table through a literal
+                _collect(p[1:-1].replace(p[0] * 2, p[0]).strip("`"))
+            out.append(p)
+        return "".join(out), list(refs)
 
     def sql(self, text: str) -> DataFrame:
         """EP2: the SQL entry over registered views (demo.rs:118), with
         THREE-PART IDENTIFIER support (``glue.db.table`` rewrites onto
         the view namespace — the exact spelling the reference's users
-        write, demo.rs:68-90) and LAZY resolution: a query referencing
-        an unregistered table triggers one GetTable registration and
-        re-analysis — the Spark-side equivalent of the reference
-        resolving tables at SQL-analysis time instead of eagerly.  Each
-        retry resolves one missing relation; the loop is bounded by the
-        number of distinct relations a query can reference."""
+        write, demo.rs:68-90) and LAZY resolution before analysis, the
+        way the reference looks tables up while analysing
+        (glue.rs:557-562): every catalog table the text references
+        that the registry lacks is registered first, one GetTable
+        each in text order, and then Spark analyses the query exactly
+        once.
+
+        The registry decides: a table missing from THIS catalog's
+        registry is fetched from its Glue client even when the session
+        already holds a same-named temp view (left by another
+        GlueCatalog), and the new registration replaces that view.
+
+        A failed lookup is held back, not raised: a CTE or alias
+        spelled like a view name (``glue__a__b``) is no Glue table, and
+        the query still runs when Spark resolves the name by itself.
+        Only when Spark reports that relation missing is the lookup's
+        own error (``AwsError`` for an unknown table) raised."""
         from pyspark.errors import AnalysisException
 
-        text = self._rewrite_three_part(text)
-        for _ in range(64):
+        text, refs = self._rewrite_three_part(text)
+        failed: dict[str, Exception] = {}
+        for db, table in refs:
             try:
-                return self.spark.sql(text)
-            except AnalysisException as exc:
-                if exc.getErrorClass() != "TABLE_OR_VIEW_NOT_FOUND":
-                    raise
-                missing = (exc.getMessageParameters() or {}).get(
-                    "relationName", ""
-                ).strip("`")
-                coords = self._parse_view_name(missing)
-                if coords is None or self.table(*coords) is not None:
-                    raise  # not ours to resolve, or resolution looped
-                self.register_table(*coords)
-        raise SparkError("sql(): lazy-resolution retry bound exceeded")
+                self._resolve(db, table)
+            except Exception as err:  # any client's error, not only ours
+                failed[self.view_name(db, table)] = err
+        try:
+            return self.spark.sql(text)
+        except AnalysisException as exc:
+            missing = (exc.getMessageParameters() or {}).get("relationName", "")
+            err = failed.get(missing.strip("`"))
+            if exc.getCondition() != "TABLE_OR_VIEW_NOT_FOUND" or err is None:
+                raise
+            raise err from exc
 
     def register_schema(self, name: str) -> None:
         """A18: deliberately unsupported — this catalog is read-only,

@@ -129,11 +129,12 @@ def catalog_lazy_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-analysis time (``SchemaProvider::table``, glue.rs:557-562); the
     eager ``register_all()`` path costs a GetTable+registration per
     catalog table before the first query.  Here a FRESH catalog (zero
-    registrations) runs one SQL query; ``GlueCatalog.sql`` resolves the
-    single unregistered view with exactly ONE GetTable and ZERO
-    GetDatabases/GetTables — asserted IN the key, so the correctness
-    gate itself pins the round-trip budget, and the hash match proves
-    the lazily-registered view serves the same rows."""
+    registrations) runs one SQL query; ``GlueCatalog.sql`` finds the
+    single unregistered view in the text, registers it with exactly ONE
+    GetTable and ZERO GetDatabases/GetTables, and only then hands the
+    query to Spark, which analyses it once — the budget is asserted IN
+    the key, so the correctness gate itself pins it, and the hash match
+    proves the lazily-registered view serves the same rows."""
     from datafusion_catalogprovider_glue_spark.errors import SparkError
 
     apply_engine_conf(spark)
@@ -4415,7 +4416,8 @@ def catalog_sql_three_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     _rewrite_three_part): the query spells tables exactly as the
     reference's users do — ``glue.default.supplier`` (demo.rs:68-90) —
     and ``GlueCatalog.sql`` rewrites the dotted references onto the
-    view namespace before analysis, composing with LAZY resolution: on
+    view namespace and collects the referenced tables in the same pass,
+    so LAZY resolution registers them before the one analysis: on
     a FRESH catalog both tables resolve with exactly one GetTable EACH
     and zero list calls — asserted in-key, same budget discipline as
     catalog_lazy_resolution.  A decoy single-quoted string containing

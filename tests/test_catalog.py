@@ -552,7 +552,10 @@ def test_rewrite_three_part_textual():
 
     rw = GlueCatalog.__new__(GlueCatalog)  # no session needed
     rw.view_prefix = "glue__"
-    f = rw._rewrite_three_part
+
+    def f(text):
+        return rw._rewrite_three_part(text)[0]
+
     assert f("SELECT * FROM glue.db.t") == "SELECT * FROM glue__db__t"
     assert (
         f("SELECT 'glue.db.t' FROM glue.db.t")
@@ -586,3 +589,242 @@ def test_rewrite_three_part_textual():
     assert f("/* multi\nline glue.a.b */ SELECT glue.a.b.c") == (
         "/* multi\nline glue.a.b */ SELECT glue__a__b.c"
     )
+
+
+def test_rewrite_three_part_collects_references():
+    """The rewrite pass also returns the (db, table) of every catalog
+    view the code names — rewritten three-part names, view names
+    written directly, bare or backquoted, and IDENTIFIER('…') arguments
+    — in text order, once each; never from other literals, comments or
+    dot-qualified names."""
+    rw = GlueCatalog.__new__(GlueCatalog)  # no session needed
+    rw.view_prefix = "glue__"
+
+    def refs(text):
+        return rw._rewrite_three_part(text)[1]
+
+    assert refs("SELECT * FROM glue.db.t") == [("db", "t")]
+    assert refs("FROM glue__b__y JOIN glue.a.x ON 1=1 JOIN glue__b__y") == [
+        ("b", "y"), ("a", "x")]
+    assert refs("FROM glue.`my db`.`t-1`") == [("my db", "t-1")]
+    assert refs("FROM `glue__my db__t-1`") == [("my db", "t-1")]
+    assert refs("SELECT glue__a__b.c FROM glue__a__b") == [("a", "b")]
+    assert refs(
+        "SELECT 'glue.a.b', \"glue__c__d\" -- glue.e.f\n"
+        "/* glue__g__h */ FROM t"
+    ) == []
+    assert refs("FROM other.glue__a__b JOIN myglue__c__d") == []
+    # IDENTIFIER('…') names a table through a literal
+    assert refs("FROM IDENTIFIER('glue__a__b') JOIN identifier ( 'c' )") == [
+        ("a", "b")]
+    assert refs("FROM glue__nodb JOIN glue____t") == []
+
+
+def _count_analyses(monkeypatch):
+    """Count SparkSession.sql calls, i.e. Spark analyses."""
+    from pyspark.sql import SparkSession
+
+    calls = []
+    original = SparkSession.sql
+
+    def counted(self, *a, **k):
+        calls.append(a[0] if a else k.get("sqlQuery"))
+        return original(self, *a, **k)
+
+    monkeypatch.setattr(SparkSession, "sql", counted)
+    return calls
+
+
+def _fresh_catalog(spark, prefix, client=None):
+    """A catalog with an empty registry and none of its views left in
+    the (session-wide) temp-view namespace."""
+    client = client or make_testdata_fixture(SF_SMOKE)
+    catalog = GlueCatalog(spark, client, view_prefix=prefix)
+    for t in ("nation", "region"):
+        spark.catalog.dropTempView(catalog.view_name("default", t))
+    return catalog, client
+
+
+def test_sql_analyses_once_for_cold_tables(spark, monkeypatch):
+    """Two cold tables, one named twice and one only inside an IN
+    subquery: one GetTable each, and Spark analyses the query once."""
+    catalog, client = _fresh_catalog(spark, "once__")
+    analyses = _count_analyses(monkeypatch)
+    row = catalog.sql(
+        """
+        SELECT COUNT(*) AS n FROM glue.default.nation a
+        JOIN once__default__nation b ON a.n_nationkey = b.n_nationkey
+        WHERE a.n_regionkey IN (
+            SELECT r_regionkey FROM (SELECT * FROM glue.default.region) r)
+        """
+    ).collect()[0]
+    assert row.n == 25
+    assert client.calls == {"GetTable": 2}
+    assert len(analyses) == 1
+
+
+def test_sql_literals_and_comments_fetch_nothing(spark):
+    """Catalog names inside string literals and comments are text, not
+    references: no GetTable for them."""
+    catalog, client = _fresh_catalog(spark, "lit__")
+    row = catalog.sql(
+        """
+        SELECT 'glue.default.region' AS a, "lit__default__supplier" AS b,
+               COUNT(*) AS n  -- glue.default.customer
+        FROM lit__default__nation /* lit__default__region */
+        """
+    ).collect()[0]
+    assert (row.a, row.b, row.n) == (
+        "glue.default.region", "lit__default__supplier", 25)
+    assert client.calls == {"GetTable": 1}
+
+
+def test_sql_backquoted_and_identifier_view_names_resolve(spark):
+    catalog, client = _fresh_catalog(spark, "bq__")
+    n = catalog.sql("SELECT COUNT(*) AS n FROM `bq__default__region`")
+    assert n.collect()[0].n == 5
+    assert client.calls == {"GetTable": 1}
+    assert catalog.table("default", "region") is not None
+    n = catalog.sql("SELECT COUNT(*) AS n FROM IDENTIFIER('bq__default__nation')")
+    assert n.collect()[0].n == 25
+    assert client.calls == {"GetTable": 2}
+
+
+def test_sql_cte_named_like_a_view_still_runs(spark):
+    """A CTE spelled like a catalog view is no Glue table: its lookup
+    fails, and the query runs because Spark resolves the name."""
+    catalog, client = _fresh_catalog(spark, "cte__")
+    rows = catalog.sql(
+        "WITH cte__tmp__x AS (SELECT 7 AS v) SELECT v FROM cte__tmp__x"
+    ).collect()
+    assert [r.v for r in rows] == [7]
+    assert client.calls == {"GetTable": 1}  # the failed lookup
+    assert catalog.table("tmp", "x") is None
+
+
+def test_sql_missing_glue_table_raises_aws_error(spark):
+    catalog, client = _fresh_catalog(spark, "miss__")
+    with pytest.raises(AwsError, match="EntityNotFound"):
+        catalog.sql("SELECT * FROM miss__default__no_such_table")
+    with pytest.raises(AwsError, match="EntityNotFound"):
+        catalog.sql(
+            "SELECT * FROM glue.default.nation n "
+            "JOIN glue.default.no_such_table t ON 1=1")
+    # the resolvable table of the failed query is registered all the same
+    assert catalog.table("default", "nation") is not None
+
+
+def test_sql_registry_decides_over_foreign_session_view(spark):
+    """A same-named temp view left in the session by another GlueCatalog
+    does not answer for this catalog: a table missing from this
+    catalog's registry is fetched from this catalog's Glue client, and
+    its registration replaces the foreign view."""
+    from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (
+        TESTDATA_GLUE_COLUMNS,
+    )
+
+    first, _ = _fresh_catalog(spark, "shared__")
+    assert first.sql(
+        "SELECT COUNT(*) AS n FROM shared__default__nation"
+    ).collect()[0].n == 25
+    # a second catalog whose Glue maps default.nation onto region data
+    other = FakeGlueClient({"default": {"nation": parquet_table(
+        "default", "nation", os.path.join(SF_SMOKE, "region.parquet"),
+        TESTDATA_GLUE_COLUMNS["region"])}})
+    second = GlueCatalog(spark, other, view_prefix="shared__")
+    n = second.sql("SELECT COUNT(*) AS n FROM shared__default__nation")
+    assert n.collect()[0].n == 5
+    assert other.calls == {"GetTable": 1}
+    assert second.table("default", "nation").location.endswith(
+        "region.parquet")
+
+
+class _SlowGlue(FakeGlueClient):
+    """GetTable takes a while, so concurrent misses overlap."""
+
+    def get_table(self, DatabaseName, Name):
+        import time
+
+        time.sleep(0.3)
+        return super().get_table(DatabaseName=DatabaseName, Name=Name)
+
+
+def test_concurrent_lazy_registration_is_single_flight(spark):
+    """Threads that miss on the same cold table at once make ONE
+    GetTable and one registration between them, through sql() and df()
+    alike."""
+    import sys
+    import threading
+
+    base = make_testdata_fixture(SF_SMOKE)
+    client = _SlowGlue({"default": {
+        t: base.get_table(DatabaseName="default", Name=t)["Table"]
+        for t in ("nation", "region")}})
+    catalog, _ = _fresh_catalog(spark, "flight__", client)
+    n_threads = 8
+    start = threading.Barrier(n_threads)
+    results, errors = [], []
+
+    def run(i):
+        try:
+            start.wait(timeout=60)
+            if i % 2:
+                results.append(catalog.df("default", "nation").count())
+            else:
+                results.append(catalog.sql(
+                    "SELECT COUNT(*) AS n FROM flight__default__nation"
+                ).collect()[0].n)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(i,))
+               for i in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert results == [25] * n_threads
+    assert client.calls == {"GetTable": 1}
+
+
+class _FailingSecondPage(FakeGlueClient):
+    """GetPartitions fails on every page after the first."""
+
+    def get_partitions(self, DatabaseName, TableName, NextToken=None, **kw):
+        if NextToken is not None:
+            self._count("GetPartitions")
+            raise AwsError("ThrottlingException: rate exceeded")
+        return super().get_partitions(
+            DatabaseName=DatabaseName, TableName=TableName, **kw)
+
+
+def test_get_partitions_failure_mid_pagination_raises(spark, tmp_path):
+    """A GetPartitions failure after the first page fails the
+    registration loudly.  Swallowing it would silently register the
+    table through directory discovery (which this layout would allow)
+    with whatever partitions happen to be on disk."""
+    root = tmp_path / "events"
+    parts = []
+    for k in ("a", "b", "c"):
+        loc = str(root / f"k={k}")
+        spark.range(2).selectExpr("id AS x").write.parquet(loc)
+        parts.append({"Values": [k], "StorageDescriptor": {"Location": loc}})
+    client = _FailingSecondPage(
+        {"db": {"events": parquet_table(
+            "db", "events", str(root), [("x", "bigint")],
+            partition_keys=[("k", "string")])}},
+        page_size=1,
+        partitions={("db", "events"): parts},
+    )
+    catalog = GlueCatalog(spark, client, view_prefix="pages__")
+    with pytest.raises(AwsError, match="Throttling"):
+        catalog.register_table("db", "events")
+    assert client.calls == {"GetTable": 1, "GetPartitions": 2}
+    assert catalog.table("db", "events") is None

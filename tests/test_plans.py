@@ -141,14 +141,16 @@ def test_multi_file_scan_parallelism(spark, tmp_path):
     """The testdata's single-row-group files force 1-task scans (why
     _parallelize exists); confirm the property that matters at 100 TB:
     a multi-file table scans with multi-partition parallelism out of
-    the box."""
+    the box.  Small files split into as many partitions as the session
+    has cores, so full parallelism is 8 partitions only on 8+ cores."""
     from datafusion_catalogprovider_glue_spark.tables import load_table
 
     li = load_table(spark, SF_DIR, "lineitem")
     dest = str(tmp_path / "li8")
     li.repartition(8).write.parquet(dest)
     scanned = spark.read.parquet(dest)
-    assert scanned.rdd.getNumPartitions() >= 8
+    cores = spark.sparkContext.defaultParallelism
+    assert scanned.rdd.getNumPartitions() >= min(8, cores)
     assert scanned.count() == li.count()
 
 
