@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_catalogprovider_glue_spark.errors import (
+    AwsError,
     DeltaError,
     GlueError,
     NotImplementedYet,
@@ -155,7 +156,11 @@ class GlueCatalog:
         schema/location registered exactly like a current table.
         Exactly ONE GetTableVersion round trip; the versioned view is
         registered under ``<view>__v<id>`` so current and historical
-        versions coexist in one session."""
+        versions coexist in one session.  Glue keeps ONE partition
+        list per table, for its current version, so a versioned
+        registration makes no GetPartitions call: a partitioned
+        version reads the Hive-style directories under its own
+        location (or its projection parameters)."""
         if version_id is not None:
             response = self.client.get_table_version(
                 DatabaseName=database, TableName=table, VersionId=version_id
@@ -166,7 +171,8 @@ class GlueCatalog:
             # versions must not clobber each other's views
             tbl = {**tbl, "Name": f"{tbl.get('Name', table)}__v{version_id}"}
             return self._register_glue_table(
-                tbl, options, partition_expression=partition_expression
+                tbl, options, partition_expression=partition_expression,
+                glue_partitions=False,
             )
         response = self.client.get_table(DatabaseName=database, Name=table)
         return self._register_glue_table(
@@ -218,6 +224,7 @@ class GlueCatalog:
     def _register_glue_table(
         self, table: dict, options: TableRegistrationOptions,
         partition_expression: Optional[str] = None,
+        glue_partitions: bool = True,
     ) -> TableEntry:
         """A5 dispatch: delta vs listing (glue.rs:174-212)."""
         database = table.get("DatabaseName")
@@ -243,6 +250,7 @@ class GlueCatalog:
         return self._register_listing_table(
             database, name, table, options,
             partition_expression=partition_expression,
+            glue_partitions=glue_partitions,
         )
 
     def _register_iceberg_table(
@@ -423,10 +431,12 @@ class GlueCatalog:
         discovery.  ``expression`` (A13d) goes to the SERVICE verbatim
         (GetPartitions Expression=...), which filters before paging —
         the page budget scales with matching partitions, not the
-        table's partition count.  A failing call raises: returning []
-        (or the pages fetched so far) would silently re-register the
-        table through directory discovery, with other partitions and
-        other types than Glue declares."""
+        table's partition count.  A failing call raises ``AwsError``,
+        whatever the client raised (``register_tables`` collects it
+        as that table's result): returning [] (or the pages fetched
+        so far) would silently re-register the table through
+        directory discovery, with other partitions and other types
+        than Glue declares."""
         getter = getattr(self.client, "get_partitions", None)
         if getter is None:
             return []
@@ -434,9 +444,12 @@ class GlueCatalog:
         parts: list[dict] = []
         token: dict = {}
         while True:
-            response = getter(
-                DatabaseName=database, TableName=name, **extra, **token
-            )
+            try:
+                response = getter(
+                    DatabaseName=database, TableName=name, **extra, **token
+                )
+            except Exception as err:
+                raise AwsError(f"GetPartitions {database}.{name}: {err}") from err
             parts.extend(response.get("Partitions") or [])
             next_token = response.get("NextToken")
             if not next_token:
@@ -677,6 +690,7 @@ class GlueCatalog:
         table: dict,
         options: TableRegistrationOptions,
         partition_expression: Optional[str] = None,
+        glue_partitions: bool = True,
     ) -> TableEntry:
         """A7 (glue.rs:243-274): format dispatch + schema mode + load."""
         sd = self._storage_descriptor(database, name, table)
@@ -733,7 +747,7 @@ class GlueCatalog:
             # GetPartitions is the source of truth when it returns any
             explicit = self._get_partitions(
                 database, name, expression=partition_expression
-            )
+            ) if glue_partitions else []
             if explicit:
                 return self._register_explicit_partitions(
                     database, name, sd, spec, options, partition_keys,
@@ -927,21 +941,32 @@ class GlueCatalog:
         Returns the rewritten text and, in text order without
         repeats, the ``(db, table)`` of every ``{prefix}db__table``
         identifier in its code segments: rewritten three-part names
-        and view names written directly, bare or backquoted, or as the
-        string argument of an ``IDENTIFIER('…')`` clause.  A name
-        qualified by a dot (``other.glue__a__b``) is not ours.  This
+        and view names written directly, bare or backquoted, as the
+        string argument of an ``IDENTIFIER('…')`` clause, or inside
+        the statement literal of ``EXECUTE IMMEDIATE '…'`` (whose
+        text is not rewritten).  A name qualified by a dot
+        (``other.glue__a__b``) is not ours, nor is the target of
+        ``DROP``/``CREATE``/``ALTER VIEW [IF [NOT] EXISTS]``, which
+        names a view to remove or define, not a table to read.  This
         list is what sql() registers before its one analysis.  Known
         textual limits: a struct access through a table alias
         literally named ``glue`` (``glue.col.field``) is
-        indistinguishable from a three-part reference, and a column
-        or CTE spelled like a view name is collected too (sql()
-        tolerates the failed lookup) — telling them apart needs a
-        full parse."""
+        indistinguishable from a three-part reference; a column or
+        CTE spelled like a view name is collected too (sql()
+        tolerates the failed lookup), and so is the target of a
+        TABLE-keyword statement (``DROP TABLE glue__a__b``); a
+        statement passed to ``EXECUTE IMMEDIATE`` through a variable
+        is not seen — telling these apart needs a full parse."""
         pat = re.compile(
             rf"\b{CATALOG_NAME}\.({self._IDENT_RE})\.({self._IDENT_RE})"
         )
         prefix = re.escape(self.view_prefix)
         view_ref = re.compile(rf"(?<![\w.`])(?:`({prefix}[^`]+)`|({prefix}\w+))")
+        # the code before a view name that makes it a DDL target, and
+        # before a literal that makes the literal a name or a statement
+        ddl_target = re.compile(r"\bVIEW\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?$", re.I)
+        identifier_arg = re.compile(r"\bIDENTIFIER\s*\(\s*$", re.I)
+        immediate_arg = re.compile(r"\bEXECUTE\s+IMMEDIATE\s*$", re.I)
         refs: dict[tuple[str, str], None] = {}
 
         def _sub(m: "re.Match[str]") -> str:
@@ -955,12 +980,6 @@ class GlueCatalog:
             if coords is not None:
                 refs.setdefault(coords)
 
-        def _code(segment: str) -> str:
-            segment = pat.sub(_sub, segment)
-            for m in view_ref.finditer(segment):
-                _collect(m.group(1) or m.group(2))
-            return segment
-
         # split out every literal/comment span; only even (code)
         # segments rewrite
         mask = (
@@ -969,18 +988,26 @@ class GlueCatalog:
             r"|--[^\n]*"                # line comment
             r"|/\*.*?\*/)"              # block comment
         )
-        parts = re.split(mask, text, flags=re.S)
-        out = []
-        for i, p in enumerate(parts):
-            if i % 2 == 0:
-                p = _code(p)
-            elif p[0] in "'\"" and re.search(
-                r"\bIDENTIFIER\s*\(\s*$", parts[i - 1], re.I
-            ):
-                # IDENTIFIER('view') names a table through a literal
-                _collect(p[1:-1].replace(p[0] * 2, p[0]).strip("`"))
-            out.append(p)
-        return "".join(out), list(refs)
+
+        def _scan(sql: str, rewrite: bool) -> str:
+            parts = re.split(mask, sql, flags=re.S)
+            for i, p in enumerate(parts):
+                if i % 2 == 0:
+                    if rewrite:
+                        p = pat.sub(_sub, p)
+                    for m in view_ref.finditer(p):
+                        if not ddl_target.search(p, 0, m.start()):
+                            _collect(m.group(1) or m.group(2))
+                    parts[i] = p
+                elif p[0] in "'\"":
+                    body = p[1:-1].replace(p[0] * 2, p[0])
+                    if identifier_arg.search(parts[i - 1]):
+                        _collect(body.strip("`"))
+                    elif immediate_arg.search(parts[i - 1]):
+                        _scan(body, rewrite=False)
+            return "".join(parts)
+
+        return _scan(text, rewrite=True), list(refs)
 
     def sql(self, text: str) -> DataFrame:
         """EP2: the SQL entry over registered views (demo.rs:118), with
@@ -997,6 +1024,9 @@ class GlueCatalog:
         registry is fetched from its Glue client even when the session
         already holds a same-named temp view (left by another
         GlueCatalog), and the new registration replaces that view.
+        Dropping a registered table's view from the session does not
+        remove its registry entry; ``register_table`` registers it
+        again.
 
         A failed lookup is held back, not raised: a CTE or alias
         spelled like a view name (``glue__a__b``) is no Glue table, and

@@ -594,9 +594,9 @@ def test_rewrite_three_part_textual():
 def test_rewrite_three_part_collects_references():
     """The rewrite pass also returns the (db, table) of every catalog
     view the code names — rewritten three-part names, view names
-    written directly, bare or backquoted, and IDENTIFIER('…') arguments
-    — in text order, once each; never from other literals, comments or
-    dot-qualified names."""
+    written directly, bare or backquoted, IDENTIFIER('…') arguments and
+    EXECUTE IMMEDIATE statements — in text order, once each; never from
+    other literals, comments, dot-qualified names or view DDL targets."""
     rw = GlueCatalog.__new__(GlueCatalog)  # no session needed
     rw.view_prefix = "glue__"
 
@@ -618,6 +618,24 @@ def test_rewrite_three_part_collects_references():
     assert refs("FROM IDENTIFIER('glue__a__b') JOIN identifier ( 'c' )") == [
         ("a", "b")]
     assert refs("FROM glue__nodb JOIN glue____t") == []
+    # a DROP/CREATE/ALTER VIEW target is a view to remove or define
+    assert refs("DROP VIEW IF EXISTS glue__a__b") == []
+    assert refs("drop view `glue__a__b`") == []
+    assert refs(
+        "CREATE OR REPLACE TEMP VIEW glue__a__b AS SELECT * FROM glue__c__d"
+    ) == [("c", "d")]
+    assert refs("CREATE TEMPORARY VIEW IF NOT EXISTS glue__a__b AS "
+                "SELECT 1") == []
+    assert refs("SELECT * FROM review glue__a__b") == [("a", "b")]
+    # EXECUTE IMMEDIATE's statement literal is SQL; it is not rewritten,
+    # so its three-part names are not references
+    assert refs(
+        "EXECUTE IMMEDIATE 'SELECT * FROM glue__a__b WHERE s = ''glue__c__d'''"
+    ) == [("a", "b")]
+    assert rw._rewrite_three_part(
+        "EXECUTE IMMEDIATE 'SELECT * FROM glue.a.b'"
+    ) == ("EXECUTE IMMEDIATE 'SELECT * FROM glue.a.b'", [])
+    assert refs("SELECT 'EXECUTE IMMEDIATE', 'glue__a__b'") == []
 
 
 def _count_analyses(monkeypatch):
@@ -679,7 +697,7 @@ def test_sql_literals_and_comments_fetch_nothing(spark):
     assert client.calls == {"GetTable": 1}
 
 
-def test_sql_backquoted_and_identifier_view_names_resolve(spark):
+def test_sql_backquoted_identifier_and_immediate_view_names_resolve(spark):
     catalog, client = _fresh_catalog(spark, "bq__")
     n = catalog.sql("SELECT COUNT(*) AS n FROM `bq__default__region`")
     assert n.collect()[0].n == 5
@@ -688,6 +706,11 @@ def test_sql_backquoted_and_identifier_view_names_resolve(spark):
     n = catalog.sql("SELECT COUNT(*) AS n FROM IDENTIFIER('bq__default__nation')")
     assert n.collect()[0].n == 25
     assert client.calls == {"GetTable": 2}
+    n = catalog.sql(
+        "EXECUTE IMMEDIATE 'SELECT COUNT(*) AS n FROM bq__default__supplier'")
+    assert n.collect()[0].n == spark.read.parquet(
+        os.path.join(SF_SMOKE, "supplier.parquet")).count()
+    assert client.calls == {"GetTable": 3}
 
 
 def test_sql_cte_named_like_a_view_still_runs(spark):
@@ -828,3 +851,85 @@ def test_get_partitions_failure_mid_pagination_raises(spark, tmp_path):
         catalog.register_table("db", "events")
     assert client.calls == {"GetTable": 1, "GetPartitions": 2}
     assert catalog.table("db", "events") is None
+
+
+def test_sql_drop_view_fetches_nothing(spark):
+    """DROP VIEW IF EXISTS on a cold view name makes no GetTable and
+    leaves no registry entry behind, so a later read still resolves."""
+    catalog, client = _fresh_catalog(spark, "ddl__")
+    catalog.sql("DROP VIEW IF EXISTS ddl__default__region")
+    assert client.calls == {}
+    assert catalog.table("default", "region") is None
+    n = catalog.sql("SELECT COUNT(*) AS n FROM ddl__default__region")
+    assert n.collect()[0].n == 5
+    assert client.calls == {"GetTable": 1}
+
+
+def test_sql_execute_immediate_resolves_cold_table(spark):
+    catalog, client = _fresh_catalog(spark, "imm__")
+    n = catalog.sql(
+        "EXECUTE IMMEDIATE 'SELECT COUNT(*) AS n FROM imm__default__region'")
+    assert n.collect()[0].n == 5
+    assert client.calls == {"GetTable": 1}
+
+
+def test_versioned_registration_of_partitioned_table(spark, tmp_path):
+    """A partitioned table registered at a version reads the Hive-style
+    partitions under that version's location.  Glue keeps partitions
+    for the current table only, so no GetPartitions is made (the
+    versioned name would not be a Glue table either)."""
+    old_root, new_root = str(tmp_path / "v1"), str(tmp_path / "v2")
+    spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, "b")], "id bigint, k string"
+    ).write.partitionBy("k").parquet(old_root)
+    spark.createDataFrame([(9, "z")], "id bigint, k string").write.partitionBy(
+        "k").parquet(new_root)
+    keys = [("k", "string")]
+    client = FakeGlueClient(
+        {"db": {"events": parquet_table(
+            "db", "events", old_root, [("id", "bigint")],
+            partition_keys=keys)}},
+        partitions={("db", "events"): [{
+            "Values": ["z"],
+            "StorageDescriptor": {"Location": os.path.join(new_root, "k=z")},
+        }]},
+    )
+    client.update_table(DatabaseName="db", TableInput=parquet_table(
+        "db", "events", new_root, [("id", "bigint")], partition_keys=keys))
+    client.calls.clear()
+    catalog = GlueCatalog(spark, client, view_prefix="ver__")
+    entry = catalog.register_table("db", "events", version_id="1")
+    rows = spark.table(entry.view).orderBy("id").collect()
+    assert [(r.id, r.k) for r in rows] == [(1, "a"), (2, "a"), (3, "b")]
+    assert client.calls == {"GetTableVersion": 1}
+
+
+class _BrokenPartitions(FakeGlueClient):
+    """GetPartitions fails with the client's own error type, as a
+    boto3 client raises botocore's ClientError (not a GlueError)."""
+
+    def get_partitions(self, DatabaseName, TableName, **kw):
+        if TableName == "flaky":
+            raise RuntimeError("ThrottlingException: rate exceeded")
+        return super().get_partitions(
+            DatabaseName=DatabaseName, TableName=TableName, **kw)
+
+
+def test_register_tables_collects_get_partitions_failure(spark, tmp_path):
+    """A GetPartitions failure of any type becomes that table's result
+    in register_tables; the other tables still register."""
+    root = str(tmp_path / "p")
+    spark.createDataFrame([(1, "a")], "id bigint, k string").write.partitionBy(
+        "k").parquet(root)
+    tables = {
+        name: parquet_table("db", name, root, [("id", "bigint")],
+                            partition_keys=[("k", "string")])
+        for name in ("flaky", "steady")
+    }
+    catalog = GlueCatalog(spark, _BrokenPartitions({"db": tables}),
+                          view_prefix="brk__")
+    results = dict(zip(sorted(tables), catalog.register_tables("db")))
+    assert isinstance(results["flaky"], AwsError)
+    assert "GetPartitions db.flaky" in str(results["flaky"])
+    assert isinstance(results["flaky"].__cause__, RuntimeError)
+    assert catalog.table_names("db") == ["steady"]
