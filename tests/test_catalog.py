@@ -626,7 +626,7 @@ def test_rewrite_three_part_collects_references():
     ) == [("c", "d")]
     assert refs("CREATE TEMPORARY VIEW IF NOT EXISTS glue__a__b AS "
                 "SELECT 1") == []
-    assert refs("SELECT * FROM review glue__a__b") == [("a", "b")]
+    assert refs("SELECT * FROM overview glue__a__b") == [("a", "b")]
     # EXECUTE IMMEDIATE's statement literal is SQL; it is not rewritten,
     # so its three-part names are not references
     assert refs(
