@@ -53,8 +53,12 @@ def _nano_timestamp_columns(location: str) -> set[str]:
     footer at registration (driver-side metadata read, same cost class
     as the reference's infer path) and transparently rebuild them as
     µs-truncated timestamps — the truncation §1.3 already accepts.
-    Best-effort: any inspection failure returns the empty set and the
-    plain read path proceeds (and raises its own, clearer error)."""
+    A directory is probed through its first parquet file in sorted
+    walk order, skipping ``_``/``.`` entries, so a partitioned table
+    root (no files of its own) is probed through its first partition
+    directory.  Best-effort: any inspection failure returns the empty
+    set and the plain read path proceeds (and raises its own, clearer
+    error)."""
     import os
 
     try:
@@ -63,12 +67,18 @@ def _nano_timestamp_columns(location: str) -> set[str]:
 
         path = location
         if os.path.isdir(location):
-            parts = sorted(
-                f for f in os.listdir(location) if f.endswith(".parquet")
-            )
-            if not parts:
+            path = None
+            for root, dirs, files in os.walk(location):
+                dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+                parts = sorted(
+                    f for f in files
+                    if f.endswith(".parquet") and not f.startswith(("_", "."))
+                )
+                if parts:
+                    path = os.path.join(root, parts[0])
+                    break
+            if path is None:
                 return set()
-            path = os.path.join(location, parts[0])
         return {
             f.name
             for f in pq.read_schema(path)
@@ -76,6 +86,96 @@ def _nano_timestamp_columns(location: str) -> set[str]:
         }
     except Exception:
         return set()
+
+
+def _rebuild_nano_columns(df: DataFrame, nano_cols: set[str]) -> DataFrame:
+    """Rebuild nano-timestamp columns (read as raw int64 under
+    ``nanosAsLong``) as µs-truncated TIMESTAMP_NTZ: ns→µs is the
+    deviation §1.3 already accepts (glue.rs:466), NTZ matches the
+    tz-naive reference mapping, and the epoch arithmetic is
+    session-timezone-independent."""
+    for c in sorted(nano_cols):
+        if c in df.columns:
+            df = df.withColumn(
+                c,
+                F.expr(
+                    f"timestampadd(MICROSECOND, `{c}` div 1000, "
+                    f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                ),
+            )
+    return df
+
+
+HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+# characters Hive (and Spark's ExternalCatalogUtils.escapePathName)
+# write as %XX in a partition directory name
+_HIVE_ESCAPED = frozenset("\"#%'*/:=?\\\x7f{[]^") | frozenset(map(chr, range(1, 32)))
+_INTEGRAL_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def _hive_escape(value: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in value)
+
+
+def _file_index_reads_exactly(value: str, dtype: T.DataType) -> bool:
+    """True when Spark's file index reads the partition value ``value``
+    as exactly what casting it to ``dtype`` at query time yields: any
+    string, an in-range integer, or a valid ISO date.  Everything else
+    differs somewhere.  The file index reads ``__HIVE_DEFAULT_PARTITION__``
+    as NULL for every type (the cast reads it as the string itself, or
+    as NULL or an error for other types, by ANSI mode); it rejects an
+    empty value; and it casts once at registration, so a malformed
+    value fails the registration, and a time-zone-dependent cast
+    (timestamp keys) freezes the registering session's zone."""
+    if value in ("", HIVE_DEFAULT_PARTITION):
+        return False
+    if isinstance(dtype, T.StringType):
+        return True
+    bits = next((b for t, b in _INTEGRAL_BITS.items() if isinstance(dtype, t)), 0)
+    if bits:
+        return (
+            re.fullmatch(r"-?\d+", value) is not None
+            and -(2 ** (bits - 1)) <= int(value) < 2 ** (bits - 1)
+        )
+    if isinstance(dtype, T.DateType):
+        from datetime import date
+
+        try:
+            date.fromisoformat(value)
+        except ValueError:
+            return False
+        return re.fullmatch(r"\d{4}-\d{2}-\d{2}", value) is not None
+    return False
+
+
+def _hive_partition_paths(
+    location: str,
+    keys: list[tuple[str, T.DataType]],
+    partitions: list[tuple[list[str], str]],
+) -> Optional[list[str]]:
+    """The locations of ``partitions`` (``(values, location)`` pairs)
+    when the list is in the Hive layout, else None.  Hive layout: every
+    location is ``<location>/k1=v1[/k2=v2…]`` with the ``keys`` in
+    order and each path value the Hive-escaped Glue value (so it
+    unescapes to exactly that value), and every value is one the file
+    index reads as the union path does (``_file_index_reads_exactly``).
+    Comparing against the escaped form also rejects raw glob
+    characters, which a load would expand."""
+    root = location.rstrip("/")
+    types = [t for _, t in keys]
+    paths = []
+    for values, loc in partitions:
+        if not all(map(_file_index_reads_exactly, values, types)):
+            return None
+        loc = loc.rstrip("/")
+        segments = [
+            f"{_hive_escape(k)}={_hive_escape(v)}"
+            for (k, _), v in zip(keys, values)
+        ]
+        if loc != "/".join([root, *segments]):
+            return None
+        paths.append(loc)
+    return paths
 
 
 class TableRegistrationOptions(enum.Enum):
@@ -467,33 +567,33 @@ class GlueCatalog:
         partitions: list[dict],
         location: str,
     ) -> TableEntry:
-        """Register a table from its EXPLICIT Glue partition list: one
-        scan per partition location with the partition Values attached
-        as literal columns cast to the declared key types (data files
-        do not contain partition columns, per the Hive convention Glue
-        inherits).  Locations may be scattered anywhere — the layout
-        Hive's ALTER TABLE ADD PARTITION ... LOCATION produces — which
-        directory discovery cannot see.
+        """Register a table from its partition list (GetPartitions or
+        projection).  Data files do not contain the partition columns
+        (the Hive convention Glue inherits); the values come from the
+        list.
 
-        Scale shape: the partition list is driver-side metadata (KBs
-        per 1000 partitions, exactly what the reference would hold),
-        each partition contributes one multi-file scan branch, and
-        Catalyst prunes branches whose literal partition values fail a
-        query predicate (constant folding turns the filter into
-        true/false per branch).  At very high partition counts the
-        production move is server-side pruning — pushing an expression
-        into GetPartitions — which this method's pagination loop is
-        the hook for."""
-        base_reader = self.spark.read.format(spec.format).options(**spec.options)
-        if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
-            columns = sd.get("Columns") or []
-            schema = map_glue_columns_to_spark_schema(columns)
-            if schema.fields:
-                base_reader = base_reader.schema(schema)
-        elif spec.format in ("csv", "json"):
-            base_reader = base_reader.option("inferSchema", "true")
+        Hive layout (``_hive_partition_paths``): ONE multi-path load of
+        the partition directories with ``basePath`` at the table
+        location and the partition keys, typed as Glue declares them,
+        in the read schema — the reference's single ListingTable with
+        ``table_partition_cols`` (glue.rs:433-447).  Spark's file index
+        then carries the values, a filter on a key becomes
+        ``PartitionFilters`` that prune files, and the plan has one
+        scan, whatever the partition count.  In infer mode the data
+        schema is first inferred from the partition directories loaded
+        without ``basePath`` (so no column is discovered from the
+        paths), and the declared keys are appended.
 
-        parts = []
+        Any other list (locations scattered anywhere, the layout
+        Hive's ALTER TABLE ADD PARTITION ... LOCATION produces, or
+        values the file index would read differently): one load per
+        partition with its values attached as literal columns cast to
+        the declared key types, then a union of them all; Catalyst
+        drops the branches whose literals fail a query predicate.
+
+        Both read nanosecond parquet timestamps the flat-table way,
+        probing the first partition's files."""
+        pairs = []
         for p in partitions:
             values = p.get("Values") or []
             if len(values) != len(partition_keys):
@@ -507,15 +607,39 @@ class GlueCatalog:
                     f"partition {values} of {database}.{name} has no "
                     "StorageDescriptor.Location"
                 )
-            df = base_reader.load(p_loc)
-            for (pk_name, pk_type), raw in zip(partition_keys, values):
-                df = df.withColumn(
-                    pk_name, F.lit(raw).cast(parse_glue_data_type(pk_type))
-                )
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
+            pairs.append((list(values), p_loc))
+
+        nano_cols = self._nano_columns(spec, pairs[0][1])
+        reader = self._reader(spec, options)
+        schema = self._read_schema(sd, options, nano_cols)
+        keys = [(k, parse_glue_data_type(t)) for k, t in partition_keys]
+        hive_paths = _hive_partition_paths(location, keys, pairs)
+        if hive_paths is not None:
+            if schema is None:
+                schema = reader.load(hive_paths).schema
+            key_names = {k for k, _ in keys}
+            schema = T.StructType(
+                [f for f in schema.fields if f.name not in key_names]
+                + [T.StructField(k, t, True) for k, t in keys]
+            )
+            out = (
+                reader.schema(schema)
+                .option("basePath", location.rstrip("/"))
+                .load(hive_paths)
+            )
+        else:
+            if schema is not None:
+                reader = reader.schema(schema)
+            parts = [
+                reader.load(p_loc).withColumns({
+                    k: F.lit(raw).cast(t) for (k, t), raw in zip(keys, values)
+                })
+                for values, p_loc in pairs
+            ]
+            out = parts[0]
+            for p in parts[1:]:
+                out = out.unionByName(p)
+        out = _rebuild_nano_columns(out, nano_cols)
         entry = self._finish(
             database,
             name,
@@ -528,13 +652,7 @@ class GlueCatalog:
             False,
         )
         entry.partitions = [
-            {
-                "values": list(p.get("Values") or []),
-                "location": (p.get("StorageDescriptor") or {}).get(
-                    "Location"
-                ),
-            }
-            for p in partitions
+            {"values": values, "location": p_loc} for values, p_loc in pairs
         ]
         return entry
 
@@ -710,7 +828,6 @@ class GlueCatalog:
                 database, name, sd, options, location
             )
 
-        reader = self.spark.read.format(spec.format).options(**spec.options)
         partition_keys = [
             (k["Name"], k["Type"]) for k in (table.get("PartitionKeys") or [])
         ]
@@ -736,22 +853,19 @@ class GlueCatalog:
                     if "://" in p["StorageDescriptor"]["Location"]
                     or _os.path.exists(p["StorageDescriptor"]["Location"])
                 ]
-            if projected:
-                return self._register_explicit_partitions(
-                    database, name, sd, spec, options, partition_keys,
-                    projected, location,
-                )
             # explicit Glue partitions next: real partitioned Glue
             # tables frequently carry per-partition StorageDescriptors
             # whose locations are NOT Hive-style dirs under one root —
             # GetPartitions is the source of truth when it returns any
-            explicit = self._get_partitions(
-                database, name, expression=partition_expression
-            ) if glue_partitions else []
-            if explicit:
+            partitions = projected or (
+                self._get_partitions(
+                    database, name, expression=partition_expression
+                ) if glue_partitions else []
+            )
+            if partitions:
                 return self._register_explicit_partitions(
                     database, name, sd, spec, options, partition_keys,
-                    explicit, location,
+                    partitions, location,
                 )
             if partition_expression:
                 raise SparkError(
@@ -760,36 +874,17 @@ class GlueCatalog:
                     "table has no explicit Glue partitions) — refusing "
                     "a silently empty registration"
                 )
+
+        nano_cols = self._nano_columns(spec, location)
+        reader = self._reader(spec, options)
+        if partition_keys:
             # Hive-style partition dirs: Spark discovers them; basePath
             # keeps the partition columns when loading the root
             # (reference: table_partition_cols, glue.rs:433-447)
             reader = reader.option("basePath", location)
-
-        nano_cols = (
-            _nano_timestamp_columns(location) if spec.format == "parquet" else set()
-        )
-        if nano_cols:
-            # read nanos as raw int64 (legacy knob), rebuild below
-            self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-        if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
-            columns = sd.get("Columns") or []
-            schema = map_glue_columns_to_spark_schema(columns)
-            if nano_cols and schema.fields:
-                schema = T.StructType(
-                    [
-                        T.StructField(f.name, T.LongType(), True)
-                        if f.name in nano_cols
-                        else f
-                        for f in schema.fields
-                    ]
-                )
-            if schema.fields:
-                reader = reader.schema(schema)
-        elif spec.format in ("csv", "json"):
-            # InferSchemaFromData (glue.rs:266): sample the files.
-            # Parquet/avro/delta are self-describing.
-            reader = reader.option("inferSchema", "true")
+        schema = self._read_schema(sd, options, nano_cols)
+        if schema is not None:
+            reader = reader.schema(schema)
 
         try:
             df = reader.load(location)
@@ -815,19 +910,7 @@ class GlueCatalog:
                     f"failed to read {spec.format} at {location}: {exc}"
                 ) from exc
 
-        # rebuild nano-timestamp columns as µs-truncated TIMESTAMP_NTZ
-        # (ns→µs is the deviation §1.3 already accepts, glue.rs:466;
-        # NTZ matches the tz-naive reference mapping, and the epoch
-        # arithmetic is session-timezone-independent)
-        for c in sorted(nano_cols):
-            if c in df.columns:
-                df = df.withColumn(
-                    c,
-                    F.expr(
-                        f"timestampadd(MICROSECOND, `{c}` div 1000, "
-                        f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                    ),
-                )
+        df = _rebuild_nano_columns(df, nano_cols)
 
         # partition columns come back from directory discovery; cast
         # them to the Glue-declared types (glue.rs:433-442)
@@ -845,6 +928,49 @@ class GlueCatalog:
             dict(spec.options),
             partition_keys,
             False,
+        )
+
+    def _reader(self, spec, options: TableRegistrationOptions):
+        reader = self.spark.read.format(spec.format).options(**spec.options)
+        if (
+            options is TableRegistrationOptions.INFER_SCHEMA_FROM_DATA
+            and spec.format in ("csv", "json")
+        ):
+            # InferSchemaFromData (glue.rs:266): sample the files.
+            # Parquet/avro/delta are self-describing.
+            reader = reader.option("inferSchema", "true")
+        return reader
+
+    def _nano_columns(self, spec, probe: str) -> set[str]:
+        """The nano-timestamp columns of a parquet table, probed at
+        ``probe``; when there are any, nanos are read as raw int64 (the
+        session-wide legacy knob) for ``_rebuild_nano_columns``."""
+        nano_cols = (
+            _nano_timestamp_columns(probe) if spec.format == "parquet" else set()
+        )
+        if nano_cols:
+            self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return nano_cols
+
+    @staticmethod
+    def _read_schema(
+        sd: dict, options: TableRegistrationOptions, nano_cols: set[str]
+    ) -> Optional[T.StructType]:
+        """The Glue columns as the read schema in derive mode, with
+        nano-timestamp columns read as bigint; None when the data
+        decides (infer mode, or a table without columns)."""
+        if options is not TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
+            return None
+        schema = map_glue_columns_to_spark_schema(sd.get("Columns") or [])
+        if not schema.fields:
+            return None
+        return T.StructType(
+            [
+                T.StructField(f.name, T.LongType(), True)
+                if f.name in nano_cols
+                else f
+                for f in schema.fields
+            ]
         )
 
     def _finish(

@@ -901,10 +901,12 @@ def scan_glue_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories and no partition is dropped or double-counted.
 
     Scale: the partition list is driver-side metadata (same as the
-    reference's); each partition is one scan branch whose literal
-    partition value Catalyst constant-folds against query predicates
-    — partition pruning for free, with server-side GetPartitions
-    expression pushdown as the documented growth path."""
+    reference's).  These scattered locations take the catalog's union
+    path: each partition is one scan branch whose literal partition
+    value Catalyst constant-folds against query predicates, with
+    server-side GetPartitions expression pushdown as the growth path.
+    A list in the Hive layout registers as one file-index scan
+    instead."""
     from pyspark.sql import functions as F
 
     from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (
@@ -3839,8 +3841,9 @@ def scan_glue_partition_projection(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale: projection IS the scale feature on the real service — a
     10-year daily table is 3 650 driver-side template substitutions
-    and zero catalog round-trips; each partition stays one scan branch
-    Catalyst prunes by literal."""
+    and zero catalog round-trips.  This non-Hive template takes the
+    union path (one scan branch per partition, pruned by literal); the
+    default ``<root>/k=v`` locations would be one file-index scan."""
     from pyspark.sql import functions as F
 
     from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (

@@ -933,3 +933,262 @@ def test_register_tables_collects_get_partitions_failure(spark, tmp_path):
     assert "GetPartitions db.flaky" in str(results["flaky"])
     assert isinstance(results["flaky"].__cause__, RuntimeError)
     assert catalog.table_names("db") == ["steady"]
+
+
+# ------------------------------------------- partition lists: one scan
+def _write_partition(loc, i):
+    """One parquet file at ``loc`` with two rows whose ``id`` is ``i``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(loc, exist_ok=True)
+    pq.write_table(
+        pa.table({"id": pa.array([i, i], pa.int64())}),
+        os.path.join(loc, "part-0.parquet"),
+    )
+
+
+def _register_partition_list(spark, root, keys, parts, prefix, **kw):
+    """Register ``db.t`` at ``root`` with the explicit Glue partitions
+    ``parts`` = [(values, location)], partition i holding ids i."""
+    for i, (_, loc) in enumerate(parts):
+        _write_partition(loc, i)
+    client = FakeGlueClient(
+        {"db": {"t": parquet_table(
+            "db", "t", root, [("id", "bigint")], partition_keys=keys)}},
+        partitions={("db", "t"): [
+            {"Values": list(v), "StorageDescriptor": {"Location": loc}}
+            for v, loc in parts
+        ]},
+    )
+    catalog = GlueCatalog(spark, client, view_prefix=prefix)
+    entry = catalog.register_table("db", "t", **kw)
+    return spark.table(entry.view), entry
+
+
+def _is_union(df):
+    return "Union" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+_HIVE_CASES = {
+    # name: (partition keys, [(Glue values, path below the root)], rows)
+    "escaped": (
+        [("s", "string")],
+        [(["a/b"], "s=a%2Fb"), (["x=y"], "s=x%3Dy")],
+        [(0, "a/b"), (1, "x=y")],
+    ),
+    "zero_padded_string": (
+        [("s", "string")],
+        [(["01"], "s=01"), (["10"], "s=10")],
+        [(0, "01"), (1, "10")],
+    ),
+    "int_month_01": (
+        [("month", "int")],
+        [(["01"], "month=01"), (["12"], "month=12")],
+        [(0, 1), (1, 12)],
+    ),
+    "two_keys": (
+        [("year", "int"), ("month", "int")],
+        [(["2024", "1"], "year=2024/month=1"),
+         (["2024", "2"], "year=2024/month=2"),
+         (["2025", "1"], "year=2025/month=1")],
+        [(0, 2024, 1), (1, 2024, 2), (2, 2025, 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_HIVE_CASES))
+def test_hive_layout_single_scan_reads_what_the_union_reads(
+    spark, tmp_path, case
+):
+    """A partition list in the Hive layout registers as one file-index
+    scan (no Union); the same values at scattered locations take the
+    union path; both read exactly the same rows and schema."""
+    keys, parts, want = _HIVE_CASES[case]
+    root = str(tmp_path / "hive")
+    hive, _ = _register_partition_list(
+        spark, root, keys,
+        [(v, os.path.join(root, path)) for v, path in parts], "hv__")
+    scattered, _ = _register_partition_list(
+        spark, str(tmp_path / "root"), keys,
+        [(v, str(tmp_path / f"scatter{i}")) for i, (v, _) in enumerate(parts)],
+        "sc__")
+    assert not _is_union(hive)
+    assert _is_union(scattered)
+    # same names and types; a file-index partition column is nullable,
+    # a literal column is not
+    assert [(f.name, f.dataType) for f in hive.schema.fields] == [
+        (f.name, f.dataType) for f in scattered.schema.fields]
+    assert _rows(hive) == _rows(scattered) == sorted(
+        r for r in want for _ in range(2))
+
+
+_FALLBACK_CASES = {
+    # name: (keys, [(Glue values, location below tmp_path)], rows, or
+    # None where the union path's cast fails in ANSI mode)
+    "default_partition_string": (
+        [("s", "string")],
+        [(["__HIVE_DEFAULT_PARTITION__"], "t/s=__HIVE_DEFAULT_PARTITION__"),
+         (["a"], "t/s=a")],
+        [(0, "__HIVE_DEFAULT_PARTITION__"), (1, "a")],
+    ),
+    "default_partition_int": (
+        [("n", "int")],
+        [(["__HIVE_DEFAULT_PARTITION__"], "t/n=__HIVE_DEFAULT_PARTITION__"),
+         (["1"], "t/n=1")],
+        None,
+    ),
+    "value_mismatch": (
+        [("s", "string")],
+        [(["a"], "t/s=a"), (["b"], "t/s=c")],
+        [(0, "a"), (1, "b")],
+    ),
+    "int_value_unpadded": (
+        [("month", "int")],
+        [(["1"], "t/month=01"), (["2"], "t/month=02")],
+        [(0, 1), (1, 2)],
+    ),
+    "outside_root": (
+        [("s", "string")],
+        [(["a"], "t/s=a"), (["b"], "elsewhere/s=b")],
+        [(0, "a"), (1, "b")],
+    ),
+    "missing_key_segment": (
+        [("year", "int"), ("month", "int")],
+        [(["2024", "1"], "t/year=2024/month=1"), (["2025", "2"], "t/year=2025")],
+        [(0, 2024, 1), (1, 2025, 2)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FALLBACK_CASES))
+def test_partition_lists_outside_the_hive_layout_take_the_union(
+    spark, tmp_path, case
+):
+    """Lists the file index would read differently from their Glue
+    values stay on the union path, which reads the Glue values."""
+    keys, parts, want = _FALLBACK_CASES[case]
+    df, entry = _register_partition_list(
+        spark, str(tmp_path / "t"), keys,
+        [(v, str(tmp_path / path)) for v, path in parts], "fb__")
+    assert _is_union(df)
+    assert [p["values"] for p in entry.partitions] == [v for v, _ in parts]
+    if want is not None:
+        assert _rows(df) == sorted(r for r in want for _ in range(2))
+
+
+def test_partition_registration_changes_no_session_conf(spark, tmp_path):
+    """Neither the single scan nor the union path sets a session conf
+    (no partition-type-inference toggle), in either schema mode."""
+    def conf():
+        return {r.key: r.value for r in spark.sql("SET").collect()}
+
+    before = conf()
+    root = str(tmp_path / "t")
+    for mode in TableRegistrationOptions:
+        for prefix, locs in (("cf__", [os.path.join(root, "k=01"),
+                                       os.path.join(root, "k=2")]),
+                             ("cu__", [str(tmp_path / "a"),
+                                       str(tmp_path / "b")])):
+            df, _ = _register_partition_list(
+                spark, root, [("k", "string")],
+                [(["01"], locs[0]), (["2"], locs[1])], prefix, options=mode)
+            df.collect()
+    assert conf() == before
+
+
+def test_infer_mode_partition_list_is_one_scan(spark, tmp_path):
+    """INFER_SCHEMA_FROM_DATA infers the data schema from the partition
+    directories, then reads them in one scan with the declared key
+    types appended; the path's '01' is never inferred as a number."""
+    root = str(tmp_path / "t")
+    df, _ = _register_partition_list(
+        spark, root, [("k", "string"), ("n", "smallint")],
+        [(["01", "7"], os.path.join(root, "k=01", "n=7")),
+         (["02", "8"], os.path.join(root, "k=02", "n=8"))],
+        "inf__", options=TableRegistrationOptions.INFER_SCHEMA_FROM_DATA)
+    assert not _is_union(df)
+    assert [(f.name, f.dataType) for f in df.schema.fields] == [
+        ("id", T.LongType()), ("k", T.StringType()), ("n", T.ShortType())]
+    assert _rows(df) == [(0, "01", 7), (0, "01", 7), (1, "02", 8), (1, "02", 8)]
+
+
+def test_projected_hive_partitions_are_one_scan(spark, tmp_path):
+    """Partition projection's default locations (``<root>/k=v``) take
+    the same single scan; absent projected days read as empty."""
+    root = str(tmp_path / "proj")
+    for i, day in enumerate(("2024-01-01", "2024-01-03")):
+        _write_partition(os.path.join(root, f"dt={day}"), i)
+    client = FakeGlueClient({"db": {"t": parquet_table(
+        "db", "t", root, [("id", "bigint")], partition_keys=[("dt", "date")],
+        parameters={"projection.enabled": "true",
+                    "projection.dt.type": "date",
+                    "projection.dt.range": "2024-01-01,2024-01-04"})}})
+    catalog = GlueCatalog(spark, client, view_prefix="proj__")
+    df = catalog.df("db", "t")
+    assert not _is_union(df)
+    assert "GetPartitions" not in client.calls
+    import datetime as dt
+
+    assert _rows(df) == [(0, dt.date(2024, 1, 1))] * 2 + [
+        (1, dt.date(2024, 1, 3))] * 2
+
+
+def test_partitioned_nano_timestamps_read_on_every_path(spark, tmp_path):
+    """A partitioned parquet table with TIMESTAMP(NANOS) columns reads
+    them as µs-truncated timestamps through the single scan, the union
+    path and directory discovery alike.  The nano probe must look into
+    the first partition's files, since the table root holds none; the
+    session's nanosAsLong is unset first so that no earlier flat-table
+    registration can mask a missed probe."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    want = sorted(
+        (dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=v // 1000), k)
+        for v, k in zip(ns, ("a", "b"))
+    )
+    root = str(tmp_path / "hive")
+    layouts = {
+        "one_scan": [os.path.join(root, "k=a"), os.path.join(root, "k=b")],
+        "union": [str(tmp_path / "x"), str(tmp_path / "y")],
+    }
+    for locs in layouts.values():
+        for v, loc in zip(ns, locs):
+            os.makedirs(loc, exist_ok=True)
+            pq.write_table(
+                pa.table({"ts": pa.array([v], pa.timestamp("ns"))}),
+                os.path.join(loc, "part-0.parquet"), version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    try:
+        for name, locs in layouts.items():
+            spark.conf.unset(key)
+            client = FakeGlueClient(
+                {"db": {"t": parquet_table(
+                    "db", "t", root, [("ts", "timestamp")],
+                    partition_keys=[("k", "string")])}},
+                partitions={("db", "t"): [
+                    {"Values": [k], "StorageDescriptor": {"Location": loc}}
+                    for k, loc in zip("ab", locs)]},
+            )
+            df = GlueCatalog(spark, client, view_prefix=f"ns{name}__").df("db", "t")
+            assert _rows(df) == want, name
+            assert _is_union(df) == (name == "union")
+        spark.conf.unset(key)
+        discovered = GlueCatalog(spark, FakeGlueClient({"db": {"t": parquet_table(
+            "db", "t", root, [("ts", "timestamp")],
+            partition_keys=[("k", "string")])}}), view_prefix="nsdisc__").df("db", "t")
+        assert _rows(discovered) == want
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)

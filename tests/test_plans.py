@@ -137,6 +137,55 @@ def test_partitioned_scan_prunes_directories(spark):
     assert "l_year" in part_line and "1996" in part_line
 
 
+def _glue_partitioned(spark, tmp_path, name, hive):
+    """A Glue table with explicit partitions dt=2024-01-0{1,2,3}: in the
+    Hive layout under its root, or at scattered locations."""
+    import os
+
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import GlueCatalog
+    from datafusion_catalogprovider_glue_spark.catalog.fake_glue import (
+        FakeGlueClient,
+        parquet_table,
+    )
+
+    root = str(tmp_path / name)
+    parts = []
+    for i, day in enumerate(("2024-01-01", "2024-01-02", "2024-01-03")):
+        loc = (os.path.join(root, f"dt={day}") if hive
+               else str(tmp_path / f"{name}_scattered_{i}"))
+        spark.range(i, i + 2).write.parquet(loc)
+        parts.append({"Values": [day], "StorageDescriptor": {"Location": loc}})
+    client = FakeGlueClient(
+        {"db": {name: parquet_table("db", name, root, [("id", "bigint")],
+                                    partition_keys=[("dt", "string")])}},
+        partitions={("db", name): parts},
+    )
+    return GlueCatalog(spark, client, view_prefix="plan__").df("db", name)
+
+
+def test_glue_hive_partitions_plan_one_pruned_scan(spark, tmp_path):
+    """Explicit Glue partitions in the Hive layout register as one
+    file-index scan, so a filter on the key plans ONE FileScan whose
+    PartitionFilters prune files, and no Union (the reference's
+    ListingTable with table_partition_cols, glue.rs:433-447).  A
+    scattered-location list still plans a Union of per-partition
+    scans."""
+    from pyspark.sql import functions as F
+
+    df = _glue_partitioned(spark, tmp_path, "hive_t", hive=True)
+    p = plan_str(df.filter(F.col("dt") == "2024-01-02"), "simple")
+    assert p.count("FileScan parquet") == 1
+    assert "Union" not in p
+    part_line = next(l for l in p.splitlines() if "PartitionFilters" in l)
+    assert "PartitionFilters: []" not in part_line
+    assert "dt" in part_line and "2024-01-02" in part_line
+    assert df.filter(F.col("dt") == "2024-01-02").count() == 2
+
+    # unfiltered, since constant folding drops the failing branches
+    scattered = _glue_partitioned(spark, tmp_path, "scattered_t", hive=False)
+    assert "Union" in plan_str(scattered)
+
+
 def test_multi_file_scan_parallelism(spark, tmp_path):
     """The testdata's single-row-group files force 1-task scans (why
     _parallelize exists); confirm the property that matters at 100 TB:
