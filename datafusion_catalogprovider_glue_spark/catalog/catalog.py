@@ -106,6 +106,25 @@ def _rebuild_nano_columns(df: DataFrame, nano_cols: set[str]) -> DataFrame:
     return df
 
 
+def _quoted(view: str) -> str:
+    """``view`` as one identifier, whatever characters the Glue names hold."""
+    return "`" + view.replace("`", "``") + "`"
+
+
+def _jvm_has_source(spark: SparkSession, fmt: str) -> bool:
+    """True when the session's JVM resolves the data source ``fmt``."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import AnalysisException
+
+    try:
+        spark._jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
+            fmt, spark._jsparkSession.sessionState().conf()
+        )
+    except (AnalysisException, Py4JJavaError):  # not found, or not loadable
+        return False
+    return True
+
+
 HIVE_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 # characters Hive (and Spark's ExternalCatalogUtils.escapePathName)
 # write as %XX in a partition directory name
@@ -222,6 +241,8 @@ class GlueCatalog:
         # created under _flights_lock
         self._flights: dict[tuple[str, str], threading.Lock] = {}
         self._flights_lock = threading.Lock()
+        # {format: whether the JVM resolves it}, see _has_jvm_source
+        self._jvm_sources: dict[str, bool] = {}
 
     # -- naming -----------------------------------------------------------
     def view_name(self, database: str, table: str) -> str:
@@ -365,10 +386,7 @@ class GlueCatalog:
 
         location = self._table_location(database, name, table)
         df = read_iceberg(self.spark, location)
-        return self._finish(
-            database, name, df, T.StructType(df.schema), "iceberg",
-            location, {}, [], False,
-        )
+        return self._finish(database, name, df, "iceberg", location)
 
     def _register_hudi_table(
         self, database: str, name: str, table: dict
@@ -406,34 +424,31 @@ class GlueCatalog:
                 "semantics"
             )
         df = read_hudi(self.spark, location)
-        return self._finish(
-            database, name, df, T.StructType(df.schema), "hudi",
-            location, {}, [], False,
-        )
+        return self._finish(database, name, df, "hudi", location)
 
     def _register_delta_table(self, database: str, name: str, table: dict) -> TableEntry:
-        """A6 (glue.rs:214-240): load the Delta log as the table.
+        """A6 (glue.rs:214-240): load the Delta log as the table, with
+        the delta-spark JVM source (full protocol support) when the
+        session has it, else with the built-in snapshot reader
+        (sources/delta.py) — like the reference, which reads
+        ``_delta_log`` itself rather than needing a Delta engine.  The
+        choice is made once per catalog (``_has_jvm_source``); a failure
+        on the chosen reader raises ``DeltaError``, never a retry on
+        the other."""
+        from datafusion_catalogprovider_glue_spark.sources import delta
 
-        Prefers the delta-spark JVM package (full protocol support);
-        falls back to the built-in minimal snapshot reader
-        (sources/delta.py) when the package is absent — same behavior
-        as the reference, which reads ``_delta_log`` itself via the
-        deltalake crate rather than requiring a running Delta engine."""
         location = self._table_location(database, name, table)
+        jvm = self._has_jvm_source("delta")
         try:
-            df = self.spark.read.format("delta").load(location)
-        except Exception:
-            from datafusion_catalogprovider_glue_spark.sources.delta import read_delta
-
-            try:
-                df = read_delta(self.spark, location)
-            except DeltaError:
-                raise
-            except Exception as exc:
-                raise DeltaError(
-                    f"failed to load delta table at {location}: {exc}"
-                ) from exc
-        return self._finish(database, name, df, T.StructType(df.schema), "delta", location, {}, [], True)
+            if jvm:
+                df = self.spark.read.format("delta").load(location)
+            else:
+                df = delta.read_delta(self.spark, location)
+        except DeltaError:
+            raise
+        except Exception as exc:
+            raise DeltaError(f"failed to load delta table at {location}: {exc}") from exc
+        return self._finish(database, name, df, "delta", location)
 
     @staticmethod
     def _projection_partitions(
@@ -630,9 +645,12 @@ class GlueCatalog:
         else:
             if schema is not None:
                 reader = reader.schema(schema)
+            # NULLIF(v, NULL) is v, typed nullable like the file index's
+            # key columns: Glue declares no nullability
             parts = [
                 reader.load(p_loc).withColumns({
-                    k: F.lit(raw).cast(t) for (k, t), raw in zip(keys, values)
+                    k: F.nullif(F.lit(raw).cast(t), F.lit(None))
+                    for (k, t), raw in zip(keys, values)
                 })
                 for values, p_loc in pairs
             ]
@@ -640,21 +658,11 @@ class GlueCatalog:
             for p in parts[1:]:
                 out = out.unionByName(p)
         out = _rebuild_nano_columns(out, nano_cols)
-        entry = self._finish(
-            database,
-            name,
-            out,
-            T.StructType(out.schema),
-            spec.format,
-            location,
-            dict(spec.options),
+        return self._finish(
+            database, name, out, spec.format, location, spec.options,
             partition_keys,
-            False,
+            [{"values": values, "location": p_loc} for values, p_loc in pairs],
         )
-        entry.partitions = [
-            {"values": values, "location": p_loc} for values, p_loc in pairs
-        ]
-        return entry
 
     def _load_regex_table(
         self,
@@ -702,17 +710,7 @@ class GlueCatalog:
             for i, f in enumerate(schema.fields)
         ]
         df = raw.select(*cols)
-        return self._finish(
-            database,
-            name,
-            df,
-            T.StructType(df.schema),
-            "regex",
-            location,
-            dict(spec.options),
-            [],
-            False,
-        )
+        return self._finish(database, name, df, "regex", location, spec.options)
 
     @staticmethod
     def _location_is_ion_binary(location: str) -> bool:
@@ -789,17 +787,7 @@ class GlueCatalog:
                 [T.StructField(k, t, True) for k, t in fields.items()]
             )
         df = read_ion_binary(self.spark, location, schema)
-        return self._finish(
-            database,
-            name,
-            df,
-            T.StructType(df.schema),
-            "ion-binary",
-            location,
-            {},
-            [],
-            False,
-        )
+        return self._finish(database, name, df, "ion-binary", location)
 
     def _register_listing_table(
         self,
@@ -876,36 +864,30 @@ class GlueCatalog:
                 )
 
         nano_cols = self._nano_columns(spec, location)
-        reader = self._reader(spec, options)
-        if partition_keys:
-            # Hive-style partition dirs: Spark discovers them; basePath
-            # keeps the partition columns when loading the root
-            # (reference: table_partition_cols, glue.rs:433-447)
-            reader = reader.option("basePath", location)
         schema = self._read_schema(sd, options, nano_cols)
-        if schema is not None:
-            reader = reader.schema(schema)
+        if spec.format == "avro" and not self._has_jvm_source("avro"):
+            # spark-avro is an external JVM package; without it the
+            # built-in pure-Python container reader reads the table
+            from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
+                read_avro_fallback,
+                schema_from_avro_file,
+            )
 
-        try:
-            df = reader.load(location)
-        except Exception as exc:
-            if spec.format == "avro":
-                # spark-avro is an external JVM package; when absent,
-                # fall back to the built-in pure-Python container
-                # reader (sources/avro_fallback.py) — same pattern as
-                # the Delta fallback.
-                from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
-                    read_avro_fallback,
-                    schema_from_avro_file,
-                )
-
-                columns = sd.get("Columns") or []
-                if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE and columns:
-                    fallback_schema = map_glue_columns_to_spark_schema(columns)
-                else:
-                    fallback_schema = schema_from_avro_file(location)
-                df = read_avro_fallback(self.spark, location, fallback_schema)
-            else:
+            df = read_avro_fallback(
+                self.spark, location, schema or schema_from_avro_file(location)
+            )
+        else:
+            reader = self._reader(spec, options)
+            if partition_keys:
+                # Hive-style partition dirs: Spark discovers them; basePath
+                # keeps the partition columns when loading the root
+                # (reference: table_partition_cols, glue.rs:433-447)
+                reader = reader.option("basePath", location)
+            if schema is not None:
+                reader = reader.schema(schema)
+            try:
+                df = reader.load(location)
+            except Exception as exc:
                 raise SparkError(
                     f"failed to read {spec.format} at {location}: {exc}"
                 ) from exc
@@ -919,15 +901,7 @@ class GlueCatalog:
                 df = df.withColumn(pk_name, F.col(pk_name).cast(parse_glue_data_type(pk_type)))
 
         return self._finish(
-            database,
-            name,
-            df,
-            T.StructType(df.schema),
-            spec.format,
-            location,
-            dict(spec.options),
-            partition_keys,
-            False,
+            database, name, df, spec.format, location, spec.options, partition_keys
         )
 
     def _reader(self, spec, options: TableRegistrationOptions):
@@ -940,6 +914,15 @@ class GlueCatalog:
             # Parquet/avro/delta are self-describing.
             reader = reader.option("inferSchema", "true")
         return reader
+
+    def _has_jvm_source(self, fmt: str) -> bool:
+        """Whether the session's JVM resolves the data source ``fmt``,
+        looked up once per catalog: registration then takes one reader
+        per format instead of throwing a failed load per table."""
+        with self._flights_lock:
+            if fmt not in self._jvm_sources:
+                self._jvm_sources[fmt] = _jvm_has_source(self.spark, fmt)
+            return self._jvm_sources[fmt]
 
     def _nano_columns(self, spec, probe: str) -> set[str]:
         """The nano-timestamp columns of a parquet table, probed at
@@ -978,17 +961,19 @@ class GlueCatalog:
         database: str,
         name: str,
         df: DataFrame,
-        schema: T.StructType,
         fmt: str,
         location: str,
-        options: dict[str, str],
-        partition_keys: list[tuple[str, str]],
-        is_delta: bool,
+        options: Optional[dict[str, str]] = None,
+        partition_keys: Optional[list[tuple[str, str]]] = None,
+        partitions: Optional[list[dict]] = None,
     ) -> TableEntry:
+        """Register ``df`` as the table's temp view and its registry entry."""
         view = self.view_name(database, name)
-        df.createOrReplaceTempView(view)
+        df.createOrReplaceTempView(_quoted(view))
         entry = TableEntry(
-            database, name, view, schema, fmt, location, options, partition_keys, is_delta
+            database, name, view, T.StructType(df.schema), fmt, location,
+            dict(options or {}), list(partition_keys or []), fmt == "delta",
+            list(partitions or []),
         )
         self._registry.setdefault(database, {})[name] = entry
         return entry
@@ -996,7 +981,7 @@ class GlueCatalog:
     # -- accessors / guards (A17-A19) --------------------------------------
     def database_names(self) -> list[str]:
         """A17 ``schema_names`` (glue.rs:548-556)."""
-        return sorted(self._registry)
+        return sorted(db for db, tables in self._registry.items() if tables)
 
     def table_names(self, database: str) -> list[str]:
         return sorted(self._registry.get(database, {}))
@@ -1019,7 +1004,7 @@ class GlueCatalog:
         catalog that is the difference between one round trip for the
         one table a query touches and 10k GetTable+read registrations
         before the first query runs."""
-        return self.spark.table(self._resolve(database, name).view)
+        return self.spark.table(_quoted(self._resolve(database, name).view))
 
     def _resolve(self, database: str, name: str) -> TableEntry:
         """The registry entry for ``database.name``, registered with one
@@ -1036,6 +1021,18 @@ class GlueCatalog:
         with flight:
             entry = self.table(database, name)
             return entry if entry is not None else self.register_table(database, name)
+
+    def invalidate(self, database: str, name: str) -> None:
+        """Forget ``database.name``: drop its registry entry and its
+        temp view, so the next ``sql()`` / ``df()`` fetches the table
+        again with one GetTable.  The registry never refreshes by
+        itself; call this after the Glue table changes.  A table this
+        catalog has not registered is left alone, view included."""
+        with self._flights_lock:
+            flight = self._flights.setdefault((database, name), threading.Lock())
+        with flight:
+            if self._registry.get(database, {}).pop(name, None) is not None:
+                self.spark.catalog.dropTempView(self.view_name(database, name))
 
     # view names look like {prefix}{db}__{table}; maps a view name the
     # SQL text uses back to the Glue coordinates to fetch
@@ -1152,7 +1149,7 @@ class GlueCatalog:
         GlueCatalog), and the new registration replaces that view.
         Dropping a registered table's view from the session does not
         remove its registry entry; ``register_table`` registers it
-        again.
+        again, and ``invalidate`` drops both.
 
         A failed lookup is held back, not raised: a CTE or alias
         spelled like a view name (``glue__a__b``) is no Glue table, and
@@ -1205,7 +1202,7 @@ class GlueCatalog:
         for entry in self.entries():
             key = f"{entry.database}.{entry.table}"
             try:
-                out[key] = self.spark.table(entry.view).limit(limit).collect()
+                out[key] = self.spark.table(_quoted(entry.view)).limit(limit).collect()
             except Exception as exc:
                 out[key] = SparkError(str(exc))
         return out

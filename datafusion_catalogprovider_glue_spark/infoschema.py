@@ -6,35 +6,48 @@ views, which the reference enables and the demo queries
 so these are built from the GlueCatalog registry — same column set as
 the reference's demo output (README.md:14-33), with ``data_type``
 carrying Spark's type string instead of Arrow's.
+
+Like the reference's in-memory virtual tables, each view is an
+in-memory local relation built from a ``pyarrow.Table``: Spark plans it
+as a ``LocalTableScan`` and folds a filter or projection on it into the
+relation while optimising, so a query over a view runs no Spark job and
+starts no Python worker.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from datafusion_catalogprovider_glue_spark.catalog.catalog import CATALOG_NAME, GlueCatalog
 
-_TABLES_SCHEMA = T.StructType(
-    [
-        T.StructField("table_catalog", T.StringType(), False),
-        T.StructField("table_schema", T.StringType(), False),
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("table_type", T.StringType(), False),
-    ]
+
+def _not_null(*names: str, dtype: T.DataType = T.StringType()) -> list[T.StructField]:
+    return [T.StructField(n, dtype, False) for n in names]
+
+
+_TABLE = _not_null("table_catalog", "table_schema", "table_name")
+_TABLES_SCHEMA = T.StructType(_TABLE + _not_null("table_type"))
+_COLUMNS_SCHEMA = T.StructType(
+    _TABLE
+    + _not_null("column_name")
+    + _not_null("ordinal_position", dtype=T.LongType())
+    + _not_null("is_nullable", "data_type")
+)
+_PARTITIONS_SCHEMA = T.StructType(
+    _TABLE
+    + _not_null("partition_values")
+    + [T.StructField("location", T.StringType(), True)]
 )
 
-_COLUMNS_SCHEMA = T.StructType(
-    [
-        T.StructField("table_catalog", T.StringType(), False),
-        T.StructField("table_schema", T.StringType(), False),
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("column_name", T.StringType(), False),
-        T.StructField("ordinal_position", T.LongType(), False),
-        T.StructField("is_nullable", T.StringType(), False),
-        T.StructField("data_type", T.StringType(), False),
-    ]
-)
+
+def _local_view(catalog: GlueCatalog, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """``rows`` as an in-memory local relation of ``schema``."""
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.table(dict(zip(schema.names, columns)), schema=to_arrow_schema(schema))
+    return catalog.spark.createDataFrame(table, schema)
 
 
 def information_schema_tables(catalog: GlueCatalog) -> DataFrame:
@@ -48,18 +61,7 @@ def information_schema_tables(catalog: GlueCatalog) -> DataFrame:
         (CATALOG_NAME, "information_schema", "tables", "VIEW"),
         (CATALOG_NAME, "information_schema", "columns", "VIEW"),
     ]
-    return catalog.spark.createDataFrame(rows, _TABLES_SCHEMA)
-
-
-_PARTITIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("table_catalog", T.StringType(), False),
-        T.StructField("table_schema", T.StringType(), False),
-        T.StructField("table_name", T.StringType(), False),
-        T.StructField("partition_values", T.StringType(), False),
-        T.StructField("location", T.StringType(), True),
-    ]
-)
+    return _local_view(catalog, rows, _TABLES_SCHEMA)
 
 
 def information_schema_partitions(catalog: GlueCatalog) -> DataFrame:
@@ -70,34 +72,23 @@ def information_schema_partitions(catalog: GlueCatalog) -> DataFrame:
     C6 views.  Unpartitioned / directory-discovered tables contribute
     no rows (their layout is the scan's, not the catalog's).
     Driver-side metadata only, same scale class as the C6 views."""
-    rows = []
-    for e in catalog.entries():
-        keys = [k for k, _t in e.partition_keys]
-        for p in e.partitions:
-            values = "/".join(
-                f"{k}={v}" for k, v in zip(keys, p["values"])
-            )
-            rows.append(
-                (CATALOG_NAME, e.database, e.table, values, p["location"])
-            )
-    return catalog.spark.createDataFrame(rows, _PARTITIONS_SCHEMA)
+    rows = [
+        (CATALOG_NAME, e.database, e.table,
+         "/".join(f"{k}={v}" for (k, _t), v in zip(e.partition_keys, p["values"])),
+         p["location"])
+        for e in catalog.entries()
+        for p in e.partitions
+    ]
+    return _local_view(catalog, rows, _PARTITIONS_SCHEMA)
 
 
 def information_schema_columns(catalog: GlueCatalog) -> DataFrame:
     """README.md:22-33: per-column rows with 0-based ordinal_position,
     is_nullable YES/NO, and the engine's type string."""
-    rows = []
-    for e in catalog.entries():
-        for i, fld in enumerate(e.schema.fields):
-            rows.append(
-                (
-                    CATALOG_NAME,
-                    e.database,
-                    e.table,
-                    fld.name,
-                    i,
-                    "YES" if fld.nullable else "NO",
-                    fld.dataType.simpleString(),
-                )
-            )
-    return catalog.spark.createDataFrame(rows, _COLUMNS_SCHEMA)
+    rows = [
+        (CATALOG_NAME, e.database, e.table, fld.name, i,
+         "YES" if fld.nullable else "NO", fld.dataType.simpleString())
+        for e in catalog.entries()
+        for i, fld in enumerate(e.schema.fields)
+    ]
+    return _local_view(catalog, rows, _COLUMNS_SCHEMA)

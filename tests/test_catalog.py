@@ -1019,10 +1019,10 @@ def test_hive_layout_single_scan_reads_what_the_union_reads(
         "sc__")
     assert not _is_union(hive)
     assert _is_union(scattered)
-    # same names and types; a file-index partition column is nullable,
-    # a literal column is not
-    assert [(f.name, f.dataType) for f in hive.schema.fields] == [
-        (f.name, f.dataType) for f in scattered.schema.fields]
+    # same names, types and nullability: partition keys are nullable on
+    # both paths, Glue declaring no nullability
+    assert hive.schema == scattered.schema
+    assert all(hive.schema[k].nullable for k, _ in keys)
     assert _rows(hive) == _rows(scattered) == sorted(
         r for r in want for _ in range(2))
 

@@ -181,9 +181,13 @@ def test_glue_hive_partitions_plan_one_pruned_scan(spark, tmp_path):
     assert "dt" in part_line and "2024-01-02" in part_line
     assert df.filter(F.col("dt") == "2024-01-02").count() == 2
 
-    # unfiltered, since constant folding drops the failing branches
+    # unfiltered, since constant folding drops the failing branches:
+    # filtered, the (nullable) key literals still fold to one scan
     scattered = _glue_partitioned(spark, tmp_path, "scattered_t", hive=False)
     assert "Union" in plan_str(scattered)
+    p = plan_str(scattered.filter(F.col("dt") == "2024-01-02"), "simple")
+    assert p.count("FileScan parquet") == 1 and "Union" not in p
+    assert scattered.filter(F.col("dt") == "2024-01-02").count() == 2
 
 
 def test_multi_file_scan_parallelism(spark, tmp_path):
