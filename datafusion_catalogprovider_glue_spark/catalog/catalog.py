@@ -17,9 +17,11 @@ the views, exactly as the reference delegates execution to DataFusion
 from __future__ import annotations
 
 import enum
+import os
 import re
 import threading
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,6 +106,32 @@ def _rebuild_nano_columns(df: DataFrame, nano_cols: set[str]) -> DataFrame:
                 ),
             )
     return df
+
+
+def _parse_regex_lines(
+    df: DataFrame, regex: str, schema: T.StructType, keys: list[str]
+) -> DataFrame:
+    """Hive RegexSerDe lowering of a text load's ``value`` lines: Spark
+    has no regex datasource, so capture group i+1 becomes column i,
+    cast to the declared type, through one ``regexp_extract`` each —
+    all scan-stage codegen, zero Python — and the partition ``keys``
+    pass through.  Hive semantics: a line that does NOT match the
+    pattern yields an all-NULL row (never an error), which the
+    ``rlike`` guard reproduces."""
+    # Hive RegexSerDe matches the FULL line (Pattern.matches), while
+    # rlike/regexp_extract do substring search — anchor as a
+    # non-capturing group so group indices 1..N are unshifted and an
+    # unanchored input.regex can't parse a line Hive would NULL out.
+    pattern = "^(?:" + regex + ")$"
+    matched = F.col("value").rlike(pattern)
+    cols = [
+        F.when(matched, F.regexp_extract(F.col("value"), pattern, i + 1))
+        .otherwise(F.lit(None))
+        .cast(f.dataType)
+        .alias(f.name)
+        for i, f in enumerate(schema.fields)
+    ]
+    return df.select(*cols, *keys)
 
 
 def _quoted(view: str) -> str:
@@ -571,43 +599,48 @@ class GlueCatalog:
                 return parts
             token = {"NextToken": next_token}
 
-    def _register_explicit_partitions(
+    def _partition_list(
         self,
         database: str,
         name: str,
-        sd: dict,
-        spec,
-        options: TableRegistrationOptions,
+        table: dict,
         partition_keys: list[tuple[str, str]],
-        partitions: list[dict],
         location: str,
-    ) -> TableEntry:
-        """Register a table from its partition list (GetPartitions or
-        projection).  Data files do not contain the partition columns
-        (the Hive convention Glue inherits); the values come from the
-        list.
+        expression: Optional[str],
+        glue_partitions: bool,
+    ) -> list[tuple[list[str], str]]:
+        """The table's partitions as ``(values, location)`` pairs; []
+        when it has none listed, so directory discovery reads it.
 
-        Hive layout (``_hive_partition_paths``): ONE multi-path load of
-        the partition directories with ``basePath`` at the table
-        location and the partition keys, typed as Glue declares them,
-        in the read schema — the reference's single ListingTable with
-        ``table_partition_cols`` (glue.rs:433-447).  Spark's file index
-        then carries the values, a filter on a key becomes
-        ``PartitionFilters`` that prune files, and the plan has one
-        scan, whatever the partition count.  In infer mode the data
-        schema is first inferred from the partition directories loaded
-        without ``basePath`` (so no column is discovered from the
-        paths), and the declared keys are appended.
-
-        Any other list (locations scattered anywhere, the layout
-        Hive's ALTER TABLE ADD PARTITION ... LOCATION produces, or
-        values the file index would read differently): one load per
-        partition with its values attached as literal columns cast to
-        the declared key types, then a union of them all; Catalyst
-        drops the branches whose literals fail a query predicate.
-
-        Both read nanosecond parquet timestamps the flat-table way,
-        probing the first partition's files."""
+        Partition PROJECTION first: projection-enabled tables by
+        definition have no registered partitions — the parameter block
+        IS the partition list (skipping GetPartitions is the feature's
+        point).  Projection enumerates the CONFIGURED value space, not
+        what exists; Athena semantics read missing projected partitions
+        as empty, so absent local locations are dropped (object-store
+        paths pass through — existence is the scan's job there).
+        Explicit Glue partitions next: real partitioned Glue tables
+        frequently carry per-partition StorageDescriptors whose
+        locations are NOT Hive-style dirs under one root — GetPartitions
+        is the source of truth when it returns any."""
+        partitions = [
+            p
+            for p in self._projection_partitions(
+                table.get("Parameters") or {}, partition_keys, location
+            )
+            if "://" in p["StorageDescriptor"]["Location"]
+            or os.path.exists(p["StorageDescriptor"]["Location"])
+        ] or (
+            self._get_partitions(database, name, expression=expression)
+            if glue_partitions else []
+        )
+        if expression and not partitions:
+            raise SparkError(
+                f"partition expression {expression!r} on "
+                f"{database}.{name} matched no partitions (or the "
+                "table has no explicit Glue partitions) — refusing "
+                "a silently empty registration"
+            )
         pairs = []
         for p in partitions:
             values = p.get("Values") or []
@@ -623,94 +656,7 @@ class GlueCatalog:
                     "StorageDescriptor.Location"
                 )
             pairs.append((list(values), p_loc))
-
-        nano_cols = self._nano_columns(spec, pairs[0][1])
-        reader = self._reader(spec, options)
-        schema = self._read_schema(sd, options, nano_cols)
-        keys = [(k, parse_glue_data_type(t)) for k, t in partition_keys]
-        hive_paths = _hive_partition_paths(location, keys, pairs)
-        if hive_paths is not None:
-            if schema is None:
-                schema = reader.load(hive_paths).schema
-            key_names = {k for k, _ in keys}
-            schema = T.StructType(
-                [f for f in schema.fields if f.name not in key_names]
-                + [T.StructField(k, t, True) for k, t in keys]
-            )
-            out = (
-                reader.schema(schema)
-                .option("basePath", location.rstrip("/"))
-                .load(hive_paths)
-            )
-        else:
-            if schema is not None:
-                reader = reader.schema(schema)
-            # NULLIF(v, NULL) is v, typed nullable like the file index's
-            # key columns: Glue declares no nullability
-            parts = [
-                reader.load(p_loc).withColumns({
-                    k: F.nullif(F.lit(raw).cast(t), F.lit(None))
-                    for (k, t), raw in zip(keys, values)
-                })
-                for values, p_loc in pairs
-            ]
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-        out = _rebuild_nano_columns(out, nano_cols)
-        return self._finish(
-            database, name, out, spec.format, location, spec.options,
-            partition_keys,
-            [{"values": values, "location": p_loc} for values, p_loc in pairs],
-        )
-
-    def _load_regex_table(
-        self,
-        database: str,
-        name: str,
-        sd: dict,
-        spec,
-        options: TableRegistrationOptions,
-        location: str,
-    ) -> TableEntry:
-        """Hive RegexSerDe lowering: Spark has no regex datasource, so
-        the table becomes a TEXT scan plus one ``regexp_extract`` per
-        Glue column (capture group i+1 → column i, cast to the declared
-        type) — all scan-stage codegen, zero Python.  Hive semantics:
-        a line that does NOT match the pattern yields an all-NULL row
-        (never an error), which the ``rlike`` guard reproduces.  Schema
-        must come from the Glue columns (a regex carries no types to
-        infer from)."""
-        if options is not TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
-            raise SparkError(
-                "RegexSerDe tables require the Glue-schema mode: the "
-                "pattern's capture groups carry no types to infer"
-            )
-        columns = sd.get("Columns") or []
-        if not columns:
-            raise GlueError(
-                f"RegexSerDe table {database}.{name} has no columns"
-            )
-        # Hive RegexSerDe matches the FULL line (Pattern.matches), while
-        # rlike/regexp_extract do substring search — anchor as a
-        # non-capturing group so group indices 1..N are unshifted and an
-        # unanchored input.regex can't parse a line Hive would NULL out.
-        pattern = "^(?:" + spec.options["input.regex"] + ")$"
-        schema = map_glue_columns_to_spark_schema(columns)
-        raw = self.spark.read.text(location)
-        matched = F.col("value").rlike(pattern)
-        cols = [
-            F.when(
-                matched,
-                F.regexp_extract(F.col("value"), pattern, i + 1),
-            )
-            .otherwise(F.lit(None))
-            .cast(f.dataType)
-            .alias(f.name)
-            for i, f in enumerate(schema.fields)
-        ]
-        df = raw.select(*cols)
-        return self._finish(database, name, df, "regex", location, spec.options)
+        return pairs
 
     @staticmethod
     def _location_is_ion_binary(location: str) -> bool:
@@ -798,16 +744,35 @@ class GlueCatalog:
         partition_expression: Optional[str] = None,
         glue_partitions: bool = True,
     ) -> TableEntry:
-        """A7 (glue.rs:243-274): format dispatch + schema mode + load."""
+        """A7 (glue.rs:243-274): format dispatch + schema mode + load.
+
+        One rule registers every listing table, partitioned or not:
+        when a file index can read the layout, the table is ONE
+        ``_load`` — a flat table of its location; a partitioned table
+        with no partition list (directory discovery) of its root; a
+        Glue or projection list in the Hive layout
+        (``_hive_partition_paths``) of its partition directories; the
+        last two with ``basePath`` at the table root.  That is the
+        reference's single ListingTable with ``table_partition_cols``
+        (glue.rs:257-272,433-447): the file index carries the key
+        values, typed as Glue declares them, a filter on a key becomes
+        ``PartitionFilters`` that prune files, and the plan has one
+        scan whatever the partition count.
+
+        Otherwise — locations scattered anywhere (the layout Hive's
+        ALTER TABLE ADD PARTITION ... LOCATION produces), values the
+        file index would read differently, or a reader with no file
+        index (Avro without spark-avro) — the table is the union of one
+        ``_load`` per partition, its values attached as literal columns
+        cast to the declared key types; Catalyst drops the branches
+        whose literals fail a query predicate.  Data files do not hold
+        the key columns (the Hive convention Glue inherits).
+
+        A RegexSerDe table is a text load the same way, then one
+        ``regexp_extract`` per Glue column (``_parse_regex_lines``)."""
         sd = self._storage_descriptor(database, name, table)
         location = self._table_location(database, name, table)
         spec = calculate_reader_spec(sd)
-
-        if spec.format == "regex":
-            return self._load_regex_table(
-                database, name, sd, spec, options, location
-            )
-
         if spec.ion_fallback and self._location_is_ion_binary(location):
             # BINARY Ion (version marker E0 01 00 EA): the JSON
             # approximation (glue.rs:421-425) would fail on these —
@@ -815,105 +780,131 @@ class GlueCatalog:
             return self._load_ion_binary_table(
                 database, name, sd, options, location
             )
+        if spec.format == "regex":
+            if options is not TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
+                raise SparkError(
+                    "RegexSerDe tables require the Glue-schema mode: the "
+                    "pattern's capture groups carry no types to infer"
+                )
+            if not sd.get("Columns"):
+                raise GlueError(
+                    f"RegexSerDe table {database}.{name} has no columns"
+                )
 
         partition_keys = [
             (k["Name"], k["Type"]) for k in (table.get("PartitionKeys") or [])
         ]
-        if partition_keys:
-            # partition PROJECTION first: projection-enabled tables by
-            # definition have no registered partitions — the parameter
-            # block IS the partition list (skipping GetPartitions is
-            # the feature's point)
-            projected = self._projection_partitions(
-                table.get("Parameters") or {}, partition_keys, location
-            )
-            if projected:
-                # projection enumerates the CONFIGURED value space, not
-                # what exists; Athena semantics read missing projected
-                # partitions as empty, so drop absent local locations
-                # (object-store paths pass through — existence is the
-                # scan's job there)
-                import os as _os
-
-                projected = [
-                    p
-                    for p in projected
-                    if "://" in p["StorageDescriptor"]["Location"]
-                    or _os.path.exists(p["StorageDescriptor"]["Location"])
-                ]
-            # explicit Glue partitions next: real partitioned Glue
-            # tables frequently carry per-partition StorageDescriptors
-            # whose locations are NOT Hive-style dirs under one root —
-            # GetPartitions is the source of truth when it returns any
-            partitions = projected or (
-                self._get_partitions(
-                    database, name, expression=partition_expression
-                ) if glue_partitions else []
-            )
-            if partitions:
-                return self._register_explicit_partitions(
-                    database, name, sd, spec, options, partition_keys,
-                    partitions, location,
-                )
-            if partition_expression:
-                raise SparkError(
-                    f"partition expression {partition_expression!r} on "
-                    f"{database}.{name} matched no partitions (or the "
-                    "table has no explicit Glue partitions) — refusing "
-                    "a silently empty registration"
-                )
-
-        nano_cols = self._nano_columns(spec, location)
-        schema = self._read_schema(sd, options, nano_cols)
-        if spec.format == "avro" and not self._has_jvm_source("avro"):
-            # spark-avro is an external JVM package; without it the
-            # built-in pure-Python container reader reads the table
-            from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
-                read_avro_fallback,
-                schema_from_avro_file,
-            )
-
-            df = read_avro_fallback(
-                self.spark, location, schema or schema_from_avro_file(location)
-            )
+        keys = [(k, parse_glue_data_type(t)) for k, t in partition_keys]
+        pairs = self._partition_list(
+            database, name, table, partition_keys, location,
+            partition_expression, glue_partitions,
+        ) if keys else []
+        one_load = (
+            self._file_index(spec) and _hive_partition_paths(location, keys, pairs)
+            if pairs else [location]
+        )
+        if one_load:
+            df = self._load(spec, sd, options, one_load, keys, location)
         else:
-            reader = self._reader(spec, options)
-            if partition_keys:
-                # Hive-style partition dirs: Spark discovers them; basePath
-                # keeps the partition columns when loading the root
-                # (reference: table_partition_cols, glue.rs:433-447)
-                reader = reader.option("basePath", location)
-            if schema is not None:
-                reader = reader.schema(schema)
-            try:
-                df = reader.load(location)
-            except Exception as exc:
-                raise SparkError(
-                    f"failed to read {spec.format} at {location}: {exc}"
-                ) from exc
-
-        df = _rebuild_nano_columns(df, nano_cols)
-
-        # partition columns come back from directory discovery; cast
-        # them to the Glue-declared types (glue.rs:433-442)
-        for pk_name, pk_type in partition_keys:
-            if pk_name in df.columns:
-                df = df.withColumn(pk_name, F.col(pk_name).cast(parse_glue_data_type(pk_type)))
-
+            # NULLIF(v, NULL) is v, typed nullable like the file index's
+            # key columns: Glue declares no nullability
+            df = reduce(DataFrame.unionByName, [
+                self._load(spec, sd, options, [p_loc]).withColumns({
+                    k: F.nullif(F.lit(raw).cast(t), F.lit(None))
+                    for (k, t), raw in zip(keys, values)
+                })
+                for values, p_loc in pairs
+            ])
+        if spec.format == "regex":
+            df = _parse_regex_lines(
+                df, spec.options["input.regex"],
+                map_glue_columns_to_spark_schema(sd["Columns"]),
+                [k for k, _ in keys],
+            )
         return self._finish(
-            database, name, df, spec.format, location, spec.options, partition_keys
+            database, name, df, spec.format, location, spec.options,
+            partition_keys,
+            [{"values": values, "location": p_loc} for values, p_loc in pairs],
         )
 
-    def _reader(self, spec, options: TableRegistrationOptions):
-        reader = self.spark.read.format(spec.format).options(**spec.options)
-        if (
-            options is TableRegistrationOptions.INFER_SCHEMA_FROM_DATA
-            and spec.format in ("csv", "json")
-        ):
-            # InferSchemaFromData (glue.rs:266): sample the files.
-            # Parquet/avro/delta are self-describing.
-            reader = reader.option("inferSchema", "true")
-        return reader
+    def _load(
+        self,
+        spec,
+        sd: dict,
+        options: TableRegistrationOptions,
+        paths: list[str],
+        keys: list[tuple[str, T.DataType]] = (),
+        base_path: Optional[str] = None,
+    ) -> DataFrame:
+        """Load ``paths`` as one DataFrame: the data columns, then the
+        declared ``keys`` with their Glue types, all nullable, whose
+        values the file index reads from the paths below ``base_path``
+        (the table root; unused without keys).  The data columns are the Glue columns in derive
+        mode (nano-timestamp parquet columns read as bigint and rebuilt,
+        probed at the first path) and a RegexSerDe table's raw line; in
+        infer mode, or without Glue columns, the data decides, with one
+        schema-only load of ``paths`` without ``basePath`` when there
+        are keys to append.  Every load failure raises ``SparkError``."""
+        nano_cols = self._nano_columns(spec, paths[0])
+        schema = (
+            T.StructType([T.StructField("value", T.StringType())])
+            if spec.format == "regex"
+            else self._read_schema(sd, options, nano_cols)
+        )
+        try:
+            if not self._file_index(spec):
+                # spark-avro is an external JVM package; without it the
+                # built-in pure-Python container reader reads the files
+                if keys:
+                    raise SparkError(
+                        f"{spec.format} table at {paths[0]}: without the "
+                        "spark-avro JVM source no file index reads its "
+                        "partition directories — list them in Glue"
+                    )
+                from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
+                    read_avro_fallback,
+                    schema_from_avro_file,
+                )
+
+                return read_avro_fallback(
+                    self.spark, paths[0], schema or schema_from_avro_file(paths[0])
+                )
+            fmt, fmt_options = (
+                ("text", {}) if spec.format == "regex" else (spec.format, spec.options)
+            )
+            reader = self.spark.read.format(fmt).options(**fmt_options)
+            if (
+                options is TableRegistrationOptions.INFER_SCHEMA_FROM_DATA
+                and fmt in ("csv", "json")
+            ):
+                # InferSchemaFromData (glue.rs:266): sample the files.
+                # Parquet/avro/delta are self-describing.
+                reader = reader.option("inferSchema", "true")
+            if keys:
+                if schema is None:
+                    schema = reader.load(paths).schema
+                names = {k for k, _ in keys}
+                schema = T.StructType(
+                    [f for f in schema.fields if f.name not in names]
+                    + [T.StructField(k, t, True) for k, t in keys]
+                )
+                reader = reader.option("basePath", base_path.rstrip("/"))
+            if schema is not None:
+                reader = reader.schema(schema)
+            return _rebuild_nano_columns(reader.load(paths), nano_cols)
+        except GlueError:
+            raise
+        except Exception as exc:
+            raise SparkError(
+                f"failed to read {spec.format} at {', '.join(paths)}: {exc}"
+            ) from exc
+
+    def _file_index(self, spec) -> bool:
+        """Whether ``spec`` reads through a Spark file source, whose file
+        index reads many paths and partition directories at once: every
+        format but Avro without the spark-avro JVM source, which the
+        built-in reader reads one location at a time."""
+        return spec.format != "avro" or self._has_jvm_source("avro")
 
     def _has_jvm_source(self, fmt: str) -> bool:
         """Whether the session's JVM resolves the data source ``fmt``,

@@ -142,7 +142,10 @@ def read_avro_fallback(
     spark: SparkSession, location: str, schema: T.StructType
 ) -> DataFrame:
     """Distributed read of a directory of .avro files under the
-    Glue-derived ``schema`` (fields matched by writer-field name)."""
+    Glue-derived ``schema`` (fields matched by writer-field name).  A
+    missing ``location`` raises here, not when the read first runs."""
+    if not os.path.exists(location):
+        raise FileNotFoundError(f"no Avro data at {location!r}")
     if os.path.isdir(location):
         files = sorted(
             os.path.join(location, n)

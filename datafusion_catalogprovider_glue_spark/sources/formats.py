@@ -43,7 +43,6 @@ class ReaderSpec:
 
     format: str
     options: dict[str, str] = field(default_factory=dict)
-    supports_schema_inference: bool = True
     # IonHiveSerDe tables: text Ion reads as JSON (the reference's
     # approximation, glue.rs:421-425), but files carrying the binary
     # Ion version marker route to the pure-Python binary decoder
@@ -87,7 +86,7 @@ def calculate_reader_spec(storage_descriptor: dict) -> ReaderSpec:
 
     # B3 Avro (glue.rs:406-410)
     if triple == (AVRO_IN, AVRO_OUT, AVRO_SERDE):
-        return ReaderSpec("avro", supports_schema_inference=False)
+        return ReaderSpec("avro")
 
     # B4/B5/B6 JSON variants + Ion (glue.rs:411-425)
     if input_format == TEXT_IN and output_format == TEXT_OUT and serde in (
@@ -127,7 +126,7 @@ def calculate_reader_spec(storage_descriptor: dict) -> ReaderSpec:
     # per column, input.regex required, non-matching lines read as
     # all-NULL rows.  Spark has no regex datasource, so the catalog
     # lowers this spec to a text scan + one regexp_extract per column
-    # — see GlueCatalog._load_regex_table.)
+    # — see GlueCatalog._register_listing_table.)
     if input_format == TEXT_IN and serde == REGEX_SERDE:
         serde_params = serde_info.get("Parameters") or {}
         pattern = serde_params.get("input.regex")
@@ -136,9 +135,7 @@ def calculate_reader_spec(storage_descriptor: dict) -> ReaderSpec:
                 "RegexSerDe table without input.regex serde parameter "
                 "is not supported"
             )
-        return ReaderSpec(
-            "regex", {"input.regex": pattern}, supports_schema_inference=False
-        )
+        return ReaderSpec("regex", {"input.regex": pattern})
 
     # B7 fallback (glue.rs:426-429)
     raise NotImplementedYet(

@@ -1192,3 +1192,130 @@ def test_partitioned_nano_timestamps_read_on_every_path(spark, tmp_path):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, saved)
+
+
+# ------------------------------------------- one loader for every layout
+_LAYOUT_CASES = {
+    # name: (key, Glue type, path values, projection parameters, key values read)
+    "zero_padded_string": (
+        "s", "string", ["01", "10"],
+        {"projection.s.type": "enum", "projection.s.values": "01,10"},
+        ["01", "10"],
+    ),
+    "int": (
+        "n", "int", ["7", "12"],
+        {"projection.n.type": "integer", "projection.n.range": "7,12"},
+        [7, 12],
+    ),
+    "date": (
+        "dt", "date", ["2024-01-01", "2024-01-03"],
+        {"projection.dt.type": "date",
+         "projection.dt.range": "2024-01-01,2024-01-04"},
+        ["2024-01-01", "2024-01-03"],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LAYOUT_CASES))
+def test_every_partition_layout_reads_the_same_table(spark, tmp_path, case):
+    """The same Hive-laid-out data registered four ways — directory
+    discovery (no partition list), a GetPartitions list, a projection,
+    and a scattered copy (the union) — reads identical rows and an
+    identical schema, nullability included.  Discovery reads each key
+    with its declared type, so a zero-padded string key stays '01'."""
+    import datetime as dt
+
+    key, ktype, values, projection, want = _LAYOUT_CASES[case]
+    if ktype == "date":
+        want = [dt.date.fromisoformat(v) for v in want]
+    root = str(tmp_path / "hive")
+    hive = [os.path.join(root, f"{key}={v}") for v in values]
+    scattered = [str(tmp_path / f"scatter{i}") for i in range(len(values))]
+    for i, (h, s) in enumerate(zip(hive, scattered)):
+        _write_partition(h, i)
+        _write_partition(s, i)
+
+    def table(loc, **kw):
+        return {"db": {"t": parquet_table(
+            "db", "t", loc, [("id", "bigint")], partition_keys=[(key, ktype)],
+            **kw)}}
+
+    def listed(locs):
+        return {("db", "t"): [
+            {"Values": [v], "StorageDescriptor": {"Location": loc}}
+            for v, loc in zip(values, locs)]}
+
+    clients = {
+        "discovered": FakeGlueClient(table(root)),
+        "listed": FakeGlueClient(table(root), partitions=listed(hive)),
+        "projected": FakeGlueClient(table(root, parameters={
+            "projection.enabled": "true", **projection})),
+        "scattered": FakeGlueClient(
+            table(str(tmp_path / "elsewhere")), partitions=listed(scattered)),
+    }
+    dfs = {
+        layout: GlueCatalog(spark, client, view_prefix=f"lay{layout}__").df("db", "t")
+        for layout, client in clients.items()
+    }
+    for layout, df in dfs.items():
+        assert df.schema == dfs["listed"].schema, layout
+        assert _rows(df) == sorted((i, v) for i, v in enumerate(want) for _ in range(2)), layout
+    assert dfs["listed"].schema[key].nullable
+    assert [layout for layout, df in dfs.items() if _is_union(df)] == ["scattered"]
+
+
+def test_register_tables_collects_a_load_failure(spark, tmp_path):
+    """A Glue partition whose location is gone fails its table's load
+    with SparkError, which register_tables collects as that table's
+    result; the database's other tables still register."""
+    from datafusion_catalogprovider_glue_spark.catalog.catalog import TableEntry
+    from datafusion_catalogprovider_glue_spark.errors import SparkError
+
+    root = str(tmp_path / "t")
+    _write_partition(os.path.join(root, "k=a"), 0)
+    parts = {
+        name: [{"Values": [k], "StorageDescriptor": {
+            "Location": os.path.join(root, f"k={k}")}} for k in keys]
+        for name, keys in (("gone", "ab"), ("ok", "a"))
+    }
+    client = FakeGlueClient(
+        {"db": {name: parquet_table("db", name, root, [("id", "bigint")],
+                                    partition_keys=[("k", "string")])
+                for name in parts}},
+        partitions={("db", name): p for name, p in parts.items()},
+    )
+    catalog = GlueCatalog(spark, client, view_prefix="lf__")
+    results = catalog.register_tables("db")
+    assert [type(r) for r in results] == [SparkError, TableEntry]
+    assert "k=b" in str(results[0])
+    assert catalog.table_names("db") == ["ok"]
+
+
+def test_partitioned_regex_table_keeps_its_keys(spark, tmp_path):
+    """A RegexSerDe table reads its partition keys like any listing
+    table, whether the partitions are discovered or listed in Glue."""
+    from datafusion_catalogprovider_glue_spark.sources.formats import REGEX_SERDE
+
+    root = tmp_path / "log"
+    (root / "k=7").mkdir(parents=True)
+    (root / "k=7" / "part-0.txt").write_text("a|1\nb|2\nnot a line\n")
+    table = {
+        "DatabaseName": "db", "Name": "lines", "Parameters": {},
+        "PartitionKeys": [{"Name": "k", "Type": "int"}],
+        "StorageDescriptor": {
+            **_text_sd(REGEX_SERDE, {"input.regex": r"(\w+)\|(\d+)"}),
+            "Columns": [{"Name": "s", "Type": "string"},
+                        {"Name": "n", "Type": "int"}],
+            "Location": str(root),
+        },
+    }
+    listed = {("db", "lines"): [{"Values": ["7"], "StorageDescriptor": {
+        "Location": str(root / "k=7")}}]}
+    for prefix, partitions in (("rxd__", None), ("rxl__", listed)):
+        catalog = GlueCatalog(spark, FakeGlueClient(
+            {"db": {"lines": table}}, partitions=partitions), view_prefix=prefix)
+        df = catalog.df("db", "lines")
+        assert [(f.name, f.dataType) for f in df.schema.fields] == [
+            ("s", T.StringType()), ("n", T.IntegerType()), ("k", T.IntegerType())]
+        assert sorted(map(tuple, df.collect()), key=str) == sorted(
+            [("a", 1, 7), ("b", 2, 7), (None, None, 7)], key=str)

@@ -312,3 +312,60 @@ def test_invalidate_leaves_views_it_does_not_own(spark, tmp_path):
     GlueCatalog(spark, client, view_prefix="own__").invalidate("db", "t")
     assert spark.table("own__db__t").collect() == [(1,)]
     assert owner.table("db", "t") is not None
+
+
+# -- partitioned Avro without spark-avro -------------------------------------------
+
+
+def _partitioned_avro_table(tmp_path):
+    """An Avro table with key ``k int`` and its files under ``k=1/``
+    and ``k=2/``, plus its Glue partition list."""
+    root = tmp_path / "avro_p"
+    schema = T.StructType([T.StructField("x", T.LongType())])
+    for k, rows in (("1", [(1,)]), ("2", [(2,), (3,)])):
+        (root / f"k={k}").mkdir(parents=True)
+        write_avro_container(str(root / f"k={k}" / "part-0.avro"), schema, rows)
+    table = {**_avro_table(tmp_path), "Name": "avp",
+             "PartitionKeys": [{"Name": "k", "Type": "int"}]}
+    table["StorageDescriptor"] = {
+        **table["StorageDescriptor"],
+        "Columns": [{"Name": "x", "Type": "bigint"}], "Location": str(root)}
+    partitions = [{"Values": [k], "StorageDescriptor": {
+        "Location": str(root / f"k={k}")}} for k in "12"]
+    return table, partitions
+
+
+def _skip_with_jvm_avro(spark):
+    if catalog_module._jvm_has_source(spark, "avro"):
+        pytest.skip("the session has a spark-avro JVM source")
+
+
+def test_listed_avro_partitions_read_without_spark_avro(spark, tmp_path):
+    """Without spark-avro a listed Avro table reads each partition with
+    the built-in reader and attaches the Glue values as key literals; a
+    listed partition whose location is gone fails the registration."""
+    _skip_with_jvm_avro(spark)
+    table, partitions = _partitioned_avro_table(tmp_path)
+    client = FakeGlueClient({"fmt": {"avp": table}},
+                            partitions={("fmt", "avp"): partitions})
+    df = GlueCatalog(spark, client, view_prefix="avl__").df("fmt", "avp")
+    assert [(f.name, f.dataType, f.nullable) for f in df.schema.fields] == [
+        ("x", T.LongType(), True), ("k", T.IntegerType(), True)]
+    assert sorted(df.collect()) == [(1, 1), (2, 2), (3, 2)]
+    gone = [*partitions, {"Values": ["3"], "StorageDescriptor": {
+        "Location": str(tmp_path / "avro_p" / "k=3")}}]
+    client = FakeGlueClient({"fmt": {"avp": table}}, partitions={("fmt", "avp"): gone})
+    with pytest.raises(SparkError, match="k=3"):
+        GlueCatalog(spark, client, view_prefix="avg__").register_table("fmt", "avp")
+
+
+def test_unlisted_avro_partitions_refuse_without_spark_avro(spark, tmp_path):
+    """Without spark-avro nothing can discover an unlisted Avro table's
+    partition directories: registering it raises SparkError instead of
+    registering an empty table without its key."""
+    _skip_with_jvm_avro(spark)
+    table, _ = _partitioned_avro_table(tmp_path)
+    catalog = GlueCatalog(spark, FakeGlueClient({"fmt": {"avp": table}}))
+    with pytest.raises(SparkError, match="file index"):
+        catalog.register_table("fmt", "avp")
+    assert catalog.table("fmt", "avp") is None
