@@ -20,7 +20,7 @@ import enum
 import os
 import re
 import threading
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from functools import reduce
 from typing import Optional, Union
 
@@ -45,8 +45,27 @@ from datafusion_catalogprovider_glue_spark.types import (
 CATALOG_NAME = "glue"  # the reference registers itself as "glue" (demo.rs:66)
 
 
+def _first_data_file(location: str, suffix: str = "") -> Optional[str]:
+    """The file a table's format is probed at: ``location`` itself when
+    it is not a directory, else the first file ending in ``suffix`` in
+    sorted walk order, skipping ``_``/``.`` entries, so a partitioned
+    table root (no files of its own) is probed through its first
+    partition directory.  None when the directory holds no such file."""
+    if not os.path.isdir(location):
+        return location
+    for root, dirs, files in os.walk(location):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        parts = sorted(
+            f for f in files if f.endswith(suffix) and not f.startswith(("_", "."))
+        )
+        if parts:
+            return os.path.join(root, parts[0])
+    return None
+
+
 def _nano_timestamp_columns(location: str) -> set[str]:
-    """Top-level TIMESTAMP(NANOS) columns in a parquet file/dir.
+    """Top-level TIMESTAMP(NANOS) columns in a parquet file/dir, probed
+    at its first data file.
 
     Spark's parquet reader rejects nano timestamps outright
     ([PARQUET_TYPE_ILLEGAL]); the reference maps Glue ``timestamp`` to
@@ -55,33 +74,14 @@ def _nano_timestamp_columns(location: str) -> set[str]:
     footer at registration (driver-side metadata read, same cost class
     as the reference's infer path) and transparently rebuild them as
     µs-truncated timestamps — the truncation §1.3 already accepts.
-    A directory is probed through its first parquet file in sorted
-    walk order, skipping ``_``/``.`` entries, so a partitioned table
-    root (no files of its own) is probed through its first partition
-    directory.  Best-effort: any inspection failure returns the empty
-    set and the plain read path proceeds (and raises its own, clearer
-    error)."""
-    import os
-
+    Best-effort: any inspection failure returns the empty set and the
+    plain read path proceeds (and raises its own, clearer error)."""
     try:
         import pyarrow.parquet as pq
         import pyarrow.types as pat
 
-        path = location
-        if os.path.isdir(location):
-            path = None
-            for root, dirs, files in os.walk(location):
-                dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
-                parts = sorted(
-                    f for f in files
-                    if f.endswith(".parquet") and not f.startswith(("_", "."))
-                )
-                if parts:
-                    path = os.path.join(root, parts[0])
-                    break
-            if path is None:
-                return set()
-        return {
+        path = _first_data_file(location, ".parquet")
+        return set() if path is None else {
             f.name
             for f in pq.read_schema(path)
             if pat.is_timestamp(f.type) and f.type.unit == "ns"
@@ -90,9 +90,27 @@ def _nano_timestamp_columns(location: str) -> set[str]:
         return set()
 
 
+def _is_ion_binary(location: str) -> bool:
+    """Whether an IonHiveSerDe table's first data file carries the
+    binary Ion version marker (a table mixing text and binary Ion is
+    malformed either way).  Object-store locations skip the probe (no
+    cheap peek): they keep the reference's JSON approximation."""
+    from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
+        is_ion_binary_file,
+    )
+
+    if "://" in location:
+        return False
+    path = _first_data_file(location)
+    try:
+        return path is not None and is_ion_binary_file(path)
+    except OSError:
+        return False
+
+
 def _rebuild_nano_columns(df: DataFrame, nano_cols: set[str]) -> DataFrame:
-    """Rebuild nano-timestamp columns (read as raw int64 under
-    ``nanosAsLong``) as µs-truncated TIMESTAMP_NTZ: ns→µs is the
+    """Rebuild nano-timestamp columns (read as raw int64 through a
+    bigint read schema) as µs-truncated TIMESTAMP_NTZ: ns→µs is the
     deviation §1.3 already accepts (glue.rs:466), NTZ matches the
     tz-naive reference mapping, and the epoch arithmetic is
     session-timezone-independent."""
@@ -427,17 +445,15 @@ class GlueCatalog:
         real Hudi Glue sync registers MoR tables as _ro/_rt pairs for
         exactly this reason.  Snapshot MoR reads need the record key
         and go through sources/hudi.read_hudi_mor directly."""
-        import os as _os
-
         from datafusion_catalogprovider_glue_spark.sources.hudi import (
             read_hudi,
         )
 
         location = self._table_location(database, name, table)
         params = table.get("Parameters") or {}
-        tl = _os.path.join(location, ".hoodie")
-        has_deltacommits = _os.path.isdir(tl) and any(
-            f.endswith(".deltacommit") for f in _os.listdir(tl)
+        tl = os.path.join(location, ".hoodie")
+        has_deltacommits = os.path.isdir(tl) and any(
+            f.endswith(".deltacommit") for f in os.listdir(tl)
         )
         if has_deltacommits and params.get(
             "hoodie.query.as.ro.table", ""
@@ -658,83 +674,6 @@ class GlueCatalog:
             pairs.append((list(values), p_loc))
         return pairs
 
-    @staticmethod
-    def _location_is_ion_binary(location: str) -> bool:
-        """True when the table's data files carry the binary Ion
-        version marker — checked on ONE file (a table mixing text and
-        binary Ion is malformed either way).  Object-store locations
-        skip the probe (no cheap peek): they keep the reference's
-        JSON approximation."""
-        import os as _os
-
-        from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
-            is_ion_binary_file,
-        )
-
-        if "://" in location or not _os.path.isdir(location):
-            return False
-        for n in sorted(_os.listdir(location)):
-            if n.startswith(("_", ".")):
-                continue
-            try:
-                return is_ion_binary_file(_os.path.join(location, n))
-            except OSError:
-                return False
-        return False
-
-    def _load_ion_binary_table(
-        self,
-        database: str,
-        name: str,
-        sd: dict,
-        options: TableRegistrationOptions,
-        location: str,
-    ) -> TableEntry:
-        """BINARY Ion lowering (beyond the reference's envelope — its
-        JSON approximation, glue.rs:421-425, breaks on binary Ion in
-        both engines): decode executor-side via the pure-Python codec
-        (sources/ion_binary.py, the avro_fallback pattern).  Schema
-        from the Glue columns in derive mode; in infer mode, sampled
-        from the first file's decoded rows (string/long/double/boolean
-        from the python values, the same subset the JSON sampler
-        yields)."""
-        import os as _os
-
-        from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
-            decode_ion_binary,
-            read_ion_binary,
-        )
-
-        if options is TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
-            columns = sd.get("Columns") or []
-            if not columns:
-                raise GlueError(
-                    f"binary Ion table {database}.{name} has no columns"
-                )
-            schema = map_glue_columns_to_spark_schema(columns)
-        else:
-            first = next(
-                _os.path.join(location, n)
-                for n in sorted(_os.listdir(location))
-                if not n.startswith(("_", "."))
-            )
-            with open(first, "rb") as fh:
-                sample = decode_ion_binary(fh.read())
-            py_to_spark = {
-                str: T.StringType(), bool: T.BooleanType(),
-                int: T.LongType(), float: T.DoubleType(),
-            }
-            fields: dict[str, T.DataType] = {}
-            for row in sample:
-                for k, v in row.items():
-                    if k not in fields and v is not None:
-                        fields[k] = py_to_spark.get(type(v), T.StringType())
-            schema = T.StructType(
-                [T.StructField(k, t, True) for k, t in fields.items()]
-            )
-        df = read_ion_binary(self.spark, location, schema)
-        return self._finish(database, name, df, "ion-binary", location)
-
     def _register_listing_table(
         self,
         database: str,
@@ -762,24 +701,22 @@ class GlueCatalog:
         Otherwise — locations scattered anywhere (the layout Hive's
         ALTER TABLE ADD PARTITION ... LOCATION produces), values the
         file index would read differently, or a reader with no file
-        index (Avro without spark-avro) — the table is the union of one
-        ``_load`` per partition, its values attached as literal columns
-        cast to the declared key types; Catalyst drops the branches
-        whose literals fail a query predicate.  Data files do not hold
-        the key columns (the Hive convention Glue inherits).
+        index (Avro without spark-avro, binary Ion) — the table is the
+        union of one ``_load`` per partition, its values attached as
+        literal columns cast to the declared key types; Catalyst drops
+        the branches whose literals fail a query predicate.  Data files
+        do not hold the key columns (the Hive convention Glue inherits).
 
-        A RegexSerDe table is a text load the same way, then one
-        ``regexp_extract`` per Glue column (``_parse_regex_lines``)."""
+        An IonHiveSerDe table reads as JSON (the reference's
+        approximation, glue.rs:421-425) unless the first data file of
+        its first partition, or of its location, is BINARY Ion: then
+        its format is ``ion-binary``, read the same way by the
+        pure-Python decoder.  A RegexSerDe table is a text load the
+        same way, then one ``regexp_extract`` per Glue column
+        (``_parse_regex_lines``)."""
         sd = self._storage_descriptor(database, name, table)
         location = self._table_location(database, name, table)
         spec = calculate_reader_spec(sd)
-        if spec.ion_fallback and self._location_is_ion_binary(location):
-            # BINARY Ion (version marker E0 01 00 EA): the JSON
-            # approximation (glue.rs:421-425) would fail on these —
-            # route to the pure-Python binary decoder instead
-            return self._load_ion_binary_table(
-                database, name, sd, options, location
-            )
         if spec.format == "regex":
             if options is not TableRegistrationOptions.DERIVE_SCHEMA_FROM_GLUE_TABLE:
                 raise SparkError(
@@ -799,6 +736,8 @@ class GlueCatalog:
             database, name, table, partition_keys, location,
             partition_expression, glue_partitions,
         ) if keys else []
+        if spec.ion_fallback and _is_ion_binary(pairs[0][1] if pairs else location):
+            spec = replace(spec, format="ion-binary")
         one_load = (
             self._file_index(spec) and _hive_partition_paths(location, keys, pairs)
             if pairs else [location]
@@ -839,12 +778,17 @@ class GlueCatalog:
         """Load ``paths`` as one DataFrame: the data columns, then the
         declared ``keys`` with their Glue types, all nullable, whose
         values the file index reads from the paths below ``base_path``
-        (the table root; unused without keys).  The data columns are the Glue columns in derive
-        mode (nano-timestamp parquet columns read as bigint and rebuilt,
-        probed at the first path) and a RegexSerDe table's raw line; in
-        infer mode, or without Glue columns, the data decides, with one
-        schema-only load of ``paths`` without ``basePath`` when there
-        are keys to append.  Every load failure raises ``SparkError``."""
+        (the table root; unused without keys).  The data columns are
+        the Glue columns in derive mode and a RegexSerDe table's raw
+        line; in infer mode, or without Glue columns, the data decides,
+        with one schema-only load of ``paths`` without ``basePath`` when
+        there are keys to append or nano-timestamp columns.  Nano
+        columns (``_nano_columns``) always read through an explicit
+        bigint read schema and are rebuilt; only that schema-only load
+        needs the ``nanosAsLong`` conf, so it runs in a child session
+        and this session's conf never changes.  A reader without a file
+        index reads one location and no partition directories.  Every
+        load failure raises ``SparkError``."""
         nano_cols = self._nano_columns(spec, paths[0])
         schema = (
             T.StructType([T.StructField("value", T.StringType())])
@@ -853,36 +797,47 @@ class GlueCatalog:
         )
         try:
             if not self._file_index(spec):
-                # spark-avro is an external JVM package; without it the
-                # built-in pure-Python container reader reads the files
                 if keys:
                     raise SparkError(
-                        f"{spec.format} table at {paths[0]}: without the "
-                        "spark-avro JVM source no file index reads its "
-                        "partition directories — list them in Glue"
+                        f"{spec.format} table at {paths[0]}: its reader has "
+                        "no file index to read partition directories — "
+                        "list them in Glue"
                     )
-                from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
-                    read_avro_fallback,
-                    schema_from_avro_file,
+                from datafusion_catalogprovider_glue_spark.sources import (
+                    avro_fallback,
+                    ion_binary,
                 )
 
-                return read_avro_fallback(
-                    self.spark, paths[0], schema or schema_from_avro_file(paths[0])
+                read, sample = (
+                    (ion_binary.read_ion_binary,
+                     ion_binary.schema_from_ion_binary_file)
+                    if spec.format == "ion-binary"
+                    else (avro_fallback.read_avro_fallback,
+                          avro_fallback.schema_from_avro_file)
                 )
+                return read(self.spark, paths[0], schema or sample(paths[0]))
             fmt, fmt_options = (
                 ("text", {}) if spec.format == "regex" else (spec.format, spec.options)
             )
-            reader = self.spark.read.format(fmt).options(**fmt_options)
             if (
                 options is TableRegistrationOptions.INFER_SCHEMA_FROM_DATA
                 and fmt in ("csv", "json")
             ):
                 # InferSchemaFromData (glue.rs:266): sample the files.
                 # Parquet/avro/delta are self-describing.
-                reader = reader.option("inferSchema", "true")
+                fmt_options = {**fmt_options, "inferSchema": "true"}
+            if schema is None and (keys or nano_cols):
+                session = self.spark
+                if nano_cols:
+                    # schema inference is the one read that needs the
+                    # conf; a child session keeps it out of this one
+                    session = self.spark.newSession()
+                    session.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+                schema = (
+                    session.read.format(fmt).options(**fmt_options).load(paths).schema
+                )
+            reader = self.spark.read.format(fmt).options(**fmt_options)
             if keys:
-                if schema is None:
-                    schema = reader.load(paths).schema
                 names = {k for k, _ in keys}
                 schema = T.StructType(
                     [f for f in schema.fields if f.name not in names]
@@ -902,9 +857,11 @@ class GlueCatalog:
     def _file_index(self, spec) -> bool:
         """Whether ``spec`` reads through a Spark file source, whose file
         index reads many paths and partition directories at once: every
-        format but Avro without the spark-avro JVM source, which the
-        built-in reader reads one location at a time."""
-        return spec.format != "avro" or self._has_jvm_source("avro")
+        format but binary Ion and Avro without the spark-avro JVM
+        source, whose built-in readers read one location at a time."""
+        return spec.format != "ion-binary" and (
+            spec.format != "avro" or self._has_jvm_source("avro")
+        )
 
     def _has_jvm_source(self, fmt: str) -> bool:
         """Whether the session's JVM resolves the data source ``fmt``,
@@ -915,16 +872,13 @@ class GlueCatalog:
                 self._jvm_sources[fmt] = _jvm_has_source(self.spark, fmt)
             return self._jvm_sources[fmt]
 
-    def _nano_columns(self, spec, probe: str) -> set[str]:
+    @staticmethod
+    def _nano_columns(spec, probe: str) -> set[str]:
         """The nano-timestamp columns of a parquet table, probed at
-        ``probe``; when there are any, nanos are read as raw int64 (the
-        session-wide legacy knob) for ``_rebuild_nano_columns``."""
-        nano_cols = (
-            _nano_timestamp_columns(probe) if spec.format == "parquet" else set()
-        )
-        if nano_cols:
-            self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return nano_cols
+        ``probe``.  They read as raw int64 through an explicit bigint
+        read schema, never through the session conf, and
+        ``_rebuild_nano_columns`` makes them timestamps."""
+        return _nano_timestamp_columns(probe) if spec.format == "parquet" else set()
 
     @staticmethod
     def _read_schema(

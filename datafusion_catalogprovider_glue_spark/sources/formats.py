@@ -44,9 +44,10 @@ class ReaderSpec:
     format: str
     options: dict[str, str] = field(default_factory=dict)
     # IonHiveSerDe tables: text Ion reads as JSON (the reference's
-    # approximation, glue.rs:421-425), but files carrying the binary
-    # Ion version marker route to the pure-Python binary decoder
-    # (sources/ion_binary.py) — detection happens at registration
+    # approximation, glue.rs:421-425), but a table whose first data file
+    # carries the binary Ion version marker takes the "ion-binary"
+    # format at registration, read by the pure-Python binary decoder
+    # (sources/ion_binary.py)
     ion_fallback: bool = False
 
 

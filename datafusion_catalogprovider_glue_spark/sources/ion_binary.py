@@ -323,6 +323,21 @@ def is_ion_binary_file(path: str) -> bool:
         return fh.read(4) == _BVM
 
 
+def _data_files(location: str) -> list[str]:
+    """The files of ``location``: the location itself, or a directory's
+    entries not starting with ``_``/``.`` in name order.  A missing
+    ``location`` raises here, not when the read first runs."""
+    if not os.path.exists(location):
+        raise FileNotFoundError(f"no binary Ion data at {location!r}")
+    if not os.path.isdir(location):
+        return [location]
+    return sorted(
+        os.path.join(location, n)
+        for n in os.listdir(location)
+        if not n.startswith(("_", "."))
+    )
+
+
 def read_ion_binary(
     spark: SparkSession, location: str, schema: T.StructType
 ) -> DataFrame:
@@ -330,14 +345,7 @@ def read_ion_binary(
     Glue-derived ``schema`` (fields matched by struct field name,
     absent fields → null) — the read_avro_fallback shape: one file per
     task, decode executor-side, only the listing on the driver."""
-    if os.path.isdir(location):
-        files = sorted(
-            os.path.join(location, n)
-            for n in os.listdir(location)
-            if not n.startswith(("_", "."))
-        )
-    else:
-        files = [location]
+    files = _data_files(location)
     if not files:
         return spark.createDataFrame([], schema)
     target_fields = [f.name for f in schema.fields]
@@ -353,3 +361,29 @@ def read_ion_binary(
         decode_files
     )
     return spark.createDataFrame(rdd, schema)
+
+
+_PY_TO_SPARK = {
+    str: T.StringType(), bool: T.BooleanType(),
+    int: T.LongType(), float: T.DoubleType(),
+}
+
+
+def schema_from_ion_binary_file(location: str) -> T.StructType:
+    """InferSchemaFromData for binary Ion: the fields of the first
+    file's decoded rows in first-seen order, typed string/long/double/
+    boolean from the Python values (the subset the JSON sampler
+    yields); a field that is null in every sampled row is left out."""
+    files = _data_files(location)
+    if not files:
+        raise NotImplementedYet(
+            f"no binary Ion files under {location!r} to infer from"
+        )
+    with open(files[0], "rb") as fh:
+        sample = decode_ion_binary(fh.read())
+    fields: dict[str, T.DataType] = {}
+    for row in sample:
+        for k, v in row.items():
+            if k not in fields and v is not None:
+                fields[k] = _PY_TO_SPARK.get(type(v), T.StringType())
+    return T.StructType([T.StructField(k, t, True) for k, t in fields.items()])

@@ -77,7 +77,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch self-join (the oracle).
     """
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stream = _staged_events_stream(spark, sf_dir)
 
     views = (

@@ -161,7 +161,6 @@ def stream_stateful_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet file source → watermark(0s) → applyInPandasWithState
     (EventTimeTimeout) → memory sink, drained with availableNow."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     stream_dir = os.path.join(
         "/tmp",
@@ -306,7 +305,6 @@ def stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     same cut).  Greedy earliest-match advance equals the cascaded-MIN
     form, so the oracle is pure SQL over the same events."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     stream_dir = os.path.join(
         "/tmp",
@@ -470,7 +468,6 @@ def stream_first_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone — the combination that keeps state stores bounded and
     output files immutable."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     stream_dir = os.path.join(
         "/tmp",

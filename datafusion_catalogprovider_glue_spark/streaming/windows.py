@@ -153,7 +153,6 @@ def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregation (same oracle) — while still executing the
     streaming state-store path end-to-end."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     # The file-stream source requires a *directory* to monitor; the
     # events table is a single parquet file (read-only), so stage a
@@ -228,7 +227,6 @@ def stream_session_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     its oracle — while exercising the streaming session-state merge
     path (gap-window state unions, not fixed windows)."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     import hashlib as _hashlib
     import os as _os
@@ -291,7 +289,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension refreshes per micro-batch, the stream stays partition-
     local until the post-join aggregation."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     import hashlib as _hashlib
     import os as _os
@@ -345,7 +342,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expires with event time — noted here, the bounded key domain
     (users × 5 types) keeps exact dedup cheap."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     import hashlib as _hashlib
     import os as _os
@@ -401,7 +397,6 @@ def stream_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     state size by window/slide (4× here), which is the capacity knob
     to watch."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import hashlib as _hashlib
     import os as _os
 
@@ -507,7 +502,6 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     each merge to one row per touched key, which is what keeps
     per-batch cost O(batch + touched keys), not O(state)."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import hashlib as _hashlib
     import os as _os
     import shutil as _shutil
@@ -577,7 +571,6 @@ def stream_sliding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-pass.  Ties break on event_type — deterministic in both
     engines since counts are exact integers."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = events_raw_ddl(sf_dir)
     import hashlib as _hashlib
     import os as _os
@@ -657,7 +650,6 @@ def stream_upsert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot through the engine's own Delta reader, hash-matched
     against the batch keep-latest oracle."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import hashlib as _hashlib
     import os as _os
     import shutil as _shutil
@@ -783,7 +775,6 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame replays the final snapshot through the engine's own
     Iceberg reader."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import hashlib as _hashlib
     import json as _json
     import os as _os
@@ -930,7 +921,6 @@ def stream_upsert_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned DataFrame replays the table through the engine's own
     MoR reader."""
     apply_engine_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import hashlib as _hashlib
     import os as _os
     import shutil as _shutil

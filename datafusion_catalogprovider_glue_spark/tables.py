@@ -38,10 +38,10 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
     """True when events.parquet stores ``ts`` as TIMESTAMP(NANOS).
 
     Spark's parquet reader rejects NANOS outright
-    ([PARQUET_TYPE_ILLEGAL]), so nano files must go through the
-    ``nanosAsLong`` legacy knob + µs rebuild; µs files read natively as
-    TIMESTAMP_NTZ.  Footer-driven so both generations of the driver's
-    testdata work.
+    ([PARQUET_TYPE_ILLEGAL]) when it infers the schema, so nano files
+    read ``ts`` as raw int64 through an explicit bigint schema, then
+    rebuild it as µs; µs files read natively as TIMESTAMP_NTZ.
+    Footer-driven so both generations of the testdata work.
     """
     import pyarrow.parquet as pq
 
@@ -53,7 +53,7 @@ def ensure_micros_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize the events time column to a plain µs ``TimestampType``.
 
     Handles both generations of the driver testdata: raw int64 nanos
-    (read via ``nanosAsLong`` — rebuilt with the ns→µs truncation
+    (read through ``events_raw_ddl`` — rebuilt with the ns→µs truncation
     SURVEY §1.3 accepts, glue.rs:466) and native µs TIMESTAMP_NTZ
     (cast; value-identical under the engine's pinned UTC session tz).
     Keeping one output type means every downstream operator
@@ -72,9 +72,10 @@ def ensure_micros_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 
 def events_raw_ddl(sf_dir: str) -> str:
     """DDL schema matching the *physical* events parquet, for streaming
-    file sources (readStream requires an explicit schema).  ``ts`` is
-    bigint for NANOS files (paired with ``nanosAsLong`` + rebuild) and
-    timestamp_ntz for µs files."""
+    file sources (readStream requires an explicit schema) and for nano
+    batch reads.  ``ts`` is bigint for NANOS files (rebuilt by
+    ``ensure_micros_ts``; no session conf is needed once the schema is
+    explicit) and timestamp_ntz for µs files."""
     ts_ddl = "bigint" if _events_ts_is_nanos(sf_dir) else "timestamp_ntz"
     return (
         f"event_id bigint, ts {ts_ddl}, user_id bigint, event_type string, "
@@ -86,9 +87,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
+        reader = spark.read
         if _events_ts_is_nanos(sf_dir):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return ensure_micros_ts(spark.read.parquet(table_path(sf_dir, name)))
+            reader = reader.schema(events_raw_ddl(sf_dir))
+        return ensure_micros_ts(reader.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
 
 

@@ -817,6 +817,67 @@ def test_concurrent_lazy_registration_is_single_flight(spark):
     assert client.calls == {"GetTable": 1}
 
 
+def test_concurrent_overlapping_cold_queries(spark):
+    """Threads whose queries overlap on cold tables, some joining
+    nation with region and others region with supplier, all get correct
+    counts, and each table costs one GetTable between them."""
+    import sys
+    import threading
+
+    from datafusion_catalogprovider_glue_spark.tables import load_table
+
+    names = ("nation", "region", "supplier")
+    base = make_testdata_fixture(SF_SMOKE)
+    fetched = []
+
+    class _NamedSlowGlue(_SlowGlue):
+        def get_table(self, DatabaseName, Name):
+            fetched.append(Name)
+            return super().get_table(DatabaseName=DatabaseName, Name=Name)
+
+    client = _NamedSlowGlue({"default": {
+        t: base.get_table(DatabaseName="default", Name=t)["Table"] for t in names}})
+    catalog = GlueCatalog(spark, client, view_prefix="overlap__")
+    nation, region, supplier = (load_table(spark, SF_SMOKE, t) for t in names)
+    queries = [
+        ("SELECT COUNT(*) AS n FROM overlap__default__nation JOIN "
+         "overlap__default__region ON n_regionkey = r_regionkey",
+         nation.join(region, nation.n_regionkey == region.r_regionkey).count()),
+        ("SELECT COUNT(*) AS n FROM overlap__default__region JOIN "
+         "overlap__default__supplier ON r_regionkey = s_nationkey % 5",
+         region.join(supplier, region.r_regionkey == supplier.s_nationkey % 5).count()),
+    ]
+    n_threads = 8
+    start = threading.Barrier(n_threads)
+    results, errors = [], []
+
+    def run(i):
+        text, want = queries[i % 2]
+        try:
+            start.wait(timeout=60)
+            results.append((catalog.sql(text).collect()[0].n, want))
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=run, args=(i,))
+               for i in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(results) == n_threads
+    assert all(got == want for got, want in results)
+    assert sorted(fetched) == sorted(names)
+    assert client.calls == {"GetTable": len(names)}
+
+
 class _FailingSecondPage(FakeGlueClient):
     """GetPartitions fails on every page after the first."""
 
@@ -1191,6 +1252,49 @@ def test_partitioned_nano_timestamps_read_on_every_path(spark, tmp_path):
         if saved is None:
             spark.conf.unset(key)
         else:
+            spark.conf.set(key, saved)
+
+
+@pytest.mark.parametrize(
+    "options", list(TableRegistrationOptions), ids=lambda o: o.value)
+def test_nano_timestamp_registration_leaves_the_session_untouched(
+    spark, tmp_path, options
+):
+    """A flat nano-timestamp parquet table reads its nanos as
+    µs-truncated timestamps under a filter on the nano column, in both
+    schema modes, and registering it leaves the session's nanosAsLong
+    conf as it was: a plain read of the file still raises."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    loc = str(tmp_path / "flat")
+    os.makedirs(loc)
+    path = os.path.join(loc, "part-0.parquet")
+    pq.write_table(pa.table({
+        "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_999],
+                       pa.timestamp("ns")),
+        "id": [1, 2]}), path, version="2.6")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        client = FakeGlueClient({"db": {"t": parquet_table(
+            "db", "t", loc, [("ts", "timestamp"), ("id", "bigint")])}})
+        entry = GlueCatalog(spark, client, view_prefix=f"nsiso{options.value}__"
+                            ).register_table("db", "t", options)
+        rows = spark.sql(
+            f"SELECT ts, id FROM {entry.view} "
+            "WHERE ts > TIMESTAMP_NTZ '2023-11-14 22:13:20.5'").collect()
+        assert [tuple(r) for r in rows] == [(dt.datetime(2023, 11, 14, 22, 13, 21), 2)]
+        assert spark.sql(f"SELECT ts FROM {entry.view} WHERE id = 1").first().ts == (
+            dt.datetime(2023, 11, 14, 22, 13, 20, 123456))
+        assert spark.conf.get(key, None) is None
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(path).collect()
+    finally:
+        if saved is not None:
             spark.conf.set(key, saved)
 
 

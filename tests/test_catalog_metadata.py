@@ -31,6 +31,12 @@ from datafusion_catalogprovider_glue_spark.sources.formats import (
     AVRO_IN,
     AVRO_OUT,
     AVRO_SERDE,
+    ION_SERDE,
+    TEXT_IN,
+    TEXT_OUT,
+)
+from datafusion_catalogprovider_glue_spark.sources.ion_binary import (
+    encode_ion_binary,
 )
 
 _VIEWS = {
@@ -369,3 +375,70 @@ def test_unlisted_avro_partitions_refuse_without_spark_avro(spark, tmp_path):
     with pytest.raises(SparkError, match="file index"):
         catalog.register_table("fmt", "avp")
     assert catalog.table("fmt", "avp") is None
+
+
+def _partitioned_ion_table(root):
+    """A binary-Ion table declaring ``a bigint`` with key ``k int``, two
+    rows under each of ``root/k=1/`` and ``root/k=2/``, and its Glue
+    partition list."""
+    for k in "12":
+        os.makedirs(os.path.join(root, f"k={k}"))
+        with open(os.path.join(root, f"k={k}", "part-0.10n"), "wb") as fh:
+            fh.write(encode_ion_binary(
+                [{"a": 10 * int(k)}, {"a": 10 * int(k) + 1}], ["a"]))
+    table = {"DatabaseName": "fmt", "Name": "ionp", "Parameters": {},
+             "PartitionKeys": [{"Name": "k", "Type": "int"}],
+             "StorageDescriptor": {
+                 "InputFormat": TEXT_IN, "OutputFormat": TEXT_OUT,
+                 "SerdeInfo": {"SerializationLibrary": ION_SERDE},
+                 "Columns": [{"Name": "a", "Type": "bigint"}],
+                 "Location": root}}
+    partitions = [{"Values": [k], "StorageDescriptor": {
+        "Location": os.path.join(root, f"k={k}")}} for k in "12"]
+    return table, partitions
+
+
+def test_partitioned_binary_ion_reads_through_the_loader(spark, tmp_path):
+    """A partitioned binary-Ion table is probed at its first data file,
+    which lies in a partition directory, so it reads with the binary
+    decoder: from a Hive-layout Glue list and from a scattered list, one
+    location per partition plus its key literal.  Without a list, no
+    file index can find its partition directories, so it refuses."""
+    import shutil
+
+    root = str(tmp_path / "ion_p")
+    table, hive = _partitioned_ion_table(root)
+    scattered = []
+    for p, other in zip(hive, ("x", "y")):
+        loc = str(tmp_path / other)
+        shutil.copytree(p["StorageDescriptor"]["Location"], loc)
+        scattered.append({**p, "StorageDescriptor": {"Location": loc}})
+    for name, partitions in (("hive", hive), ("scattered", scattered)):
+        client = FakeGlueClient({"fmt": {"ionp": table}},
+                                partitions={("fmt", "ionp"): partitions})
+        catalog = GlueCatalog(spark, client, view_prefix=f"ion{name}__")
+        entry = catalog.register_table("fmt", "ionp")
+        df = spark.table(entry.view)
+        assert entry.format == "ion-binary", name
+        assert df.schema.simpleString() == "struct<a:bigint,k:int>", name
+        assert set(df.collect()) == {(10, 1), (11, 1), (20, 2), (21, 2)}, name
+    catalog = GlueCatalog(spark, FakeGlueClient({"fmt": {"ionp": table}}))
+    with pytest.raises(SparkError, match="file index"):
+        catalog.register_table("fmt", "ionp")
+    assert catalog.table("fmt", "ionp") is None
+
+
+def test_gone_binary_ion_partition_fails_its_registration(spark, tmp_path):
+    """A listed binary-Ion partition whose location is gone fails its
+    table's registration with SparkError, which register_tables
+    collects, instead of registering a table whose first query fails."""
+    root = str(tmp_path / "ion_p")
+    table, partitions = _partitioned_ion_table(root)
+    gone = [*partitions, {"Values": ["3"], "StorageDescriptor": {
+        "Location": os.path.join(root, "k=3")}}]
+    catalog = GlueCatalog(spark, FakeGlueClient(
+        {"fmt": {"ionp": table}}, partitions={("fmt", "ionp"): gone}))
+    [result] = catalog.register_tables("fmt")
+    assert isinstance(result, SparkError)
+    assert "ion-binary" in str(result) and "k=3" in str(result)
+    assert catalog.table("fmt", "ionp") is None
