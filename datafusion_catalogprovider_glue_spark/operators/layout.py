@@ -466,8 +466,9 @@ def sink_delta_optimize_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_delta_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELTA DATA SKIPPING (delta_writer._file_stats +
-    read_delta(stats_filter=...)): lineitem lands in a Delta table
+    """DELTA DATA SKIPPING (delta_writer._file_stats over the shared
+    footer fold parquet_stats.footer_stats + read_delta(stats_filter=...)
+    through parquet_stats.may_match): lineitem lands in a Delta table
     range-sorted on ``l_orderkey`` whose adds carry per-file
     minValues/maxValues in the LOG; a point lookup then prunes to the
     ONE file whose recorded range covers the key — asserted in-key via
@@ -519,15 +520,16 @@ def scan_delta_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scan_iceberg_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ICEBERG SCAN PLANNING on column bounds (spec §manifests
-    lower_bounds/upper_bounds — iceberg_writer._file_bounds +
-    read_iceberg(stats_filter=...)): manifest entries carry per-column
-    value bounds folded from the parquet footers at write time, so a
-    point lookup on a range-sorted column prunes to ONE file from the
-    manifest alone — asserted in-key via inputFiles.  Completes the
-    stats-skipping symmetry with Delta (scan_delta_stats_pruned): at
-    100 TB both planners schedule single-file scans from KB-sized
-    metadata.  Probe key computed from the data, so the hash holds at
-    every sf."""
+    lower_bounds/upper_bounds — iceberg_writer._data_file_entry over
+    the shared footer fold parquet_stats.footer_stats +
+    read_iceberg(stats_filter=...) through parquet_stats.may_match):
+    manifest entries carry per-column value bounds folded from the
+    parquet footers at write time, so a point lookup on a range-sorted
+    column prunes to ONE file from the manifest alone — asserted
+    in-key via inputFiles. Completes the stats-skipping symmetry with
+    Delta (scan_delta_stats_pruned): at 100 TB both planners schedule
+    single-file scans from KB-sized metadata. Probe key computed from
+    the data, so the hash holds at every sf."""
     from datafusion_catalogprovider_glue_spark.sources.iceberg import (
         read_iceberg,
     )
@@ -570,18 +572,20 @@ def scan_iceberg_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def scan_hudi_stats_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HUDI COLUMN-STATS DATA SKIPPING (hudi.index_hudi_column_stats +
-    read_hudi(stats_filter=...) — the metadata table's
-    ``column_stats`` partition, tech-specs §metadata-table; r9 verdict
-    item 5): lineitem lands as 8 file slices with DISJOINT l_orderkey
-    ranges (one range-bucketed append per slice), the column-stats
-    index folds each slice's footer [min,max,nulls] into one KB JSON
-    snapshot, and a point lookup prunes to the ONE slice whose
-    recorded range covers the key — asserted in-key via inputFiles —
-    without opening any parquet footer at plan time.  Completes the
-    trio's data-skipping symmetry (Delta B25 log stats, Iceberg B26
-    manifest bounds, Hudi r10 column_stats).  Probe key computed from
-    the data, so the hash holds at every sf."""
+    """HUDI COLUMN-STATS DATA SKIPPING (hudi.index_hudi_column_stats over
+    the shared footer fold parquet_stats.footer_stats +
+    read_hudi(stats_filter=...) through parquet_stats.may_match — the
+    metadata table's ``column_stats`` partition, tech-specs
+    §metadata-table; r9 verdict item 5): lineitem lands as 8 file
+    slices with DISJOINT l_orderkey ranges (one range-bucketed append
+    per slice), the column-stats index folds each slice's footer
+    [min,max,nulls] into one KB JSON snapshot, and a point lookup
+    prunes to the ONE slice whose recorded range covers the key —
+    asserted in-key via inputFiles — without opening any parquet
+    footer at plan time. Completes the trio's data-skipping symmetry
+    (Delta B25 log stats, Iceberg B26 manifest bounds, Hudi r10
+    column_stats). Probe key computed from the data, so the hash holds
+    at every sf."""
     from datafusion_catalogprovider_glue_spark.sources.hudi import (
         index_hudi_column_stats,
         read_hudi,

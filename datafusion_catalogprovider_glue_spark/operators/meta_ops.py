@@ -994,8 +994,6 @@ def sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     — row-level incremental consumers must not re-see these rows),
     and the new base files carry range-disjoint ``doc_id`` footer
     spans (the stats-pruning evidence the rewrite exists to buy)."""
-    import pyarrow.parquet as pq
-
     from datafusion_catalogprovider_glue_spark.errors import SparkError
     from datafusion_catalogprovider_glue_spark.sources.hudi import (
         read_hudi,
@@ -1004,6 +1002,9 @@ def sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         append_hudi,
         cluster_hudi,
         upsert_hudi,
+    )
+    from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+        footer_stats,
     )
 
     apply_engine_conf(spark)
@@ -1068,19 +1069,10 @@ def sink_hudi_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if len(new_files) != 2:
         raise SparkError(f"expected 2 clustered groups, got {new_files}")
-    spans = []
-    for f in new_files:
-        md = pq.read_metadata(os.path.join(table, f))
-        idx = md.schema.names.index("doc_id")
-        spans.append(
-            (
-                min(md.row_group(i).column(idx).statistics.min
-                    for i in range(md.num_row_groups)),
-                max(md.row_group(i).column(idx).statistics.max
-                    for i in range(md.num_row_groups)),
-            )
-        )
-    spans.sort()
+    spans = sorted(
+        footer_stats(os.path.join(table, f))[1]["doc_id"][:2]
+        for f in new_files
+    )
     if any(c <= b for (a, b), (c, d) in zip(spans, spans[1:])):
         raise SparkError(f"clustered groups overlap on doc_id: {spans}")
     return read_hudi(spark, table).select("doc_id", "lang", "n_chars")

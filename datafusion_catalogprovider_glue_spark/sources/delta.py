@@ -41,6 +41,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_catalogprovider_glue_spark.errors import DeltaError
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    may_match,
+)
 
 _LOG_DIR = "_delta_log"
 
@@ -713,26 +716,14 @@ def read_delta(
         }
         snap._dvs = {p: d for p, d in snap._dvs.items() if p in snap._active}
     if stats_filter:
-        def _survives(path: str) -> bool:
-            st = snap._stats.get(path)
-            if not st:
-                return True  # no stats recorded: keep (never mis-prune)
-            mins = st.get("minValues") or {}
-            maxs = st.get("maxValues") or {}
-            for col_name, want in stats_filter.items():
-                if col_name not in mins or col_name not in maxs:
-                    continue
-                lo, hi = (
-                    want if isinstance(want, (tuple, list)) else (want, want)
-                )
-                if (hi is not None and mins[col_name] > hi) or (
-                    lo is not None and maxs[col_name] < lo
-                ):
-                    return False
-            return True
+        def _bounds(path: str) -> tuple[dict, dict]:
+            # no stats recorded: kept (never mis-prune)
+            st = snap._stats.get(path) or {}
+            return st.get("minValues") or {}, st.get("maxValues") or {}
 
         snap._active = {
-            p: pv for p, pv in snap._active.items() if _survives(p)
+            p: pv for p, pv in snap._active.items()
+            if may_match(*_bounds(p), stats_filter)
         }
         snap._dvs = {p: d for p, d in snap._dvs.items() if p in snap._active}
     if not snap._active:

@@ -39,6 +39,9 @@ import time
 from pyspark.sql import DataFrame
 
 from datafusion_catalogprovider_glue_spark.errors import DeltaError
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    footer_stats,
+)
 
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
 # columnMapping requires the (2, 5) protocol per PROTOCOL.md
@@ -68,75 +71,21 @@ def _next_version(log_dir: str) -> int:
     return max(vs) + 1 if vs else 0
 
 
-def _num_records(path: str) -> int:
-    """Row count from the parquet FOOTER (no data pages touched) — the
-    per-file ``stats.numRecords`` every Delta writer records so that
-    DESCRIBE HISTORY and stats-based skipping work without scans."""
-    import pyarrow.parquet as pq
-
-    return int(pq.ParquetFile(path).metadata.num_rows)
-
-
-# stats minValues/maxValues are recorded for these parquet physical
-# types only — the ones whose footer statistics order matches Delta's
-# data-skipping semantics without truncation concerns (strings are
-# recorded as-is; real Delta truncates long ones, which only WIDENS
-# the range and never breaks pruning)
-_SKIP_TYPES = {"INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY"}
-
-
 def _file_stats(path: str) -> str:
     """The protocol's per-add ``stats`` JSON string: numRecords plus
-    per-column minValues/maxValues/nullCount folded over the file's
-    ROW-GROUP footer statistics (metadata-only — no data pages).
+    per-column minValues/maxValues/nullCount from the shared footer
+    fold (sources/parquet_stats.py — metadata-only, no data pages).
     These are what ``read_delta``'s stats_filter prunes on: at 100 TB
     a point lookup on a sorted/z-ordered column skips every
     non-matching file from the LOG alone, without even opening the
     parquet footers at read time."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    # a column with ANY row group lacking usable min/max must record
-    # no range at all — a partial fold would understate the file's
-    # true range and stats_filter would wrongly SKIP a file containing
-    # matching rows (the "conservatively kept" contract)
-    partial: set = set()
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name or col.physical_type not in _SKIP_TYPES:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                partial.add(name)
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    partial.add(name)
-                    continue  # binary column: no JSON-safe stats
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-    for name in partial:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-        nulls.pop(name, None)
+    n, stats = footer_stats(path)
     return json.dumps(
         {
-            "numRecords": int(md.num_rows),
-            "minValues": mins,
-            "maxValues": maxs,
-            "nullCount": nulls,
+            "numRecords": n,
+            "minValues": {c: s[0] for c, s in stats.items()},
+            "maxValues": {c: s[1] for c, s in stats.items()},
+            "nullCount": {c: s[2] for c, s in stats.items()},
         },
         sort_keys=True,
     )

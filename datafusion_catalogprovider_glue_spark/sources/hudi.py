@@ -39,6 +39,10 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_catalogprovider_glue_spark.errors import SparkError
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    footer_stats,
+    may_match,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -273,61 +277,15 @@ def _latest_files_index(
 _COL_STATS_DIR = os.path.join(".hoodie", "metadata", "col_stats")
 
 
-def _footer_bounds(path: str) -> dict[str, list]:
-    """{column: [min, max, null_count]} folded over one parquet file's
-    row-group footer statistics — KB of metadata per file, read ONCE
-    at index time.  A column with any stats-less or binary-opaque row
-    group records nothing (a partial fold understates the true range
-    and pruning would wrongly skip matching rows)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    lows: dict = {}
-    highs: dict = {}
-    nulls: dict = {}
-    partial: set = set()
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                partial.add(name)
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    partial.add(name)
-                    continue
-            if not isinstance(lo, (int, float, str, bool)):
-                # non-JSON-portable statistics (timestamps, decimals):
-                # skip rather than store a lossy representation
-                partial.add(name)
-                continue
-            nulls[name] = nulls.get(name, 0) + (st.null_count or 0)
-            if name not in lows or lo < lows[name]:
-                lows[name] = lo
-            if name not in highs or hi > highs[name]:
-                highs[name] = hi
-    return {
-        name: [lows[name], highs[name], nulls.get(name, 0)]
-        for name in lows
-        if name in highs and name not in partial
-    }
-
-
 def index_hudi_column_stats(location: str) -> str:
     """Build the COLUMN-STATS INDEX — the engine's analog of Hudi's
     metadata table ``column_stats`` partition (tech-specs
     §metadata-table, the index ``hoodie.metadata.index.column.stats.
-    enable`` maintains): per live file slice, per primitive column,
-    [min, max, null_count] folded from the parquet footers, stored as
-    one KB-sized JSON snapshot under ``.hoodie/metadata/col_stats/``.
+    enable`` maintains): per live file slice, per numeric or string
+    column, [min, max, null_count] folded from the parquet footers
+    (sources/parquet_stats.py, the fold Delta's add stats and
+    Iceberg's manifest bounds use), stored as one KB-sized JSON
+    snapshot under ``.hoodie/metadata/col_stats/``.
     ``read_hudi(stats_filter=...)`` then prunes file slices from the
     INDEX without opening any footer — Delta B25 / Iceberg B26's data
     skipping, completing the trio.
@@ -360,7 +318,7 @@ def index_hudi_column_stats(location: str) -> str:
         if rel in prev_by_rel:
             stats[fid] = prev_by_rel[rel]  # same file bytes: reuse
         else:
-            stats[fid] = _footer_bounds(os.path.join(location, rel))
+            stats[fid] = footer_stats(os.path.join(location, rel))[1]
     idx_dir = os.path.join(location, _COL_STATS_DIR)
     os.makedirs(idx_dir, exist_ok=True)
     out = os.path.join(idx_dir, f"{instant}.colstats.json")
@@ -506,25 +464,18 @@ def read_hudi(
             )
         _instant, stats, _rels = idx
 
-        def _survives(fid: str) -> bool:
-            st = stats.get(fid)
-            if st is None:
-                return True  # newer than the index: keep
-            for col, want in stats_filter.items():
-                if col not in st:
-                    continue  # no recorded bounds: keep
-                rec_lo, rec_hi, _n = st[col]
-                lo, hi = (
-                    want if isinstance(want, (tuple, list))
-                    else (want, want)
-                )
-                if (hi is not None and rec_lo > hi) or (
-                    lo is not None and rec_hi < lo
-                ):
-                    return False
-            return True
+        def _bounds(fid: str) -> tuple[dict, dict]:
+            # a slice newer than the index has no entry: kept
+            st = stats.get(fid, {})
+            return (
+                {c: b[0] for c, b in st.items()},
+                {c: b[1] for c, b in st.items()},
+            )
 
-        latest = {f: pr for f, pr in latest.items() if _survives(f)}
+        latest = {
+            f: pr for f, pr in latest.items()
+            if may_match(*_bounds(f), stats_filter)
+        }
     if partition_filter:
         pf = table_partition_field(location)
         unknown = set(partition_filter) - ({pf} if pf else set())

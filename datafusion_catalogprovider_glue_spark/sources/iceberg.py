@@ -50,6 +50,9 @@ from datafusion_catalogprovider_glue_spark.errors import NotImplementedYet
 from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
     decode_container_file,
 )
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    may_match,
+)
 
 _ICEBERG_TO_SPARK = {
     "boolean": T.BooleanType(),
@@ -444,24 +447,10 @@ def read_iceberg(
         # spec scan planning: a file whose recorded range cannot
         # intersect the filter is skipped without being opened; files
         # without bounds are KEPT (always result-preserving)
-        def _survives(path: str) -> bool:
-            b = snap.bounds.get(path)
-            if not b:
-                return True
-            lows, highs = b
-            for col_name, want in stats_filter.items():
-                if col_name not in lows or col_name not in highs:
-                    continue
-                lo, hi = (
-                    want if isinstance(want, (tuple, list)) else (want, want)
-                )
-                if (hi is not None and lows[col_name] > hi) or (
-                    lo is not None and highs[col_name] < lo
-                ):
-                    return False
-            return True
-
-        files = [f for f in files if _survives(f)]
+        files = [
+            f for f in files
+            if may_match(*snap.bounds.get(f, ({}, {})), stats_filter)
+        ]
     if partition_filter:
         # manifest-level pruning: filter keys are SOURCE column values;
         # each folds through the table's partition-spec transform

@@ -51,6 +51,9 @@ from datafusion_catalogprovider_glue_spark.errors import NotImplementedYet
 from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
     write_avro_container,
 )
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    footer_stats,
+)
 
 _SPARK_TO_ICEBERG = {
     "boolean": "boolean",
@@ -163,48 +166,19 @@ def _snapshot_id(seq: int) -> int:
     return int.from_bytes(h[:8], "big") & 0x7FFFFFFFFFFFFFFF
 
 
-_BOUND_TYPES = {"INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY"}
-
-
-def _file_bounds(path: str) -> tuple:
-    """(lower_bounds_json, upper_bounds_json) folded over a parquet
-    file's row-group footer statistics — metadata-only, the write-time
-    cost of making every later scan plan prunable."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    lows: dict = {}
-    highs: dict = {}
-    # a column with ANY stats-less row group records no bounds at all:
-    # a partial fold understates the file's true range and bounds
-    # pruning would wrongly skip a file containing matching rows
-    partial: set = set()
-    for rg in range(md.num_row_groups):
-        row_group = md.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if "." in name or col.physical_type not in _BOUND_TYPES:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                partial.add(name)
-                continue
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                try:
-                    lo, hi = lo.decode(), hi.decode()
-                except UnicodeDecodeError:
-                    partial.add(name)
-                    continue
-            if name not in lows or lo < lows[name]:
-                lows[name] = lo
-            if name not in highs or hi > highs[name]:
-                highs[name] = hi
-    for name in partial:
-        lows.pop(name, None)
-        highs.pop(name, None)
+def _data_file_entry(rel: str, full: str, partition) -> tuple:
+    """(relative path, row count, partition, lower_bounds_json,
+    upper_bounds_json) for one written data file — the row count and
+    the bounds come from one read of its footer (the shared fold,
+    sources/parquet_stats.py), the write-time cost of making every
+    later scan plan prunable."""
+    n, stats = footer_stats(full)
+    lows = {c: s[0] for c, s in stats.items()}
+    highs = {c: s[1] for c, s in stats.items()}
     return (
+        rel,
+        n,
+        partition,
         json.dumps(lows, sort_keys=True) if lows else None,
         json.dumps(highs, sort_keys=True) if highs else None,
     )
@@ -238,13 +212,10 @@ def _load_meta(meta_dir: str) -> tuple[int, dict]:
 
 def _write_data_files(
     df: DataFrame, table_path: str, seq: int, n_files: int
-) -> list[tuple[str, int, None]]:
+) -> list[tuple]:
     """Distributed parquet write under ``data/commit-<seq>/``; returns
-    (relative path, row count, partition) per file from the driver-side
-    listing.  Per-file row counts come from the parquet FOOTERS
-    (metadata reads, no data scan)."""
-    import pyarrow.parquet as pq
-
+    one ``_data_file_entry`` per file from the driver-side listing
+    (footer reads, no data scan)."""
     subdir = f"data/commit-{seq}"
     out_dir = os.path.join(table_path, subdir)
     df.coalesce(n_files).write.mode("overwrite").parquet(out_dir)
@@ -257,10 +228,7 @@ def _write_data_files(
         final = f"part-{i:05d}.parquet"
         os.rename(os.path.join(out_dir, name), os.path.join(out_dir, final))
         full = os.path.join(out_dir, final)
-        out.append(
-            (f"{subdir}/{final}", pq.read_metadata(full).num_rows, None)
-            + _file_bounds(full)
-        )
+        out.append(_data_file_entry(f"{subdir}/{final}", full, None))
     return out
 
 
@@ -282,7 +250,7 @@ def _write_partitioned_files(
     seq: int,
     partition_by,
     transform: str = "identity",
-) -> list[tuple[str, int, dict]]:
+) -> list[tuple]:
     """Partitioned write under one or more TRANSFORM fields (spec
     §partition-transforms; identity / bucket[N] / truncate[W] / year /
     month / day / hour — sources/iceberg_transforms.py): one
@@ -293,7 +261,6 @@ def _write_partitioned_files(
     directory tree and stamps each manifest entry with its full
     partition tuple — the metadata Iceberg planners prune on without
     opening files."""
-    import pyarrow.parquet as pq
     from urllib.parse import unquote
 
     from datafusion_catalogprovider_glue_spark.sources.iceberg_transforms import (
@@ -349,15 +316,13 @@ def _write_partitioned_files(
             final = f"part-{i:05d}.parquet"
             os.rename(os.path.join(root, name), os.path.join(root, final))
             full = os.path.join(root, final)
+            # the partition tuple is keyed by PARTITION FIELD names
+            # (spec naming: ts_day, k_bucket, …; == the column for
+            # identity)
             out.append(
-                (
-                    f"{subdir}/{rel_dir}/{final}",
-                    pq.read_metadata(full).num_rows,
-                    # keyed by PARTITION FIELD names (spec naming:
-                    # ts_day, k_bucket, …; == the column for identity)
-                    dict(tup),
+                _data_file_entry(
+                    f"{subdir}/{rel_dir}/{final}", full, dict(tup)
                 )
-                + _file_bounds(full)
             )
     return out
 

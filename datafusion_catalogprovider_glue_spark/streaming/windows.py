@@ -665,7 +665,6 @@ def stream_upsert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_delta,
     )
 
-    raw_schema = events_raw_ddl(sf_dir)
     base = _os.path.join(
         "/tmp",
         f"glue_spark_upsdelta_{_hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
@@ -676,9 +675,7 @@ def stream_upsert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _shutil.rmtree(base)  # fresh run: the sink is the thing under test
     _os.makedirs(stream_dir)
     # three source chunks -> three micro-batches (maxFilesPerTrigger=1)
-    events = ensure_micros_ts(
-        spark.read.schema(raw_schema).parquet(table_path(sf_dir, "events"))
-    )
+    events = load_table(spark, sf_dir, "events")
     for i in range(3):
         staging = _os.path.join(base, f"_chunk{i}")
         events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
@@ -729,12 +726,13 @@ def stream_upsert_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 matched_update=newer, txn=(app_id, batch_id),
             )
 
-    stream = spark.readStream.schema(raw_schema).option(
+    # the chunks hold the rebuilt µs ts: stream them back with the
+    # schema they were written with, not the raw file's
+    stream = spark.readStream.schema(events.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(stream_dir)
     q = (
-        ensure_micros_ts(stream)
-        .writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", _os.path.join(base, "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -791,7 +789,6 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_iceberg,
     )
 
-    raw_schema = events_raw_ddl(sf_dir)
     base = _os.path.join(
         "/tmp",
         f"glue_spark_upsice_{_hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
@@ -801,9 +798,7 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _os.path.exists(base):
         _shutil.rmtree(base)  # fresh run: the sink is the thing under test
     _os.makedirs(stream_dir)
-    events = ensure_micros_ts(
-        spark.read.schema(raw_schema).parquet(table_path(sf_dir, "events"))
-    )
+    events = load_table(spark, sf_dir, "events")
     for i in range(3):
         staging = _os.path.join(base, f"_chunk{i}")
         events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
@@ -862,12 +857,13 @@ def stream_upsert_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 matched_update=newer, summary_extra=extra,
             )
 
-    stream = spark.readStream.schema(raw_schema).option(
+    # the chunks hold the rebuilt µs ts: stream them back with the
+    # schema they were written with, not the raw file's
+    stream = spark.readStream.schema(events.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(stream_dir)
     q = (
-        ensure_micros_ts(stream)
-        .writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", _os.path.join(base, "ckpt"))
         .trigger(availableNow=True)
         .start()
@@ -938,7 +934,6 @@ def stream_upsert_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_hudi_log,
     )
 
-    raw_schema = events_raw_ddl(sf_dir)
     base = _os.path.join(
         "/tmp",
         f"glue_spark_upshudi_{_hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
@@ -948,9 +943,7 @@ def stream_upsert_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _os.path.exists(base):
         _shutil.rmtree(base)  # fresh run: the sink is the thing under test
     _os.makedirs(stream_dir)
-    events = ensure_micros_ts(
-        spark.read.schema(raw_schema).parquet(table_path(sf_dir, "events"))
-    )
+    events = load_table(spark, sf_dir, "events")
     for i in range(3):
         staging = _os.path.join(base, f"_chunk{i}")
         events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
@@ -1014,12 +1007,13 @@ def stream_upsert_hudi(spark: SparkSession, sf_dir: str) -> DataFrame:
             upsert_hudi_log(spark, newer, table_dir, key="user_id",
                             extra_metadata=extra)
 
-    stream = spark.readStream.schema(raw_schema).option(
+    # the chunks hold the rebuilt µs ts: stream them back with the
+    # schema they were written with, not the raw file's
+    stream = spark.readStream.schema(events.schema).option(
         "maxFilesPerTrigger", "1"
     ).parquet(stream_dir)
     q = (
-        ensure_micros_ts(stream)
-        .writeStream.foreachBatch(_merge)
+        stream.writeStream.foreachBatch(_merge)
         .option("checkpointLocation", _os.path.join(base, "ckpt"))
         .trigger(availableNow=True)
         .start()

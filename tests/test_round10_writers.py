@@ -119,13 +119,13 @@ def test_hudi_stats_index_is_incremental(spark, tmp_path, monkeypatch):
         spark.createDataFrame([(2, 2)], "k long, v long"), table, n_groups=1
     )
     calls = []
-    real = hudi_mod._footer_bounds
+    real = hudi_mod.footer_stats
 
     def counting(path):
         calls.append(path)
         return real(path)
 
-    monkeypatch.setattr(hudi_mod, "_footer_bounds", counting)
+    monkeypatch.setattr(hudi_mod, "footer_stats", counting)
     hudi_mod.index_hudi_column_stats(table)
     assert len(calls) == 1, calls  # only the new slice's footer opened
 
