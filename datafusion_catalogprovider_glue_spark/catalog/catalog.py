@@ -287,8 +287,6 @@ class GlueCatalog:
         # created under _flights_lock
         self._flights: dict[tuple[str, str], threading.Lock] = {}
         self._flights_lock = threading.Lock()
-        # {format: whether the JVM resolves it}, see _has_jvm_source
-        self._jvm_sources: dict[str, bool] = {}
 
     # -- naming -----------------------------------------------------------
     def view_name(self, database: str, table: str) -> str:
@@ -865,12 +863,16 @@ class GlueCatalog:
 
     def _has_jvm_source(self, fmt: str) -> bool:
         """Whether the session's JVM resolves the data source ``fmt``,
-        looked up once per catalog: registration then takes one reader
-        per format instead of throwing a failed load per table."""
+        looked up once per SparkContext (whose JVM classpath fixes the
+        answer) and cached on it, like ``session._ship_package``'s flag:
+        registration then takes one reader per format instead of
+        throwing a failed load per table, and a new catalog on the same
+        session repeats no failed lookup."""
         with self._flights_lock:
-            if fmt not in self._jvm_sources:
-                self._jvm_sources[fmt] = _jvm_has_source(self.spark, fmt)
-            return self._jvm_sources[fmt]
+            known = vars(self.spark.sparkContext).setdefault("_dcg_jvm_sources", {})
+            if fmt not in known:
+                known[fmt] = _jvm_has_source(self.spark, fmt)
+            return known[fmt]
 
     @staticmethod
     def _nano_columns(spec, probe: str) -> set[str]:

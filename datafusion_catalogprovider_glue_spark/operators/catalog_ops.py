@@ -1478,7 +1478,7 @@ def scan_delta_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference reads DV tables through the deltalake crate
     (glue.rs:214-240); this path implements the same protocol subset
     natively.  Scale shape: descriptors parallelize and decode
-    executor-side (sources/delta.py _deleted_rows_df), the decoded
+    executor-side (sources/delta.py _dv_rows), the decoded
     (file, row_index) set broadcasts into ONE left-anti join against
     the scan's ``_metadata`` struct — the Iceberg positional-delete
     plan, reused."""
@@ -4945,7 +4945,7 @@ def sink_delta_merge_dv_partitioned(
     over a lang-partitioned table.  Merge 2 runs against a table that
     ALREADY carries DVs, exercising the executor-side existing-DV
     decode + per-file union (sources/delta_writer.py:merge_delta_dv →
-    delta.py:_scan_with_identity/_deleted_rows_df).  Asserted in-key:
+    delta.py:_live_rows/_dv_rows).  Asserted in-key:
     every pre-merge-2 data file is byte-identical after merge 2 (DV
     sidecars, no rewrites), both commits carry DV descriptors,
     updated/inserted rows land under their lang partition, and a
@@ -5042,7 +5042,7 @@ def scan_delta_column_mapping_id(
     fixture stores the physical columns in REVERSED order with
     shuffled names, so a positional or name-based bind would swap
     every column — the hash match proves the id resolution
-    (sources/delta.py:physical_schema_by_id)."""
+    (sources/delta.py:DeltaSnapshot.physical_names)."""
     import json
     import os
 
@@ -6030,7 +6030,7 @@ def sink_iceberg_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical after both merges, both snapshots carry delete
     files, and time travel to the pre-merge snapshot still serves the
     original rows.  The replay goes through the engine's own
-    seq-scoped pos-delete reader (sources/iceberg.py:440)."""
+    seq-scoped pos-delete reader (sources/iceberg.py:_scan)."""
     import hashlib
     import os
     import shutil

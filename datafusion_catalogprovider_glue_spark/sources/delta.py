@@ -22,11 +22,14 @@ latest-only — including DELETION VECTORS (sources/dv.py codec; rows
 masked via one broadcast (file, row_index) anti join against the
 scan's ``_metadata`` struct).  Log parsing is driver-side metadata work
 (KBs; the reference does the same); the data read is a normal
-distributed parquet scan.  Partitioned tables are read per partition
-group with the partition values attached as literal columns — at
-100 TB you'd instead converge on delta-spark proper, which pushes
-partition pruning into the log; the capability boundary is documented,
-not hidden.
+distributed parquet scan.  Every read of data files — the snapshot
+reader, the change feeds and the writers' identity scan — goes through
+one function, ``_scan``, which decides the column binding (column
+mapping), the partition literals and the deletion-vector mask.
+Partitioned tables are read per partition group with the partition
+values attached as literal columns — at 100 TB you'd instead converge
+on delta-spark proper, which pushes partition pruning into the log;
+the capability boundary is documented, not hidden.
 """
 
 from __future__ import annotations
@@ -41,6 +44,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_catalogprovider_glue_spark.errors import DeltaError
+from datafusion_catalogprovider_glue_spark.sources.object_store import (
+    file_path_col,
+    norm_file_path,
+)
 from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
     may_match,
 )
@@ -436,176 +443,186 @@ class DeltaSnapshot:
     def column_mapping_mode(self) -> str:
         return self.configuration.get("delta.columnMapping.mode", "none")
 
-    def physical_schema(self) -> T.StructType:
-        """Schema under PHYSICAL column names (columnMapping name mode:
-        each logical field's metadata carries
-        delta.columnMapping.physicalName — the name actually written in
-        the parquet footers)."""
-        fields = []
+    def physical_names(self, files: list[str]) -> list[str]:
+        """The parquet column each schema field is written under in
+        ``files``: the field's own name without column mapping; its
+        ``delta.columnMapping.physicalName`` in name mode; in id mode
+        (the default of current Delta writers), the footer column whose
+        ``PARQUET:field_id`` is the field's ``delta.columnMapping.id``.
+        Id mode opens each footer once (metadata-sized, driver-side),
+        and ``files`` must agree on their field-id binding — a mix of
+        files written across renames is refused rather than mis-bound."""
+        mode = self.column_mapping_mode
+        if mode == "none":
+            return self.schema.names
+        key, label = {
+            "name": ("delta.columnMapping.physicalName", "physicalName"),
+            "id": ("delta.columnMapping.id", "delta.columnMapping.id"),
+        }[mode]
+        wanted = []
         for f in self.schema.fields:
-            phys = (f.metadata or {}).get("delta.columnMapping.physicalName")
-            if not phys:
+            value = (f.metadata or {}).get(key)
+            if value in (None, ""):
                 raise DeltaError(
-                    f"columnMapping.mode=name but field {f.name!r} has "
-                    "no physicalName metadata"
+                    f"columnMapping.mode={mode} but field {f.name!r} has "
+                    f"no {label} metadata"
                 )
-            fields.append(T.StructField(phys, f.dataType, f.nullable))
-        return T.StructType(fields)
-
-    def physical_schema_by_id(self) -> T.StructType:
-        """Schema under PHYSICAL column names resolved by PARQUET FIELD
-        ID (columnMapping id mode — the default for tables created by
-        current Delta writers): each logical field's
-        ``delta.columnMapping.id`` matches the ``PARQUET:field_id``
-        footer metadata of exactly one physical column.  One footer
-        READ (metadata-sized, driver-side) binds the mapping; every
-        active file must agree on its physical column set — a
-        heterogeneous mix (files written across renames) is refused
-        rather than mis-bound."""
+            wanted.append(value)
+        if mode == "name":
+            return wanted
         import pyarrow.parquet as pq
 
-        def _id_map(path: str) -> dict[int, str]:
-            out = {}
-            for fld in pq.read_schema(path):
-                md = fld.metadata or {}
-                fid = md.get(b"PARQUET:field_id")
-                if fid is not None:
-                    out[int(fid)] = fld.name
-            return out
-
-        first = _id_map(self.files[0])
-        for other in self.files[1:]:
-            if _id_map(other) != first:
-                raise DeltaError(
-                    "columnMapping.mode=id subset: data files disagree "
-                    "on their field-id → column binding"
-                )
-        fields = []
-        for f in self.schema.fields:
-            cid = (f.metadata or {}).get("delta.columnMapping.id")
-            if cid is None:
-                raise DeltaError(
-                    f"columnMapping.mode=id but field {f.name!r} has "
-                    "no delta.columnMapping.id metadata"
-                )
-            phys = first.get(int(cid))
-            if phys is None:
+        bindings = [
+            {
+                int(fld.metadata[b"PARQUET:field_id"]): fld.name
+                for fld in pq.read_schema(path)
+                if b"PARQUET:field_id" in (fld.metadata or {})
+            }
+            for path in files
+        ]
+        if any(b != bindings[0] for b in bindings[1:]):
+            raise DeltaError(
+                "columnMapping.mode=id subset: data files disagree "
+                "on their field-id → column binding"
+            )
+        names = []
+        for f, cid in zip(self.schema.fields, wanted):
+            if int(cid) not in bindings[0]:
                 raise DeltaError(
                     f"no physical column carries field id {cid} "
                     f"for logical field {f.name!r}"
                 )
-            fields.append(T.StructField(phys, f.dataType, f.nullable))
-        return T.StructType(fields)
+            names.append(bindings[0][int(cid)])
+        return names
 
 
-_SCHEME_RE = r"^[a-z][a-z0-9+.\-]*:/+"
-
-
-def _norm_path(col):
-    """Collapse any URI scheme prefix (file:/, file:///, s3a://…) to a
-    single leading "/" so `_metadata.file_path` and log-derived paths
-    agree — same normalization as the Iceberg delete join."""
-    return F.regexp_replace(col, _SCHEME_RE, "/")
-
-
-def _deleted_rows_df(spark: SparkSession, snap: "DeltaSnapshot") -> DataFrame:
-    """Decode every active deletion vector into a (file, row_index)
-    DataFrame — EXECUTOR-side via mapInPandas: the descriptors
-    (KB-sized metadata) parallelize, each sidecar is read and
-    unpacked where the task runs, and the driver never holds the
-    expanded row-index set.  At 100 TB the result is the small side
-    of a broadcast anti join, exactly like Iceberg positional
-    deletes."""
-    import json as _json
-
+def _dv_rows(
+    spark: SparkSession, snap: "DeltaSnapshot", dvs: list[tuple]
+) -> DataFrame:
+    """``(_file, _pos)`` of the rows deletion vectors mask: each
+    ``(path, new, old)`` entry yields the positions in descriptor
+    ``new`` but not in ``old`` (None: no positions).  The descriptors
+    (KB-sized metadata) parallelize and each sidecar is read and
+    unpacked EXECUTOR-side via mapInPandas, so the driver never holds
+    an expanded row-index set; the result is the small side of a
+    broadcast join against :func:`_scan`'s row identity."""
     from datafusion_catalogprovider_glue_spark.sources.dv import read_dv
 
     table_root = snap.table_path
-    descs = [
-        (
-            os.path.abspath(os.path.join(table_root, p)),
-            _json.dumps(dv),
-        )
-        for p, dv in sorted(snap._dvs.items())
-    ]
-    desc_df = spark.createDataFrame(descs, "_dv_file string, _dv_desc string")
+    desc_df = spark.createDataFrame(
+        [
+            (
+                norm_file_path(p, table_root),
+                json.dumps(new) if new else None,
+                json.dumps(old) if old else None,
+            )
+            for p, new, old in dvs
+        ],
+        "_file string, _new string, _old string",
+    )
 
-    def _explode(batches):
+    def _expand(batches):
         import pandas as pd
 
+        def positions(desc):
+            return set(read_dv(table_root, json.loads(desc))) if desc else set()
+
         for pdf in batches:
-            files, positions = [], []
-            for fpath, dv_json in zip(pdf["_dv_file"], pdf["_dv_desc"]):
-                for ri in read_dv(table_root, _json.loads(dv_json)):
+            files, pos = [], []
+            for fpath, new, old in zip(pdf["_file"], pdf["_new"], pdf["_old"]):
+                for ri in sorted(positions(new) - positions(old)):
                     files.append(fpath)
-                    positions.append(ri)
-            yield pd.DataFrame({"_dv_file": pd.Series(files, dtype="object"),
-                                "_dv_pos": pd.Series(positions, dtype="int64")})
+                    pos.append(ri)
+            yield pd.DataFrame({"_file": pd.Series(files, dtype="object"),
+                                "_pos": pd.Series(pos, dtype="int64")})
 
-    return desc_df.mapInPandas(_explode, "_dv_file string, _dv_pos long")
+    return desc_df.mapInPandas(_expand, "_file string, _pos long")
 
 
-def _scan_with_identity(
-    spark: SparkSession, snap: "DeltaSnapshot", apply_dvs: bool = True
+def _scan(
+    spark: SparkSession,
+    snap: "DeltaSnapshot",
+    files: list[tuple[str, dict]],
+    identity: bool = False,
+    dvs: Optional[list[tuple]] = None,
+    masked: bool = False,
 ) -> DataFrame:
-    """Snapshot scan that RETAINS physical row identity: the logical
-    columns plus ``_file`` (normalized path) and ``_pos``
-    (``_metadata.row_index``), partition columns re-attached from the
-    log per protocol, and — with ``apply_dvs`` — rows masked by
-    existing deletion vectors anti-joined out, decoded EXECUTOR-side
-    (:func:`_deleted_rows_df`).  merge_delta_dv addresses the rows it
-    masks through exactly this frame, so the driver never holds a
-    row-index set ∝ the table's accumulated deletes."""
-    if snap.column_mapping:
+    """The one scan of Delta data files: the snapshot's active files,
+    a change-feed chunk or an incremental range's adds, given as
+    ``(path, partitionValues)`` pairs, under ``snap``'s logical schema.
+
+    Files group by partition tuple; each group is one multi-file
+    parquet read under the data schema with the partition values
+    attached as typed literals (data files exclude partition columns,
+    per protocol).  A column-mapped table reads under the physical
+    names of :meth:`DeltaSnapshot.physical_names` and renames back in
+    the same projection, so the rename folds into the scan's
+    ReadSchema.  ``identity`` keeps each row's ``_file`` (normalized
+    path) and ``_pos`` (``_metadata.row_index``).  ``dvs`` (see
+    :func:`_dv_rows`) applies deletion vectors through one broadcast
+    join on that identity: the rows they mask are dropped, or, with
+    ``masked``, are the only rows kept."""
+    part_cols = snap.partition_columns
+    if snap.column_mapping and part_cols:
         raise DeltaError(
-            "identity scan subset: columnMapping tables not supported"
+            "delta reader subset: columnMapping with partition "
+            "columns is not supported"
         )
-    data_fields = [
-        f for f in snap.schema.fields if f.name not in snap.partition_columns
-    ]
-    data_schema = T.StructType(data_fields)
+    paths = [os.path.join(snap.table_path, p) for p, _pv in files]
+    phys = dict(zip(snap.schema.names, snap.physical_names(paths)))
+    read_schema = T.StructType(
+        [
+            T.StructField(phys[f.name], f.dataType, f.nullable)
+            for f in snap.schema.fields
+            if f.name not in part_cols
+        ]
+    )
     meta = [
-        _norm_path(F.col("_metadata.file_path")).alias("_file"),
+        file_path_col(F.col("_metadata.file_path")).alias("_file"),
         F.col("_metadata.row_index").alias("_pos"),
-    ]
-    if not snap.partition_columns:
-        out = spark.read.schema(data_schema).parquet(*snap.files).select(
-            *[F.col(f.name) for f in data_fields], *meta
+    ] if identity or dvs else []
+    groups: dict[tuple, list[str]] = {}
+    for (_p, pvals), path in zip(files, paths):
+        key = tuple((pvals or {}).get(c) for c in part_cols)
+        groups.setdefault(key, []).append(path)
+    out = None
+    # None-safe deterministic order (NULL partitions sort first)
+    for key, group in sorted(
+        groups.items(),
+        key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
+    ):
+        lits = dict(zip(part_cols, key))
+        cols = [
+            (
+                F.lit(lits[f.name]).cast(f.dataType)
+                if f.name in lits
+                else F.col(phys[f.name])
+            ).alias(f.name)
+            for f in snap.schema.fields
+        ]
+        df = spark.read.schema(read_schema).parquet(*group).select(*cols, *meta)
+        out = df if out is None else out.unionByName(df)
+    if dvs:
+        out = out.join(
+            F.broadcast(_dv_rows(spark, snap, dvs)),
+            ["_file", "_pos"],
+            "semi" if masked else "left_anti",
         )
-    else:
-        groups: dict[tuple, list[str]] = {}
-        for path, pvals in snap._active.items():
-            key = tuple(pvals.get(c) for c in snap.partition_columns)
-            groups.setdefault(key, []).append(
-                os.path.join(snap.table_path, path)
-            )
-        by_name = {f.name: f.dataType for f in snap.schema.fields}
-        parts = []
-        for key, files in sorted(
-            groups.items(),
-            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
-        ):
-            df = spark.read.schema(data_schema).parquet(*files)
-            for col_name, raw in zip(snap.partition_columns, key):
-                df = df.withColumn(
-                    col_name, F.lit(raw).cast(by_name[col_name])
-                )
-            parts.append(
-                df.select(
-                    *[F.col(f.name) for f in snap.schema.fields], *meta
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-    if apply_dvs and snap._dvs:
-        deleted = (
-            _deleted_rows_df(spark, snap)
-            .withColumnRenamed("_dv_file", "_file")
-            .withColumnRenamed("_dv_pos", "_pos")
-        )
-        out = out.join(F.broadcast(deleted), ["_file", "_pos"], "left_anti")
+        if not identity:
+            out = out.drop("_file", "_pos")
     return out
+
+
+def _live_rows(
+    spark: SparkSession, snap: "DeltaSnapshot", identity: bool = False
+) -> DataFrame:
+    """The snapshot's live rows: every active file through
+    :func:`_scan`, with the rows its deletion vectors mask dropped —
+    what readers, compactions and merges all start from."""
+    return _scan(
+        spark, snap, sorted(snap._active.items()), identity,
+        [(p, dv, None) for p, dv in sorted(snap._dvs.items())],
+    )
 
 
 def delta_version_at_timestamp(table_path: str, timestamp_ms: int) -> int:
@@ -728,95 +745,7 @@ def read_delta(
         snap._dvs = {p: d for p, d in snap._dvs.items() if p in snap._active}
     if not snap._active:
         return spark.createDataFrame([], snap.schema)
-    has_dv = bool(snap._dvs)
-
-    def _with_meta(df: DataFrame, names: list) -> DataFrame:
-        # names: (source column expr, output name) pairs for the
-        # logical projection; meta columns ride along only on the DV
-        # path
-        cols = [expr.alias(n) for expr, n in names]
-        if has_dv:
-            cols += [
-                _norm_path(F.col("_metadata.file_path")).alias("_dv_file"),
-                F.col("_metadata.row_index").alias("_dv_pos"),
-            ]
-        return df.select(*cols)
-
-    if snap.column_mapping:
-        # column mapping: scan under physical names, project back to
-        # logical names — a pure metadata rename, zero cost in the
-        # executed plan (Catalyst collapses the alias into the scan's
-        # ReadSchema).  name mode binds by physicalName metadata; id
-        # mode binds by parquet footer field ids.
-        if snap.partition_columns:
-            raise DeltaError(
-                "delta reader subset: columnMapping with partition "
-                "columns is not supported"
-            )
-        phys = (
-            snap.physical_schema_by_id()
-            if snap.column_mapping_mode == "id"
-            else snap.physical_schema()
-        )
-        out = _with_meta(
-            spark.read.schema(phys).parquet(*snap.files),
-            [
-                (F.col(p.name), f.name)
-                for p, f in zip(phys.fields, snap.schema.fields)
-            ],
-        )
-    else:
-        data_fields = [
-            f for f in snap.schema.fields if f.name not in snap.partition_columns
-        ]
-        data_schema = T.StructType(data_fields)
-
-        if not snap.partition_columns:
-            out = _with_meta(
-                spark.read.schema(data_schema).parquet(*snap.files),
-                [(F.col(f.name), f.name) for f in data_fields],
-            )
-        else:
-            # group files by partition values; attach values as
-            # literal columns
-            groups: dict[tuple, list[str]] = {}
-            for path, pvals in snap._active.items():
-                key = tuple(pvals.get(c) for c in snap.partition_columns)
-                groups.setdefault(key, []).append(
-                    os.path.join(snap.table_path, path)
-                )
-            parts = []
-            by_name = {f.name: f.dataType for f in snap.schema.fields}
-            # None-safe deterministic order (NULL partitions sort first)
-            for key, files in sorted(
-                groups.items(),
-                key=lambda kv: tuple(
-                    (v is not None, v or "") for v in kv[0]
-                ),
-            ):
-                df = spark.read.schema(data_schema).parquet(*files)
-                for col_name, raw in zip(snap.partition_columns, key):
-                    # partitionValues are strings (or None) per
-                    # protocol; cast to the declared type like Delta
-                    # does
-                    df = df.withColumn(
-                        col_name, F.lit(raw).cast(by_name[col_name])
-                    )
-                parts.append(
-                    _with_meta(
-                        df, [(F.col(f.name), f.name) for f in snap.schema.fields]
-                    )
-                )
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-
-    if has_dv:
-        deleted = _deleted_rows_df(spark, snap)
-        out = out.join(
-            F.broadcast(deleted), ["_dv_file", "_dv_pos"], "left_anti"
-        ).drop("_dv_file", "_dv_pos")
-    return out
+    return _live_rows(spark, snap)
 
 
 def read_delta_cdf(
@@ -851,189 +780,27 @@ def read_delta_cdf(
     per change-type group with two literal columns attached; DV diffs
     travel as KB descriptors and expand where the tasks run — IO and
     shuffle stay ∝ change volume."""
-    log_dir = os.path.join(table_path, _LOG_DIR)
-    if not os.path.isdir(log_dir):
-        raise DeltaError(f"no {_LOG_DIR} at {table_path!r}")
-    # a to_version the table never reached is a caller error, not a
-    # cleanup problem — raise "not in log" BEFORE the missing-commit
-    # check below can misattribute it to cleaned-up commits
-    if to_version is not None:
-        _ckpt = _last_checkpoint(log_dir)
-        _latest = max(
-            [v for v, _p in _commit_files(log_dir)]
-            + [e for _s, e, _p in _compacted_files(log_dir)],
-            default=_ckpt if _ckpt is not None else -1,
-        )
-        if to_version > _latest:
-            raise DeltaError(
-                f"version {to_version} not in log (latest {_latest})"
-            )
+    commits = _feed_commits(table_path, to_version, "change data feed")
     # schema + partitioning from the snapshot machinery
     head = DeltaSnapshot(table_path, version=from_version)
-    snap_schema = head.schema
-    part_cols = head.partition_columns
-    type_of = {f.name: f.dataType for f in snap_schema.fields}
-    data_schema = T.StructType(
-        [f for f in snap_schema.fields if f.name not in part_cols]
+    change_schema = T.StructType(
+        head.schema.fields
+        + [T.StructField("_change_type", T.StringType(), True)]
     )
-
     parts: list[DataFrame] = []
 
-    def _scan_attached(path_pvals: list[tuple[str, dict]], keep_meta: bool):
-        """Scan files under the DATA schema, re-attaching partition
-        columns from the log's partitionValues per protocol (data
-        files exclude them — a raw snap_schema scan silently NULLs
-        the partition column on partitioned tables).  Files group by
-        partition tuple; one literal-attached scan per group."""
-        groups: dict[tuple, list[str]] = {}
-        for pth, pvals in path_pvals:
-            key = tuple((pvals or {}).get(c) for c in part_cols)
-            groups.setdefault(key, []).append(
-                os.path.join(table_path, pth)
-            )
-        out = None
-        meta_cols = (
-            [
-                _norm_path(F.col("_metadata.file_path")).alias("_f"),
-                F.col("_metadata.row_index").alias("_pos"),
-            ]
-            if keep_meta
-            else []
-        )
-        for key, paths in sorted(
-            groups.items(),
-            key=lambda kv: tuple((v is not None, v or "") for v in kv[0]),
-        ):
-            df = spark.read.schema(data_schema).parquet(*paths)
-            for col_name, raw in zip(part_cols, key):
-                df = df.withColumn(
-                    col_name, F.lit(raw).cast(type_of[col_name])
-                )
-            df = df.select(
-                *[F.col(f.name) for f in snap_schema.fields], *meta_cols
-            )
-            out = df if out is None else out.unionByName(df)
-        return out
-
-    def _chunk(
-        path_pvals: list, change_type: Optional[str], version: int
-    ):
-        if not path_pvals:
-            return
-        if change_type is None:
-            # cdc change files carry ALL columns incl. partitions
-            df = spark.read.schema(
-                T.StructType(
-                    snap_schema.fields
-                    + [T.StructField("_change_type", T.StringType(), True)]
-                )
-            ).parquet(
-                *[os.path.join(table_path, p) for p, _pv in path_pvals]
-            )
-        else:
-            df = _scan_attached(path_pvals, keep_meta=False).withColumn(
-                "_change_type", F.lit(change_type)
-            )
+    def _emit(df: DataFrame, change_type: Optional[str], version: int):
+        if change_type is not None:
+            df = df.withColumn("_change_type", F.lit(change_type))
         parts.append(df.withColumn("_commit_version", F.lit(version)))
-
-    def _masked_rows(
-        quads: list,
-        version: int,
-        live_side: bool,
-    ) -> None:
-        """Rows of each (path, pvals, dv_new, dv_old) entry, as
-        deletes: with ``live_side`` False the rows at NEW−OLD mask
-        positions (a DV grew — those rows just died); with
-        ``live_side`` True the rows NOT in dv_new (a masked file was
-        removed — only its live rows die now).  Descriptors expand
-        executor-side; partition columns re-attach from the log."""
-        import json as _json
-
-        import pandas as pd
-
-        from datafusion_catalogprovider_glue_spark.sources.dv import (
-            read_dv,
-        )
-
-        rows = [
-            (
-                os.path.abspath(os.path.join(table_path, p)),
-                _json.dumps(new) if new else None,
-                _json.dumps(old) if old else None,
-            )
-            for p, _pv, new, old in quads
-        ]
-        desc_df = spark.createDataFrame(
-            rows, "_f string, _new string, _old string"
-        )
-
-        def _expand(batches):
-            for pdf in batches:
-                fs, ps = [], []
-                for fp, n_, o_ in zip(pdf["_f"], pdf["_new"], pdf["_old"]):
-                    new_pos = (
-                        set(read_dv(table_path, _json.loads(n_)))
-                        if n_ is not None
-                        else set()
-                    )
-                    old_pos = (
-                        set(read_dv(table_path, _json.loads(o_)))
-                        if o_ is not None
-                        else set()
-                    )
-                    for pos in sorted(new_pos - old_pos):
-                        fs.append(fp)
-                        ps.append(pos)
-                yield pd.DataFrame(
-                    {
-                        "_f": pd.Series(fs, dtype="object"),
-                        "_pos": pd.Series(ps, dtype="int64"),
-                    }
-                )
-
-        diff = desc_df.mapInPandas(_expand, "_f string, _pos long")
-        scan = _scan_attached(
-            [(p, pv) for p, pv, _n, _o in quads], keep_meta=True
-        )
-        joined = scan.join(
-            F.broadcast(diff),
-            ["_f", "_pos"],
-            "left_anti" if live_side else "semi",
-        ).drop("_f", "_pos")
-        parts.append(
-            joined.withColumn("_change_type", F.lit("delete")).withColumn(
-                "_commit_version", F.lit(version)
-            )
-        )
 
     # full log replay from version 0: DV derivation needs each file's
     # PRE-commit mask and the active-file set (a re-add with a DV is a
-    # masking operation, not an insert).  Row-level change info lives
-    # ONLY in commit files — checkpoints and log-compaction files are
-    # reconciled state — so a cleaned/compacted-away commit makes the
-    # feed unreconstructable: refuse rather than silently omit changes
-    # (delta-spark's table_changes fails the same way after cleanup)
-    commits = _commit_files(log_dir)
-    present = {v for v, _p in commits}
-    last_needed = (
-        to_version if to_version is not None
-        else (max(present) if present else -1)
-    )
-    missing = [v for v in range(0, last_needed + 1) if v not in present]
-    if missing:
-        raise DeltaError(
-            f"change data feed needs commits 0..{last_needed} but "
-            f"{missing[:5]}{'...' if len(missing) > 5 else ''} were "
-            "cleaned up (checkpointed/compacted logs carry no "
-            "row-level change info) — refusing rather than omitting "
-            "changes"
-        )
+    # masking operation, not an insert)
     active: set = set()
     dv_state: dict = {}
     pv_state: dict = {}
     for v, path in commits:
-        if to_version is not None and v > to_version:
-            break
         cdc, adds, removes, dv_grows = [], [], [], []
         with open(path) as f:
             for line in f:
@@ -1041,7 +808,7 @@ def read_delta_cdf(
                     continue
                 action = json.loads(line)
                 if action.get("cdc"):
-                    cdc.append((action["cdc"]["path"], {}))
+                    cdc.append(action["cdc"]["path"])
                 elif action.get("add"):
                     a = action["add"]
                     p = a["path"]
@@ -1068,34 +835,80 @@ def read_delta_cdf(
         if v < from_version:
             continue
         if cdc:
-            _chunk(cdc, None, v)  # change files carry _change_type
-        else:
-            _chunk(adds, "insert", v)
-            plain = [(p, pv) for p, pv, d in removes if d is None]
-            _chunk(plain, "delete", v)
-            masked = [
-                (p, pv, d, None) for p, pv, d in removes if d is not None
-            ]
-            if masked:
-                # removed files that carried DVs: only live rows die
-                _masked_rows(masked, v, live_side=True)
-            if dv_grows:
-                _masked_rows(dv_grows, v, live_side=False)
+            # change files carry ALL columns incl. partitions, and
+            # their own _change_type
+            _emit(
+                spark.read.schema(change_schema).parquet(
+                    *[os.path.join(table_path, p) for p in cdc]
+                ),
+                None, v,
+            )
+            continue
+        if adds:
+            _emit(_scan(spark, head, adds), "insert", v)
+        plain = [(p, pv) for p, pv, d in removes if d is None]
+        if plain:
+            _emit(_scan(spark, head, plain), "delete", v)
+        # a removed file that carried a DV: only its live rows die now;
+        # a grown DV: the rows at NEW−OLD positions just died
+        dv_removes = [(p, pv, d, None) for p, pv, d in removes if d is not None]
+        for quads, only_masked in ((dv_removes, False), (dv_grows, True)):
+            if quads:
+                _emit(
+                    _scan(
+                        spark, head, [(p, pv) for p, pv, _n, _o in quads],
+                        dvs=[(p, n, o) for p, _pv, n, o in quads],
+                        masked=only_masked,
+                    ),
+                    "delete", v,
+                )
     if not parts:
         return spark.createDataFrame(
             [],
             T.StructType(
-                snap_schema.fields
-                + [
-                    T.StructField("_change_type", T.StringType(), True),
-                    T.StructField("_commit_version", T.IntegerType(), False),
-                ]
+                change_schema.fields
+                + [T.StructField("_commit_version", T.IntegerType(), False)]
             ),
         )
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
+
+
+def _feed_commits(
+    table_path: str, to_version: Optional[int], feed: str
+) -> list[tuple[int, str]]:
+    """The commit files 0..``to_version`` (default: the latest) a change
+    feed replays.  Row-level change info lives ONLY in commit files —
+    checkpoints and log-compaction files are reconciled state — so a
+    cleaned/compacted-away commit makes a feed unreconstructable:
+    refuse rather than silently omit changes (delta-spark's
+    table_changes fails the same way after cleanup).  A ``to_version``
+    the table never reached is a caller error, reported as such."""
+    log_dir = os.path.join(table_path, _LOG_DIR)
+    if not os.path.isdir(log_dir):
+        raise DeltaError(f"no {_LOG_DIR} at {table_path!r}")
+    commits = _commit_files(log_dir)
+    ckpt = _last_checkpoint(log_dir)
+    latest = max(
+        [v for v, _p in commits] + [e for _s, e, _p in _compacted_files(log_dir)],
+        default=ckpt if ckpt is not None else -1,
+    )
+    if to_version is not None and to_version > latest:
+        raise DeltaError(f"version {to_version} not in log (latest {latest})")
+    last = latest if to_version is None else to_version
+    present = {v for v, _p in commits}
+    missing = [v for v in range(0, last + 1) if v not in present]
+    if missing:
+        raise DeltaError(
+            f"{feed} needs commits 0..{last} but "
+            f"{missing[:5]}{'...' if len(missing) > 5 else ''} were "
+            "cleaned up (checkpointed/compacted logs carry no "
+            "row-level change info) — refusing rather than omitting "
+            "changes"
+        )
+    return [(v, p) for v, p in commits if v <= last]
 
 
 def read_delta_incremental(
@@ -1109,39 +922,17 @@ def read_delta_incremental(
     NOTHING; a commit that REMOVES data (dataChange=true remove) is
     refused loudly — file-level diffing cannot represent deletes, that
     is what CDF is for (scan_delta_cdf).  Each row carries its commit
-    version.  IO touches only the in-range added files."""
-    log_dir = os.path.join(table_path, "_delta_log")
-    versions = sorted(
-        int(f[:-5])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f[:-5].isdigit()
-    )
-    in_range = [v for v in versions if v > begin and (end is None or v <= end)]
-    snap = DeltaSnapshot(table_path, version=versions[-1] if versions else None)
-    part_cols = snap.partition_columns
-    type_of = {f.name: f.dataType for f in snap.schema.fields}
-    data_schema = T.StructType(
-        [f for f in snap.schema.fields if f.name not in part_cols]
-    )
-    # replay the pre-range log so a RE-add (a DV masking commit or a
-    # restore) is distinguishable from a genuinely new file — before
-    # r7 a merge_delta_dv commit re-emitted its whole re-added file
-    # as inserts
+    version.  IO touches only the in-range added files, read through
+    :func:`_scan`."""
+    commits = _feed_commits(table_path, end, "incremental read")
+    snap = DeltaSnapshot(table_path)
+    # the pre-range log is replayed too, so a RE-add (a DV masking
+    # commit or a restore) is distinguishable from a genuinely new file
     active: set = set()
-    for v in versions:
-        if v > begin:
-            break
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                action = json.loads(line)
-                if action.get("add"):
-                    active.add(action["add"]["path"])
-                elif action.get("remove"):
-                    active.discard(action["remove"]["path"])
     parts = []
-    for v in in_range:
+    for v, path in commits:
         adds = []
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
+        with open(path) as fh:
             for line in fh:
                 action = json.loads(line)
                 if action.get("add"):
@@ -1149,7 +940,7 @@ def read_delta_incremental(
                     p = a["path"]
                     is_new = p not in active
                     active.add(p)
-                    if not a.get("dataChange", True):
+                    if v <= begin or not a.get("dataChange", True):
                         continue
                     if not is_new:
                         raise DeltaError(
@@ -1160,39 +951,18 @@ def read_delta_incremental(
                     adds.append((p, dict(a.get("partitionValues") or {})))
                 elif action.get("remove"):
                     active.discard(action["remove"]["path"])
-                    if action["remove"].get("dataChange", True):
+                    if v > begin and action["remove"].get("dataChange", True):
                         raise DeltaError(
                             f"incremental read: version {v} removes data "
                             "(dataChange=true) — use CDF for delete-aware "
                             "change feeds"
                         )
         if adds:
-            # group by partition tuple, attach the values as typed
-            # literals (data files exclude partition columns)
-            groups: dict[tuple, list[str]] = {}
-            for pth, pv in adds:
-                key = tuple(pv.get(c) for c in part_cols)
-                groups.setdefault(key, []).append(
-                    os.path.join(table_path, pth)
+            parts.append(
+                _scan(spark, snap, adds).withColumn(
+                    "_commit_version", F.lit(v).cast("long")
                 )
-            for key, paths in sorted(
-                groups.items(),
-                key=lambda kv: tuple(
-                    (x is not None, x or "") for x in kv[0]
-                ),
-            ):
-                df = spark.read.schema(data_schema).parquet(*sorted(paths))
-                for col_name, raw in zip(part_cols, key):
-                    df = df.withColumn(
-                        col_name, F.lit(raw).cast(type_of[col_name])
-                    )
-                parts.append(
-                    df.select(
-                        *[F.col(f.name) for f in snap.schema.fields]
-                    ).withColumn(
-                        "_commit_version", F.lit(v).cast("long")
-                    )
-                )
+            )
     if not parts:
         return spark.createDataFrame(
             [],

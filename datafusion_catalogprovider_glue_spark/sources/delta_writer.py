@@ -536,10 +536,7 @@ def compact_delta(spark, table_path: str) -> int:
     round-trip oracle checks)."""
     from datafusion_catalogprovider_glue_spark.sources.delta import (
         DeltaSnapshot,
-    )
-
-    from datafusion_catalogprovider_glue_spark.sources.delta import (
-        _scan_with_identity,
+        _live_rows,
     )
 
     snap = DeltaSnapshot(table_path)
@@ -556,7 +553,7 @@ def compact_delta(spark, table_path: str) -> int:
     # logical snapshot: partition columns re-attached, existing DVs
     # APPLIED (a compaction folds deletion vectors away — the rewritten
     # files carry no masked rows, so the sidecars retire with the adds)
-    df = _scan_with_identity(spark, snap).drop("_file", "_pos")
+    df = _live_rows(spark, snap)
     adds = (
         _write_partitioned_data_files(
             df, table_path, f"commit-{version}", snap.partition_columns[0]
@@ -611,7 +608,7 @@ def optimize_delta_zorder(
 
     from datafusion_catalogprovider_glue_spark.sources.delta import (
         DeltaSnapshot,
-        _scan_with_identity,
+        _live_rows,
     )
 
     if len(cols) != 2:
@@ -625,7 +622,7 @@ def optimize_delta_zorder(
                          "tables only (z-order within partitions TBD)")
     version = _next_version(_log_dir(table_path))
     old_rel = sorted(snap._active)
-    df = _scan_with_identity(spark, snap).drop("_file", "_pos")
+    df = _live_rows(spark, snap)
     bounds = df.agg(
         *[F.min(c).alias(f"_lo{i}") for i, c in enumerate(cols)],
         *[F.max(c).alias(f"_hi{i}") for i, c in enumerate(cols)],
@@ -730,7 +727,7 @@ def merge_delta(
 
     from datafusion_catalogprovider_glue_spark.sources.delta import (
         DeltaSnapshot,
-        _scan_with_identity,
+        _live_rows,
     )
 
     snap = DeltaSnapshot(table_path)
@@ -751,7 +748,7 @@ def merge_delta(
     # logical snapshot with partition columns re-attached and existing
     # DVs applied — a CoW merge over a DV-bearing or hive-partitioned
     # table starts from the TRUE logical table
-    target = _scan_with_identity(spark, snap).drop("_file", "_pos")
+    target = _live_rows(spark, snap)
     cols = [f.name for f in snap.schema.fields]
     missing = [c for c in cols if c not in source.columns]
     if missing:
@@ -1282,7 +1279,7 @@ def merge_delta_dv(
     Contrast with :func:`merge_delta` (copy-on-write): a 1-row update
     there rewrites the whole table; here it writes one KB-sized DV
     sidecar and a 1-row file.  Scale shape: EXISTING DVs are decoded
-    executor-side (the reader's `_deleted_rows_df` pattern) and the
+    executor-side (the reader's `delta._dv_rows`) and the
     new per-file sidecars are ENCODED executor-side too (one
     applyInPandas group per touched file) — the driver only ever
     collects one descriptor row per touched FILE, never a row-index
@@ -1298,7 +1295,8 @@ def merge_delta_dv(
 
     from datafusion_catalogprovider_glue_spark.sources.delta import (
         DeltaSnapshot,
-        _scan_with_identity,
+        _dv_rows,
+        _live_rows,
     )
     from datafusion_catalogprovider_glue_spark.sources.dv import (
         write_dv_file,
@@ -1345,7 +1343,7 @@ def merge_delta_dv(
     # is persisted and materialized ONCE — the previous shape
     # recomputed the target-scan join for the write's anti-join and
     # again for the DV-encode pass (two extra full table scans).
-    t = _scan_with_identity(spark, snap).alias("t")
+    t = _live_rows(spark, snap, identity=True).alias("t")
     s = source.withColumn("__src", F.lit(True)).alias("s")
     cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in on]
     flag = (
@@ -1417,20 +1415,9 @@ def merge_delta_dv(
     # (file, descriptor) rows come back to the driver
     masked = removed
     if snap._dvs:
-        from datafusion_catalogprovider_glue_spark.sources.delta import (
-            _deleted_rows_df,
-        )
-
-        carried = (
-            _deleted_rows_df(spark, snap)
-            .withColumnRenamed("_dv_file", "_file")
-            .withColumnRenamed("_dv_pos", "_pos")
-            .join(
-                F.broadcast(removed.select("_file").distinct()),
-                "_file",
-                "semi",
-            )
-        )
+        carried = _dv_rows(
+            spark, snap, [(p, dv, None) for p, dv in snap._dvs.items()]
+        ).join(F.broadcast(removed.select("_file").distinct()), "_file", "semi")
         masked = masked.unionByName(carried)
 
     def _encode_group(pdf):

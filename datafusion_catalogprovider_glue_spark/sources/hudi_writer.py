@@ -47,6 +47,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from datafusion_catalogprovider_glue_spark.errors import SparkError
+from datafusion_catalogprovider_glue_spark.sources.object_store import (
+    file_path_col,
+)
 from datafusion_catalogprovider_glue_spark.sources.hudi import (
     table_partition_field,
 )
@@ -448,12 +451,7 @@ def upsert_hudi(
         )
         base = (
             spark.read.parquet(*sorted(paths))
-            .withColumn(
-                "_fg",
-                fg_map[F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:/*", "/"
-                )],
-            )
+            .withColumn("_fg", fg_map[file_path_col(F.col("_metadata.file_path"))])
         )
     # ONE validation+routing job: source-duplicate gate, the
     # one-key-one-file-group invariant gate, and the touched-group set

@@ -39,7 +39,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +48,10 @@ from pyspark.sql import types as T
 from datafusion_catalogprovider_glue_spark.errors import NotImplementedYet
 from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
     decode_container_file,
+)
+from datafusion_catalogprovider_glue_spark.sources.object_store import (
+    file_path_col,
+    norm_file_path,
 )
 from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
     may_match,
@@ -404,29 +407,10 @@ def read_iceberg(
     as_of_timestamp_ms: Optional[int] = None,
 ) -> DataFrame:
     """Load an Iceberg table snapshot (current, or a pinned
-    snapshot-id — time travel), applying v2 POSITIONAL DELETE files
-    when the snapshot carries them (format spec: delete files list
-    (file_path, pos) of deleted rows; a merge-on-read scan drops
-    those positions).
-
-    The merge uses the file source's ``_metadata`` struct: every data
-    row already knows its (file_path, row_index), so applying deletes
-    is ONE left anti join against the loaded delete set — no
-    per-file branching, no row numbering pass, and the delete side is
-    small by construction (Iceberg compacts it away over time).  At
-    100 TB the anti join broadcasts the delete set per the usual
-    small-side rule.
-
-    Matching is on the FULL path, normalized scheme-less and resolved
-    against the table root when the delete file records a relative
-    path — two data files sharing a basename in different directories
-    (partitioned or imported layouts) never collide.  Position deletes
-    are SEQUENCE-NUMBER SCOPED per spec: a delete applies only to data
-    files whose sequence number is <= the delete file's, so a data
-    file re-added at a higher sequence number keeps its rows (gate key
-    scan_iceberg_pos_delete_seq pins exactly that re-add)."""
-    from pyspark.sql import functions as F
-
+    snapshot-id, ref or timestamp — time travel): the files that
+    survive manifest-level pruning, read through :func:`_scan`, which
+    applies the snapshot's position deletes, deletion vectors and
+    equality deletes."""
     if ref is not None:
         if snapshot_id is not None:
             raise ValueError("pass snapshot_id OR ref, not both")
@@ -505,25 +489,77 @@ def read_iceberg(
         ]
     if not files:
         return spark.createDataFrame([], snap.schema)
-    # Hadoop renders URIs as file:/p, file:///p, s3a://b/p — collapse
-    # any scheme prefix to a single leading "/" so both sides agree.
-    scheme_re = r"^[a-z][a-z0-9+.\-]*:/+"
-    root = os.path.abspath(table_path) + "/"
+    return _scan(spark, snap, files)
 
-    def _norm(col):
-        return F.regexp_replace(
-            F.when(
-                col.rlike(scheme_re) | col.startswith("/"), col
-            ).otherwise(F.concat(F.lit(root), col)),
-            scheme_re,
-            "/",
+
+def _dv_rows(spark: SparkSession, snap: "IcebergSnapshot") -> DataFrame:
+    """``(_file, _pos, _del_seq)`` of every row the snapshot's v3
+    DELETION VECTORS mask: the KB-sized puffin blob descriptors go to
+    the executors and positions expand WHERE the tasks run
+    (mapInPandas), so the driver never holds a row-index set."""
+    import pandas as pd
+
+    desc = spark.createDataFrame(
+        list(snap.dv_entries),
+        "puf string, off long, length long, ref string, dseq int",
+    ).repartition(min(len(snap.dv_entries), 32))
+
+    def _expand(pdfs):
+        from datafusion_catalogprovider_glue_spark.sources.puffin import (
+            read_puffin_dv,
         )
 
+        for pdf in pdfs:
+            for row in pdf.to_dict("records"):
+                positions = read_puffin_dv(row["puf"], row["off"], row["length"])
+                yield pd.DataFrame(
+                    {
+                        "_file": row["ref"],
+                        "_pos": pd.Series(positions, dtype="int64"),
+                        "_del_seq": row["dseq"],
+                    }
+                )
+
+    return desc.mapInPandas(
+        _expand, "_file string, _pos long, _del_seq int"
+    ).withColumn("_file", file_path_col(F.col("_file"), snap.table_path))
+
+
+def _scan(
+    spark: SparkSession,
+    snap: "IcebergSnapshot",
+    files: list[str],
+    identity: bool = False,
+) -> DataFrame:
+    """The live rows of ``files`` (data files of ``snap``) under the
+    current schema — the one place that decides them, for the reader
+    and for the merges.  ``identity`` keeps each row's ``_file``
+    (normalized path) and ``_pos`` (``_metadata.row_index``).
+
+    Each group of :func:`_resolve_file_projections` is one multi-file
+    read projected to the current names.  Deletes apply through the
+    file source's ``_metadata`` struct: every data row already knows
+    its (file_path, row_index), so positional deletes and deletion
+    vectors are ONE broadcast left anti join against the loaded
+    delete set — no per-file branching, no row numbering pass, and the
+    delete side is small by construction (Iceberg compacts it away).
+    Matching is on the FULL path, normalized scheme-less and resolved
+    against the table root when a delete file records a relative path,
+    so two data files sharing a basename never collide.  Every delete
+    is SEQUENCE-NUMBER SCOPED per spec: a position delete or DV applies
+    to data files with sequence number <= its own, an equality delete
+    only to strictly smaller ones, so a data file re-added at a higher
+    sequence number keeps its rows (gate key scan_iceberg_pos_delete_seq
+    pins exactly that re-add)."""
+    has_deletes = bool(snap.delete_files or snap.eq_deletes or snap.dv_entries)
     cols = snap.schema.names
     type_of = {f.name: f.dataType for f in snap.schema.fields}
-    groups = _resolve_file_projections(snap, files)
-    parts = []
-    for sig, paths in groups:
+    meta = [
+        file_path_col(F.col("_metadata.file_path")).alias("_file"),
+        F.col("_metadata.row_index").alias("_pos"),
+    ] if identity or has_deletes else []
+    with_pos = None
+    for sig, paths in _resolve_file_projections(snap, files):
         read_schema = T.StructType(
             [
                 T.StructField(old, type_of[new], True)
@@ -531,7 +567,6 @@ def read_iceberg(
                 if old is not None
             ]
         )
-        df = spark.read.schema(read_schema).parquet(*paths)
         proj = [
             (
                 F.col(old).alias(new)
@@ -540,24 +575,10 @@ def read_iceberg(
             )
             for old, new in sig
         ]
-        parts.append(
-            df.select(
-                *proj,
-                _norm(F.col("_metadata.file_path")).alias("_if_file"),
-                F.col("_metadata.row_index").alias("_if_pos"),
-            )
-        )
-    with_pos = parts[0]
-    for p in parts[1:]:
-        with_pos = with_pos.unionByName(p)
-    if not snap.delete_files and not snap.eq_deletes and not snap.dv_entries:
-        return with_pos.select(*cols)
-
-    def _norm_py(p: str) -> str:
-        # driver-side twin of _norm (same regex, same root-prepend)
-        if not (re.match(scheme_re, p) or p.startswith("/")):
-            p = root + p
-        return re.sub(scheme_re, "/", p)
+        df = spark.read.schema(read_schema).parquet(*paths).select(*proj, *meta)
+        with_pos = df if with_pos is None else with_pos.unionByName(df)
+    if not has_deletes:
+        return with_pos
 
     # The data-file→sequence-number map is DRIVER-KNOWN metadata (it
     # came out of the manifests just parsed).  Up to a bounded file
@@ -568,7 +589,9 @@ def read_iceberg(
     # broadcast exchange job fewer per action.  Above the bound the
     # expression tree would dominate planning, so the broadcast-join
     # path below stays (at that scale the extra exchange is noise).
-    seq_pairs = [(_norm_py(p), int(s)) for p, s in snap.data_seq]
+    seq_pairs = [
+        (norm_file_path(p, snap.table_path), int(s)) for p, s in snap.data_seq
+    ]
     seq_lookup = None
     if 0 < len(seq_pairs) <= 1024:
         def _esc(s: str) -> str:
@@ -579,59 +602,27 @@ def read_iceberg(
             + ",".join(f"'{_esc(p)}',{s}" for p, s in seq_pairs)
             + ")"
         )
+    seq_df = None
+    if seq_lookup is None:
+        seq_df = F.broadcast(
+            spark.createDataFrame(seq_pairs, "_file string, _if_seq int")
+        )
     if snap.delete_files or snap.dv_entries:
         # each delete file carries its sequence number as a literal;
         # a (file, pos) entry kills a data row only when the delete's
         # sequence number >= the data file's (spec: <= comparison on
         # the data side — same-commit deletes apply, re-adds survive).
+        # v3 deletion vectors flow through the exact same join.
         del_parts = [
             spark.read.parquet(path).select(
-                _norm(F.col("file_path")).alias("_if_file"),
-                F.col("pos").cast("long").alias("_if_pos"),
+                file_path_col(F.col("file_path"), snap.table_path).alias("_file"),
+                F.col("pos").cast("long").alias("_pos"),
                 F.lit(seq).alias("_del_seq"),
             )
             for path, seq in snap.delete_files
         ]
         if snap.dv_entries:
-            # v3 DELETION VECTORS: KB-sized puffin blob descriptors go
-            # to the executors; positions expand WHERE the tasks run
-            # (mapInPandas, the delta _deleted_rows_df discipline) and
-            # then flow through the exact same seq-scoped anti join as
-            # v2 position deletes
-            import pandas as pd
-
-            desc = spark.createDataFrame(
-                [
-                    (p, o, s, ref, seq)
-                    for p, o, s, ref, seq in snap.dv_entries
-                ],
-                "puf string, off long, length long, ref string, dseq int",
-            ).repartition(min(len(snap.dv_entries), 32))
-
-            def _expand(pdfs):
-                from datafusion_catalogprovider_glue_spark.sources.puffin import (  # noqa: E501
-                    read_puffin_dv,
-                )
-
-                for pdf in pdfs:
-                    for row in pdf.to_dict("records"):
-                        positions = read_puffin_dv(
-                            row["puf"], row["off"], row["length"]
-                        )
-                        yield pd.DataFrame(
-                            {
-                                "_if_file": row["ref"],
-                                "_if_pos": pd.Series(
-                                    positions, dtype="int64"
-                                ),
-                                "_del_seq": row["dseq"],
-                            }
-                        )
-
-            dv_rows = desc.mapInPandas(
-                _expand, "_if_file string, _if_pos long, _del_seq int"
-            ).withColumn("_if_file", _norm(F.col("_if_file")))
-            del_parts.append(dv_rows)
+            del_parts.append(_dv_rows(spark, snap))
         dels = del_parts[0]
         for p in del_parts[1:]:
             dels = dels.unionByName(p)
@@ -644,25 +635,18 @@ def read_iceberg(
             # per-(file,pos) max-seq aggregation is unnecessary too.
             kill = dels.filter(
                 F.col("_del_seq")
-                >= F.coalesce(
-                    seq_lookup[F.col("_if_file")], F.lit(0)
-                )
-            ).select("_if_file", "_if_pos")
+                >= F.coalesce(seq_lookup[F.col("_file")], F.lit(0))
+            ).select("_file", "_pos")
             with_pos = with_pos.join(
-                F.broadcast(kill), ["_if_file", "_if_pos"], "left_anti"
+                F.broadcast(kill), ["_file", "_pos"], "left_anti"
             )
         else:
-            dels = dels.groupBy("_if_file", "_if_pos").agg(
+            dels = dels.groupBy("_file", "_pos").agg(
                 F.max("_del_seq").alias("_del_seq")
             )
-            seq_map = F.broadcast(
-                spark.createDataFrame(
-                    snap.data_seq, "_if_file string, _if_seq int"
-                ).withColumn("_if_file", _norm(F.col("_if_file")))
-            )
             with_pos = (
-                with_pos.join(seq_map, "_if_file", "left")
-                .join(F.broadcast(dels), ["_if_file", "_if_pos"], "left")
+                with_pos.join(seq_df, "_file", "left")
+                .join(F.broadcast(dels), ["_file", "_pos"], "left")
                 .filter(
                     F.col("_del_seq").isNull()
                     | (
@@ -672,43 +656,30 @@ def read_iceberg(
                 )
                 .drop("_del_seq", "_if_seq")
             )
-    if snap.eq_deletes:
-        # EQUALITY deletes (spec §equality-delete-files): a data row is
-        # dropped when its values null-safe-match a delete row on the
-        # equality-id columns AND the delete file's sequence number is
-        # strictly greater than the data file's — a file (re)added
-        # after the delete keeps its rows.  Data-file sequence numbers
-        # come from a tiny broadcast (path, seq) map; equality ids are
-        # the delete file's own columns (the flat-manifest subset of
-        # the spec's `equality_ids` field list).  One broadcast anti
-        # join per delete file — corpus rows never shuffle.
-        seq_df = (
-            None
-            if seq_lookup is not None
-            else F.broadcast(
-                spark.createDataFrame(
-                    snap.data_seq, "_if_file string, _if_seq int"
-                ).withColumn("_if_file", _norm(F.col("_if_file")))
-            )
-        )
+    # EQUALITY deletes (spec §equality-delete-files): a data row is
+    # dropped when its values null-safe-match a delete row on the
+    # equality-id columns AND the delete file's sequence number is
+    # strictly greater than the data file's.  Equality ids are the
+    # delete file's own columns (the flat-manifest subset of the
+    # spec's `equality_ids` field list).  One broadcast anti join per
+    # delete file — corpus rows never shuffle.
     for eq_path, eq_seq in snap.eq_deletes:
         eq = spark.read.parquet(eq_path).distinct()
-        eq_ids = eq.columns
         if seq_lookup is not None:
             # inline literal lookup instead of a broadcast (file, seq)
             # join against the corpus — one exchange fewer per action
             with_seq = with_pos.withColumn(
-                "_if_seq", seq_lookup[F.col("_if_file")]
+                "_if_seq", seq_lookup[F.col("_file")]
             )
         else:
-            with_seq = with_pos.join(seq_df, "_if_file", "left")
+            with_seq = with_pos.join(seq_df, "_file", "left")
         cond = F.lit(eq_seq) > F.coalesce(F.col("_if_seq"), F.lit(0))
-        for c in eq_ids:
+        for c in eq.columns:
             cond = cond & with_seq[c].eqNullSafe(eq[c])
         with_pos = with_seq.join(F.broadcast(eq), cond, "left_anti").drop(
             "_if_seq"
         )
-    return with_pos.select(*cols)
+    return with_pos.select(*cols, *(["_file", "_pos"] if identity else []))
 
 
 def read_iceberg_incremental(
@@ -723,13 +694,13 @@ def read_iceberg_incremental(
     the snapshot that appended it — the change feed a downstream
     pipeline checkpoints on.  Implemented as consecutive snapshot
     file-set differences over the metadata chain (driver-side KBs);
-    IO touches ONLY the appended files, so an incremental catch-up
-    costs change volume, not table size.  Like the real API this is
+    IO touches ONLY the appended files, read through :func:`_scan`
+    (so a range spanning a column rename reads under the current
+    names), and an incremental catch-up costs change volume, not
+    table size.  Like the real API this is
     defined for append-only ranges: a snapshot that REMOVES files in
     the range (rewrite/compaction) is refused loudly rather than
     silently emitting rewritten rows as new data."""
-    from pyspark.sql import functions as F
-
     meta_dir = os.path.join(table_path, "metadata")
     with open(os.path.join(meta_dir, "version-hint.text")) as f:
         version = int(f.read().strip())
@@ -796,7 +767,7 @@ def read_iceberg_incremental(
         prev_dels = cur_dels
         if added:
             parts.append(
-                spark.read.parquet(*added).withColumn(
+                _scan(spark, cur_snap, added).withColumn(
                     "_snapshot_id", F.lit(sid).cast("long")
                 )
             )

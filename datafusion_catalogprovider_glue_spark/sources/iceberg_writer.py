@@ -836,17 +836,20 @@ def merge_iceberg_pos_delete(
     * every MATCHED target pre-image lands as one (file_path, pos)
       row in ONE delete parquet committed at this sequence number —
       it applies to data files with sequence <= its own, per the
-      reader's scoping (sources/iceberg.py:440-446), so the original
+      reader's scoping (`iceberg._scan`), so the original
       data files stay byte-identical;
     * updated + inserted rows land as new data files (under the
       table's default partition spec, like merge_iceberg);
     * the commit is a FAST-APPEND: prior manifests carry forward, one
       new manifest lists the delete file (content=1) and the adds.
 
-    CHAINED merges work: the identity scan applies the table's live
-    position deletes (seq-scoped) before matching, so an
-    already-deleted row can never rematch.  Equality deletes are
-    refused (their scoping interacts with the new data files).
+    The target is the reader's live rows with their identity
+    (`iceberg._scan`): files resolve to the current schema by field
+    id, so a renamed key still matches, and CHAINED merges work
+    because the table's live position deletes (seq-scoped) apply
+    before matching — an already-deleted row can never rematch.
+    Equality deletes are refused (their scoping interacts with the
+    new data files).
     Duplicate source keys are refused (MERGE ambiguity rule).
     Returns the new snapshot id."""
     import pyarrow.parquet as pq
@@ -854,6 +857,7 @@ def merge_iceberg_pos_delete(
 
     from datafusion_catalogprovider_glue_spark.sources.iceberg import (
         IcebergSnapshot,
+        _scan,
     )
 
     snap = IcebergSnapshot(table_path)
@@ -882,63 +886,10 @@ def merge_iceberg_pos_delete(
         )
     n_src = int(probe["total"])
     root = os.path.abspath(table_path) + "/"
-    scheme_re = r"^[a-z][a-z0-9+.\-]*:/+"
-
-    def _norm(col):
-        return F.regexp_replace(
-            F.when(
-                col.rlike(scheme_re) | col.startswith("/"), col
-            ).otherwise(F.concat(F.lit(root), col)),
-            scheme_re,
-            "/",
-        )
-
-    scan = spark.read.schema(snap.schema).parquet(*snap.files).select(
-        *[F.col(c) for c in cols],
-        _norm(F.col("_metadata.file_path")).alias("_file"),
-        F.col("_metadata.row_index").alias("_pos"),
-    )
-    if snap.delete_files:
-        # one scan over ALL live delete files (explicit schema — no
-        # per-file inference jobs), sequence attached from the path
-        del_seq_map = F.create_map(
-            *[
-                F.lit(x)
-                for path, seq in sorted(snap.delete_files)
-                for x in (os.path.abspath(path), seq)
-            ]
-        )
-        dels = (
-            spark.read.schema("file_path string, pos long").parquet(
-                *sorted(p for p, _s in snap.delete_files)
-            )
-            .select(
-                _norm(F.col("file_path")).alias("_file"),
-                F.col("pos").alias("_pos"),
-                del_seq_map[
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), scheme_re, "/"
-                    )
-                ].alias("_del_seq"),
-            )
-            .groupBy("_file", "_pos")
-            .agg(F.max("_del_seq").alias("_del_seq"))
-        )
-        seq_map = F.broadcast(
-            spark.createDataFrame(
-                snap.data_seq, "_file string, _if_seq int"
-            ).withColumn("_file", _norm(F.col("_file")))
-        )
-        scan = (
-            scan.join(seq_map, "_file", "left")
-            .join(F.broadcast(dels), ["_file", "_pos"], "left")
-            .filter(
-                F.col("_del_seq").isNull()
-                | (F.col("_del_seq") < F.coalesce(F.col("_if_seq"), F.lit(0)))
-            )
-            .drop("_del_seq", "_if_seq")
-        )
-    t = scan.alias("t")
+    # the reader's live rows with their identity: the table's live
+    # position deletes apply (seq-scoped), so an already-deleted row
+    # can never rematch
+    t = _scan(spark, snap, snap.files, identity=True).alias("t")
     s = source.withColumn("__src", F.lit(True)).alias("s")
     cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in on]
     flag = (
@@ -1056,9 +1007,11 @@ def merge_iceberg_dv_v3(
     file group — the merge_delta_dv discipline); the driver collects
     only KB-sized blobs to assemble the puffin.
 
-    CHAINED merges work (r10): the identity scan applies the table's
-    existing DVs (an already-deleted row can never rematch), a
-    re-masked file's replacement vector UNIONS the old positions, and
+    The target is the reader's live rows with their identity
+    (`iceberg._scan`, renamed keys resolved by field id).  CHAINED
+    merges work (r10): the table's existing DVs apply there (an
+    already-deleted row can never rematch), a re-masked file's
+    replacement vector UNIONS the old positions, and
     the superseded manifest entry is dropped from the carried-forward
     manifest (rewritten under a -rw name; prior snapshots keep their
     original manifests, so time travel is unchanged) — preserving the
@@ -1071,6 +1024,8 @@ def merge_iceberg_dv_v3(
 
     from datafusion_catalogprovider_glue_spark.sources.iceberg import (
         IcebergSnapshot,
+        _dv_rows,
+        _scan,
     )
     from datafusion_catalogprovider_glue_spark.sources.puffin import (
         encode_dv_blob,
@@ -1101,62 +1056,9 @@ def merge_iceberg_dv_v3(
         )
     n_src = int(probe["total"])
     root = os.path.abspath(table_path) + "/"
-    scheme_re = r"^[a-z][a-z0-9+.\-]*:/+"
-
-    def _norm(col):
-        return F.regexp_replace(
-            F.when(
-                col.rlike(scheme_re) | col.startswith("/"), col
-            ).otherwise(F.concat(F.lit(root), col)),
-            scheme_re,
-            "/",
-        )
-
-    scan = spark.read.schema(snap.schema).parquet(*snap.files).select(
-        *[F.col(c) for c in cols],
-        _norm(F.col("_metadata.file_path")).alias("_file"),
-        F.col("_metadata.row_index").alias("_pos"),
-    )
-    old_dv_rows = None
-    if snap.dv_entries:
-        # CHAINED merge: the table already carries DVs.  The identity
-        # scan must apply them (an already-deleted row can never
-        # rematch), and the new per-file vectors must UNION the old
-        # positions (spec v3: at most one DV per data file — the
-        # replacement supersedes, never sits beside).  Old vectors
-        # expand executor-side from KB descriptors, the reader's own
-        # discipline.
-        import pandas as _pd
-
-        desc = spark.createDataFrame(
-            [(p, o, s, ref) for p, o, s, ref, _q in snap.dv_entries],
-            "puf string, off long, length long, ref string",
-        ).repartition(min(len(snap.dv_entries), 32))
-
-        def _expand_old(pdfs):
-            from datafusion_catalogprovider_glue_spark.sources.puffin import (  # noqa: E501
-                read_puffin_dv,
-            )
-
-            for pdf in pdfs:
-                for row in pdf.to_dict("records"):
-                    positions = read_puffin_dv(
-                        row["puf"], row["off"], row["length"]
-                    )
-                    yield _pd.DataFrame(
-                        {
-                            "_file": row["ref"],
-                            "_pos": _pd.Series(positions, dtype="int64"),
-                        }
-                    )
-
-        old_dv_rows = desc.mapInPandas(
-            _expand_old, "_file string, _pos long"
-        ).withColumn("_file", _norm(F.col("_file")))
-        scan = scan.join(
-            F.broadcast(old_dv_rows), ["_file", "_pos"], "left_anti"
-        )
-    t = scan.alias("t")
+    # the reader's live rows with their identity: the table's existing
+    # DVs apply, so an already-deleted row can never rematch
+    t = _scan(spark, snap, snap.files, identity=True).alias("t")
     s = source.withColumn("__src", F.lit(True)).alias("s")
     cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in on]
     flag = (
@@ -1175,13 +1077,17 @@ def merge_iceberg_dv_v3(
         flag.alias("_drop"),
     ).persist()
     removed = matched_small.select("_file", "_pos")
-    if old_dv_rows is not None:
-        # files re-masked this commit absorb their OLD vector into the
-        # replacement; files untouched this commit keep their old DV
-        # entry (dropped from the carried manifests only when replaced)
+    if snap.dv_entries:
+        # CHAINED merge: files re-masked this commit absorb their OLD
+        # vector into the replacement (spec v3: at most one DV per data
+        # file — the replacement supersedes, never sits beside); files
+        # untouched this commit keep their old DV entry (dropped from
+        # the carried manifests only when replaced)
         refiles = removed.select("_file").distinct()
         removed = removed.unionByName(
-            old_dv_rows.join(F.broadcast(refiles), "_file", "semi")
+            _dv_rows(spark, snap)
+            .select("_file", "_pos")
+            .join(F.broadcast(refiles), "_file", "semi")
         )
 
     # per-file roaring blobs, encoded executor-side
@@ -1519,6 +1425,7 @@ def write_iceberg_ndv_stats(
 
     from datafusion_catalogprovider_glue_spark.sources.iceberg import (
         IcebergSnapshot,
+        _scan,
     )
     from datafusion_catalogprovider_glue_spark.sources.puffin import (
         KMV_BLOB_TYPE,
@@ -1537,7 +1444,8 @@ def write_iceberg_ndv_stats(
     version, meta = _load_meta(meta_dir)
     snap_id = meta["current-snapshot-id"]
     seq = meta["last-sequence-number"]
-    df = spark.read.schema(snap.schema).parquet(*snap.files)
+    # the live rows, under the current names (the reader's own scan)
+    df = _scan(spark, snap, snap.files)
     pairs = []
     for col in columns:
         h = F.conv(

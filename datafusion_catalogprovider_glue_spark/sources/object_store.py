@@ -13,15 +13,47 @@ exercised the first time an executor opens an ``s3a://`` split.
 Local filesystem paths (the test environment) need no registry —
 ``file:`` URLs bypass S3A entirely, mirroring how the reference's
 tests never touch its registry either (SURVEY.md §5).
+
+It also holds the one normalizer of the file URIs Spark reports
+(``file_path_col``, with its driver-side twin ``norm_file_path``),
+which the lake readers and writers match data rows to files with.
 """
 
 from __future__ import annotations
 
+import os
+import re
 from dataclasses import dataclass
 from typing import Optional
 from urllib.parse import urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
+from pyspark.sql import functions as F
+
+# any URI scheme prefix: Hadoop renders one file as file:/p, file:///p
+# or s3a://b/p depending on who wrote the path down
+_SCHEME_RE = r"^[a-z][a-z0-9+.\-]*:/+"
+
+
+def file_path_col(col: Column, root: Optional[str] = None) -> Column:
+    """``col`` (a ``_metadata.file_path`` or a path a delete file
+    records) with its scheme prefix collapsed to a single leading "/",
+    so a data row's file and a log- or delete-file-derived path compare
+    equal.  With ``root`` (a table location), a relative path is first
+    resolved against it.  :func:`norm_file_path` is the driver-side
+    twin."""
+    if root is not None:
+        col = F.when(col.rlike(_SCHEME_RE) | col.startswith("/"), col).otherwise(
+            F.concat(F.lit(os.path.abspath(root) + "/"), col)
+        )
+    return F.regexp_replace(col, _SCHEME_RE, "/")
+
+
+def norm_file_path(path: str, root: Optional[str] = None) -> str:
+    """:func:`file_path_col` for one driver-side path string."""
+    if root is not None and not (re.match(_SCHEME_RE, path) or path.startswith("/")):
+        path = os.path.abspath(root) + "/" + path
+    return re.sub(_SCHEME_RE, "/", path)
 
 
 @dataclass(frozen=True)
