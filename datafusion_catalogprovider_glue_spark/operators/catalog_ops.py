@@ -25,6 +25,7 @@ from datafusion_catalogprovider_glue_spark.infoschema import (
     information_schema_columns,
     information_schema_tables,
 )
+from datafusion_catalogprovider_glue_spark.operators.meta_ops import _tmp_table
 from datafusion_catalogprovider_glue_spark.operators.registry import query
 from datafusion_catalogprovider_glue_spark.session import apply_engine_conf
 from datafusion_catalogprovider_glue_spark.tables import load_table
@@ -477,10 +478,8 @@ def sink_delta_cdf_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     2× the table), and pre/post images pair up per key.  The returned
     per-change-type rollup is fully re-derived by the oracle from
     source rows."""
-    import hashlib
     import json as _json
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -498,12 +497,7 @@ def sink_delta_cdf_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_cdfw_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_cdfw", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     set_delta_property(table, "delta.enableChangeDataFeed", "true")
     src = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
@@ -574,10 +568,8 @@ def scan_delta_protocol_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     still hash-matches — then asserts in-key that an UNKNOWN future
     readerFeature and a minReaderVersion beyond the ceiling both
     refuse loudly instead of degrading to a wrong answer."""
-    import hashlib
     import json as _json
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -597,12 +589,7 @@ def scan_delta_protocol_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_proto_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_proto", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     log_dir = os.path.join(table, "_delta_log")
 
@@ -1112,9 +1099,6 @@ def catalog_iceberg_ndv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     The deterministic-KMV-vs-datasketches deviation is documented on
     the writer; the value-oracle here is the point: the estimate is
     reproducible arithmetic, not an opaque sketch."""
-    import hashlib as _hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -1136,12 +1120,7 @@ def catalog_iceberg_ndv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_ndv_"
-        + _hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    table = _tmp_table("ice_ndv", sf_dir)
     append_iceberg(cust, table)
     cols = ["c_custkey", "c_nationkey", "c_mktsegment"]
     stats_path = write_iceberg_ndv_stats(spark, table, cols)
@@ -1218,9 +1197,6 @@ def catalog_register_table_formats(spark: SparkSession, sf_dir: str) -> DataFram
     group), so a path that listed the directory would double-count —
     the hash match proves timeline resolution ran.  In-key: both
     entries land in information_schema.tables with their formats."""
-    import hashlib as _hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -1239,11 +1215,8 @@ def catalog_register_table_formats(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    h = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    ice = os.path.join("/tmp", f"glue_spark_cat_ice_{h}")
-    hud = os.path.join("/tmp", f"glue_spark_cat_hud_{h}")
-    shutil.rmtree(ice, ignore_errors=True)
-    shutil.rmtree(hud, ignore_errors=True)
+    ice = _tmp_table("cat_ice", sf_dir)
+    hud = _tmp_table("cat_hud", sf_dir)
     append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), ice)
     append_hudi(docs.filter(F.col("doc_id") % 2 == 1), hud)
     upsert_hudi(
@@ -2511,9 +2484,7 @@ def scan_hudi_archived_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged timeline.  The returned DataFrame replays the final
     snapshot through the archive; the oracle recomputes it from the
     source table."""
-    import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -2532,11 +2503,7 @@ def scan_hudi_archived_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_hudi_arch_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("hudi_arch", sf_dir)
     t1 = append_hudi(docs.filter(F.col("doc_id") % 2 == 0), table)
     t2 = upsert_hudi(
         spark,
@@ -3505,9 +3472,6 @@ def sink_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     append ordering, version-0 protocol/metaData emission, relative
     add paths, and that compaction changed the physical layout without
     changing the logical table."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3521,11 +3485,7 @@ def sink_delta_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_delta_sink_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_sink", sf_dir)
     v0 = append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     v1 = append_delta(docs.filter(F.col("doc_id") % 2 == 1), table)
     v2 = compact_delta(spark, table)
@@ -3561,9 +3521,6 @@ def sink_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the commit round trip.  Conflicting-writer refusal (put-if-absent
     version publish) and the duplicate-source-key refusal are pinned in
     tests/test_round5_fixes.py."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3577,11 +3534,7 @@ def sink_delta_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_delta_merge_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_merge", sf_dir)
     v0 = append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     source = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -3617,9 +3570,6 @@ def sink_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrote.  Time travel to the first snapshot and the incremental
     appendsBetween scan over the written chain are pinned in
     tests/test_round5_fixes.py."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3634,11 +3584,7 @@ def sink_iceberg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_iceberg_sink_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("iceberg_sink", sf_dir)
     s1 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     s2 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 1), table)
     assert s1 != s2
@@ -3669,9 +3615,6 @@ def sink_iceberg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's own reader; prior snapshots stay time-travelable across
     the rewrite (pinned in tests/test_round5_fixes.py along with the
     duplicate-key refusal)."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3687,11 +3630,7 @@ def sink_iceberg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_iceberg_merge_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("iceberg_merge", sf_dir)
     s1 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     source = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -3722,10 +3661,7 @@ def sink_iceberg_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapshot's own manifest metadata (every selected file's tuple
     is 'en' and non-'en' tuples exist to be pruned), so the correctness
     gate pins pruning, and the hash match pins the values."""
-    import hashlib
     import json
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3742,11 +3678,7 @@ def sink_iceberg_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_iceberg_part_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("iceberg_part", sf_dir)
     append_iceberg(docs, table, partition_by="lang")
     snap = IcebergSnapshot(table)
     tuples = {json.dumps(snap.partitions.get(f)) for f in snap.files}
@@ -3785,9 +3717,6 @@ def sink_hudi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pulls work on engine-written tables — pinned (with untouched-group
     preservation and duplicate-key refusal) in
     tests/test_round5_fixes.py."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -3801,11 +3730,7 @@ def sink_hudi_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_hudi_sink_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("hudi_sink", sf_dir)
     t1 = append_hudi(docs.filter(F.col("doc_id") % 2 == 0), table)
     source = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -4076,9 +4001,6 @@ def scan_delta_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-matching the odd half recomputed from the original documents
     table proves range filtering, the dataChange gate, and the version
     tag."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4094,12 +4016,7 @@ def scan_delta_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_inc_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_inc", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     append_delta(docs.filter(F.col("doc_id") % 2 == 1), table)
     compact_delta(spark, table)
@@ -4188,10 +4105,7 @@ def sink_iceberg_days_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     (identity on lang), the tuple value here is a TRANSFORM output
     (day ordinal 19727), so the hash match pins the writer transform
     == reader fold == spec semantics three ways."""
-    import hashlib
     import json
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4208,12 +4122,7 @@ def sink_iceberg_days_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_days_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_days", sf_dir)
     append_iceberg(
         events.filter(F.col("event_id") % 2 == 0),
         table,
@@ -4276,9 +4185,6 @@ def sink_hudi_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent recomputation.  Log updates carry only (doc_id,
     n_chars): the merged lang column proves partial-payload overwrite
     keeps base values."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4297,12 +4203,7 @@ def sink_hudi_mor_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_hudi_mor_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("hudi_mor", sf_dir)
     t1 = append_hudi(docs.filter(F.col("doc_id") % 2 == 0), table)
     log = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", (F.col("n_chars") + F.lit(1000)).alias("n_chars")
@@ -4350,7 +4251,6 @@ def sink_delta_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins encode -> descriptor -> decode -> anti-join end to end."""
     import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4368,12 +4268,7 @@ def sink_delta_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_mdv_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_mdv", sf_dir)
     v0 = append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
 
     def _digest(rel):
@@ -4466,9 +4361,6 @@ def sink_iceberg_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     changed, logical table identical).  Asserted in-key: the file count
     actually shrank to 1, and time travel to the pre-compaction
     snapshot still serves the first append's half through the rewrite."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4486,12 +4378,7 @@ def sink_iceberg_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_compact_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_compact", sf_dir)
     s1 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     append_iceberg(docs.filter(F.col("doc_id") % 2 == 1), table)
     n_before = len(IcebergSnapshot(table).files)
@@ -4609,9 +4496,6 @@ def scan_hudi_mor_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of MoR incremental pulls).  The log's partial payload
     (doc_id, n_chars) surfaces as-is: columns the range never touched
     are NULL, matching Hudi's incremental relation over log blocks."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4627,12 +4511,7 @@ def scan_hudi_mor_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_hudi_morinc_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("hudi_morinc", sf_dir)
     t1 = append_hudi(docs.filter(F.col("doc_id") % 2 == 0), table)
     log = docs.filter(F.col("doc_id") % 3 == 0).select(
         "doc_id", (F.col("n_chars") + F.lit(1000)).alias("n_chars")
@@ -4656,7 +4535,7 @@ def scan_hudi_mor_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_delta_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta HIVE-PARTITIONED write + file-pruned read, both
-    engine-side (sources/delta_writer.py:_write_partitioned_data_files
+    engine-side (sources/delta_writer.py:_write_data_files
     + sources/delta.py partition_filter) — closing the write trio's
     last asymmetry: the reader handled partitioned tables since r3,
     now the writer produces them.  Per protocol, data files EXCLUDE
@@ -4666,9 +4545,6 @@ def sink_delta_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning-compatibility check; the read with
     partition_filter={'lang':'en'} must touch ONLY that partition's
     files — asserted in-key from the snapshot's own add metadata."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4685,12 +4561,7 @@ def sink_delta_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_part_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_part", sf_dir)
     append_delta(
         docs.filter(F.col("doc_id") % 2 == 0), table, partition_by="lang"
     )
@@ -4953,7 +4824,6 @@ def sink_delta_merge_dv_partitioned(
     (file-level pruning survives the DV path)."""
     import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -4971,12 +4841,7 @@ def sink_delta_merge_dv_partitioned(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_mdvp_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_mdvp", sf_dir)
     v0 = append_delta(
         docs.filter(F.col("doc_id") % 2 == 0), table, partition_by="lang"
     )
@@ -5147,9 +5012,6 @@ def scan_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_metadata.row_index``) and its inserts from the genuinely-new
     file.  Hash-matched end to end: DV encode → descriptor diff →
     row-level change events."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -5165,12 +5027,7 @@ def scan_delta_cdf_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_cdfdv_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_cdfdv", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     s1 = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -5216,9 +5073,6 @@ def scan_delta_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown-visible file count the reader exposes after planning,
     using inputFiles-equivalent semantics (the filtered scan touches
     only the 'de' partition's rows)."""
-    import hashlib as _hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -5239,11 +5093,8 @@ def scan_delta_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    h = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    t_dv = os.path.join("/tmp", f"glue_spark_pyds_dv_{h}")
-    t_part = os.path.join("/tmp", f"glue_spark_pyds_part_{h}")
-    shutil.rmtree(t_dv, ignore_errors=True)
-    shutil.rmtree(t_part, ignore_errors=True)
+    t_dv = _tmp_table("pyds_dv", sf_dir)
+    t_part = _tmp_table("pyds_part", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), t_dv)
     merge_delta_dv(
         spark, t_dv,
@@ -5302,9 +5153,6 @@ def stream_delta_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits ONLY the new commit's rows) and a third no-op drain (zero
     new rows).  A dataChange-remove commit refuses loudly (the delta
     streaming source's own append-only default)."""
-    import hashlib as _hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -5321,12 +5169,9 @@ def stream_delta_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    h = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    table = os.path.join("/tmp", f"glue_spark_pyds_stream_{h}")
-    out = os.path.join("/tmp", f"glue_spark_pyds_stream_out_{h}")
-    ckpt = os.path.join("/tmp", f"glue_spark_pyds_stream_ck_{h}")
-    for p in (table, out, ckpt):
-        shutil.rmtree(p, ignore_errors=True)
+    table = _tmp_table("pyds_stream", sf_dir)
+    out = _tmp_table("pyds_stream_out", sf_dir)
+    ckpt = _tmp_table("pyds_stream_ck", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 4 == 0), table)
     append_delta(docs.filter(F.col("doc_id") % 4 == 2), table)
 
@@ -5398,9 +5243,7 @@ def sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
       registry (never an opaque missing-file scan error);
     * the live snapshot keeps resolving through the files-index path
       and the timeline gains exactly one .clean instant."""
-    import hashlib as _hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -5419,12 +5262,7 @@ def sink_hudi_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_hclean_"
-        + _hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    table = _tmp_table("hclean", sf_dir)
     odds = docs.filter(F.col("doc_id") % 2 == 1)
     append_hudi(odds, table)
     upsert_hudi(
@@ -5532,9 +5370,6 @@ def scan_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes this key value-oracle-checkable.  In-key: the delta
     resolution is pinned version-exact, and too-early timestamps
     refuse on both delta and iceberg."""
-    import hashlib as _hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -5571,12 +5406,9 @@ def scan_time_travel_timestamp(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    h = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    d_tbl = os.path.join("/tmp", f"glue_spark_ttd_{h}")
-    i_tbl = os.path.join("/tmp", f"glue_spark_tti_{h}")
-    h_tbl = os.path.join("/tmp", f"glue_spark_tth_{h}")
-    for t in (d_tbl, i_tbl, h_tbl):
-        shutil.rmtree(t, ignore_errors=True)
+    d_tbl = _tmp_table("ttd", sf_dir)
+    i_tbl = _tmp_table("tti", sf_dir)
+    h_tbl = _tmp_table("tth", sf_dir)
     evens = docs.filter(F.col("doc_id") % 2 == 0)
     odd3 = docs.filter(
         (F.col("doc_id") % 2 == 1) & (F.col("doc_id") % 3 == 0)
@@ -5671,8 +5503,6 @@ def scan_delta_uniform_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (row visibility lives in the Delta log — real UniForm has the
     same restriction), and both readers return identical row counts.
     Hash-matched through the ICEBERG read path."""
-    import hashlib as _hashlib
-    import os
     import shutil
 
     from pyspark.sql import functions as F
@@ -5698,12 +5528,7 @@ def scan_delta_uniform_iceberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_uniform_"
-        + _hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    table = _tmp_table("uniform", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)  # v0
     merge_delta(
         spark, table,
@@ -5832,12 +5657,7 @@ def scan_iceberg_v3_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_v3dv_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    table = _tmp_table("ice_v3dv", sf_dir)
     append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     pre = IcebergSnapshot(table)
 
@@ -6033,7 +5853,6 @@ def sink_iceberg_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq-scoped pos-delete reader (sources/iceberg.py:_scan)."""
     import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6051,12 +5870,7 @@ def sink_iceberg_merge_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_mdv_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_mdv", sf_dir)
     snap0 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
 
     def _digest(rel):
@@ -6138,9 +5952,7 @@ def sink_delta_checkpoint_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-filtered read prunes file-level.  The returned frame
     replays the post-cleanup snapshot — hash-matching it proves the
     checkpoint is state-complete."""
-    import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6159,12 +5971,7 @@ def sink_delta_checkpoint_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_ckdv_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_ckdv", sf_dir)
     append_delta(
         docs.filter(F.col("doc_id") % 2 == 0), table, partition_by="lang"
     )
@@ -6219,9 +6026,7 @@ def _ckpt_foreign_fixture(spark, sf_dir: str, tag: str, write_checkpoint):
     ``write_checkpoint`` → DELETE every pre-checkpoint commit (replay
     MUST go through the checkpoint) → post-checkpoint append.
     Returns (table_path, checkpoint_version, n_commits_deleted)."""
-    import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6234,12 +6039,7 @@ def _ckpt_foreign_fixture(spark, sf_dir: str, tag: str, write_checkpoint):
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        f"glue_spark_delta_{tag}_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table(f"delta_{tag}", sf_dir)
     append_delta(
         docs.filter(F.col("doc_id") % 2 == 0), table, partition_by="lang"
     )
@@ -6418,9 +6218,7 @@ def scan_delta_log_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel to the range END resolves through the compaction file.
     The writer twin (delta_writer.compact_delta_log) emits the spec's
     reconciled-action form."""
-    import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6442,12 +6240,7 @@ def scan_delta_log_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_logc_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_logc", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)  # v0
     append_delta(
         docs.filter(
@@ -6535,7 +6328,6 @@ def scan_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite at any table size); the widening itself runs inside the
     vectorized parquet reader (SPARK-40876), so the scan cost is the
     plain scan cost."""
-    import hashlib as _hashlib
     import os
     import shutil
 
@@ -6562,12 +6354,7 @@ def scan_delta_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_acctbal").cast("float").alias("c_acctbal"),
         "c_mktsegment",
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_widen_"
-        + _hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)
+    table = _tmp_table("delta_widen", sf_dir)
     append_delta(cust.filter(F.col("c_custkey") % 2 == 0), table)  # v0
     widen_delta_column(spark, table, "c_nationkey", "long")  # v1
     widen_delta_column(spark, table, "c_acctbal", "double")  # v2
@@ -6666,7 +6453,6 @@ def sink_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     The replay goes through the engine's own eq-delete reader."""
     import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6684,12 +6470,7 @@ def sink_iceberg_eq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_eqdel_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_eqdel", sf_dir)
     append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
 
     def _digest(rel):
@@ -6738,9 +6519,6 @@ def sink_delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     CoW merge, time travel to the merged version still serves the
     merged state while the head serves the original — the restore is
     additive, not a log rewrite."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6758,12 +6536,7 @@ def sink_delta_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_restore_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_restore", sf_dir)
     v0 = append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     src = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -6795,9 +6568,6 @@ def sink_delta_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-compaction files, the latest snapshot replays identically
     afterwards (hash match), and time travel to the pre-compaction
     version now fails at scan time — the documented trade."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6815,12 +6585,7 @@ def sink_delta_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_vacuum_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_vacuum", sf_dir)
     append_delta(
         docs.filter(F.col("doc_id") % 2 == 0).repartition(3), table, n_files=3
     )
@@ -6857,9 +6622,6 @@ def sink_iceberg_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     physically deletes every file only it referenced.  Asserted
     in-key: files deleted, time travel to the expired snapshot id
     refuses, and the retained head replays hash-identically."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -6880,12 +6642,7 @@ def sink_iceberg_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_expire_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_expire", sf_dir)
     snap0 = append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     src = docs.filter(F.col("doc_id") % 3 == 0).withColumn(
         "n_chars", F.col("n_chars") + F.lit(1000)
@@ -6951,12 +6708,7 @@ def sink_iceberg_expire_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_expol_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_expol", sf_dir)
     snaps = [
         append_iceberg(docs.filter(F.col("doc_id") % 4 == i), table)
         for i in range(4)
@@ -7055,7 +6807,6 @@ def scan_hudi_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical across the upsert."""
     import hashlib
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -7074,12 +6825,7 @@ def scan_hudi_partitioned_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_hudi_part_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("hudi_part", sf_dir)
     append_hudi(
         docs.filter(F.col("doc_id") % 2 == 0), table, partition_by="lang"
     )
@@ -7159,9 +6905,6 @@ def sink_iceberg_schema_evolution(
     with its old ``lang`` data and reads n_tokens as null; a
     name-based reader would null the renamed column — the hash match
     catches exactly that."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
@@ -7182,12 +6925,7 @@ def sink_iceberg_schema_evolution(
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_ice_sevolve_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("ice_sevolve", sf_dir)
     append_iceberg(docs.filter(F.col("doc_id") % 2 == 0), table)
     new_schema = T.StructType(
         [
@@ -7239,9 +6977,6 @@ def sink_delta_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge_schema refuses (r7 also adds schema validation to plain
     appends — silent drift was previously possible), and a
     type-changing append refuses outright."""
-    import hashlib
-    import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -7257,12 +6992,7 @@ def sink_delta_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    table = os.path.join(
-        "/tmp",
-        "glue_spark_delta_smerge_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
-    shutil.rmtree(table, ignore_errors=True)  # idempotent per run
+    table = _tmp_table("delta_smerge", sf_dir)
     append_delta(docs.filter(F.col("doc_id") % 2 == 0), table)
     wider = docs.filter(F.col("doc_id") % 2 == 1).withColumn(
         "n_tokens", F.floor(F.col("n_chars") / F.lit(4)).cast("long")

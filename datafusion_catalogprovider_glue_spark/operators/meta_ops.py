@@ -20,9 +20,12 @@ the DuckDB oracle from the source rows.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import hashlib
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,9 +35,23 @@ from datafusion_catalogprovider_glue_spark.session import apply_engine_conf
 from datafusion_catalogprovider_glue_spark.tables import load_table
 
 
+@functools.lru_cache(maxsize=None)
+def _scratch_root() -> str:
+    """This process's directory for the tables keys rebuild on every
+    call — made once, removed at exit, so two processes running one
+    key over one ``sf_dir`` never share, or delete, each other's
+    tables."""
+    root = tempfile.mkdtemp(prefix="glue_spark_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
 def _tmp_table(prefix: str, sf_dir: str) -> str:
+    """An empty path for a table a key rebuilds on every call: under
+    this process's scratch directory, named by ``prefix`` and
+    ``sf_dir``, cleared of a previous call's table."""
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    path = os.path.join("/tmp", f"glue_spark_{prefix}_{h}")
+    path = os.path.join(_scratch_root(), f"{prefix}_{h}")
     shutil.rmtree(path, ignore_errors=True)  # idempotent per run
     return path
 

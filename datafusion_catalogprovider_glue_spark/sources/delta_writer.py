@@ -20,8 +20,12 @@ Format notes (public Delta protocol):
 * each commit ``N`` is ``_delta_log/{N:020d}.json`` of newline-JSON
   actions; version 0 carries ``protocol`` + ``metaData`` first.
 * data files live under the table root with ``add.path`` RELATIVE;
-  this writer puts each commit's files in a ``commit-N/`` subdir so
-  concurrent rewrites never collide on names.
+  this writer puts each commit's files in a ``commit-N/`` subdir.  Two
+  writers that both expect version N share that directory, so the
+  files are claimed put-if-absent under Spark's job-unique names
+  (parquet_stats.write_data_files): the loser's files never replace
+  the winner's, its ``_commit`` of N fails, and they stay unreferenced
+  until ``vacuum_delta``.
 
 Determinism: the table id derives from the table path (md5), file
 lists are sorted, and JSON keys are emitted in a fixed order — two
@@ -40,7 +44,9 @@ from pyspark.sql import DataFrame
 
 from datafusion_catalogprovider_glue_spark.errors import DeltaError
 from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    ConcurrentWriteError,
     footer_stats,
+    write_data_files,
 )
 
 _PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -121,23 +127,25 @@ def _metadata_action(
     }
 
 
-def _write_data_files(df: DataFrame, table_path: str, subdir: str,
+def _write_data_files(df: DataFrame, table_path: str, version: int,
+                      partition_columns: list[str],
                       n_files: int) -> list[dict]:
-    """Write the DataFrame as parquet under ``table_path/subdir`` and
-    return one ``add`` action per data file.  The write is the normal
-    distributed parquet sink; only the FILE LISTING (metadata, not
-    rows) happens driver-side."""
-    out_dir = os.path.join(table_path, subdir)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_dir)
+    """Write the DataFrame as the data files of commit ``version``
+    under ``commit-<version>/`` and return one ``add`` action per
+    file.  With a partition column the table is HIVE-PARTITIONED per
+    the Delta protocol: the files EXCLUDE the column (the reader
+    re-attaches it from ``add.partitionValues``), whose values are
+    recorded in the protocol's string form (None for NULL)."""
     adds = []
-    for name in sorted(os.listdir(out_dir)):
-        if not name.endswith(".parquet"):
-            continue  # _SUCCESS marker etc.
-        full = os.path.join(out_dir, name)
+    for rel, values in write_data_files(
+        df, table_path, lambda rel, _values, _i: f"commit-{version}/{rel}",
+        partition_columns, n_files,
+    ):
+        full = os.path.join(table_path, rel)
         adds.append(
             {
-                "path": f"{subdir}/{name}",
-                "partitionValues": {},
+                "path": rel,
+                "partitionValues": values,
                 "size": os.path.getsize(full),
                 "modificationTime": int(os.path.getmtime(full) * 1000),
                 "dataChange": True,
@@ -146,11 +154,6 @@ def _write_data_files(df: DataFrame, table_path: str, subdir: str,
             }
         )
     return adds
-
-
-class ConcurrentWriteError(RuntimeError):
-    """Another writer committed this version first — the caller must
-    re-read the table and retry (Delta's optimistic concurrency)."""
 
 
 _ICT_BASE_MS = 1700000000000  # deterministic seq-derived timestamps
@@ -230,42 +233,6 @@ def _commit(log_dir: str, version: int, actions: list[dict]) -> None:
         ) from None
     finally:
         os.unlink(tmp)
-
-
-def _write_partitioned_data_files(
-    df: DataFrame, table_path: str, subdir: str, partition_by: str
-) -> list[dict]:
-    """HIVE-partitioned distributed write: Spark's ``partitionBy`` lays
-    the data out per value and — per the Delta protocol's rule —
-    EXCLUDES the partition column from the data files (the reader
-    re-attaches it from ``add.partitionValues``).  Values are recorded
-    as the protocol's string form (None for the Hive NULL sentinel)."""
-    from urllib.parse import unquote
-
-    out_dir = os.path.join(table_path, subdir)
-    df.write.partitionBy(partition_by).mode("overwrite").parquet(out_dir)
-    adds = []
-    for d in sorted(os.listdir(out_dir)):
-        if not d.startswith(f"{partition_by}="):
-            continue
-        raw = unquote(d[len(partition_by) + 1:])
-        value = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
-        pdir = os.path.join(out_dir, d)
-        for name in sorted(os.listdir(pdir)):
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(pdir, name)
-            adds.append(
-                {
-                    "path": f"{subdir}/{d}/{name}",
-                    "partitionValues": {partition_by: value},
-                    "size": os.path.getsize(full),
-                    "modificationTime": int(os.path.getmtime(full) * 1000),
-                    "dataChange": True,
-                    "stats": _file_stats(full),
-                }
-            )
-    return adds
 
 
 def _physical_name(logical: str) -> str:
@@ -373,6 +340,7 @@ def append_delta(
     version."""
     log_dir = _log_dir(table_path)
     version = _next_version(log_dir)
+    part_cols = [partition_by] if partition_by else []
     evolved_meta = None
     if version > 0:
         from datafusion_catalogprovider_glue_spark.sources.delta import (
@@ -385,10 +353,10 @@ def append_delta(
         # normal write shape, not a schema drop)
         df = _apply_generated(df, snap.schema, "the append batch")
         have = snap.partition_columns
-        want = [partition_by] if partition_by else []
-        if have != want:
+        if have != part_cols:
             raise ValueError(
-                f"append partitioning {want} != table partitioning {have}"
+                f"append partitioning {part_cols} != table partitioning "
+                f"{have}"
             )
         have_types = {f.name: f.dataType for f in snap.schema.fields}
         new_types = {f.name: f.dataType for f in df.schema.fields}
@@ -479,21 +447,13 @@ def append_delta(
             *[F.col(f.name).alias(_physical_name(f.name))
               for f in df.schema.fields]
         )
-    adds = (
-        _write_partitioned_data_files(
-            df, table_path, f"commit-{version}", partition_by
-        )
-        if partition_by
-        else _write_data_files(df, table_path, f"commit-{version}", n_files)
-    )
+    adds = _write_data_files(df, table_path, version, part_cols, n_files)
     actions: list[dict] = [_commit_info("WRITE")]
     if version == 0:
         actions.append(
             {"protocol": _CM_PROTOCOL if column_mapping else _PROTOCOL}
         )
-        meta_action = _metadata_action(
-            df, table_path, [partition_by] if partition_by else ()
-        )
+        meta_action = _metadata_action(df, table_path, part_cols)
         if generated:
             meta_action["metaData"]["schemaString"] = _gen_schema_json(
                 logical_schema, generated
@@ -554,12 +514,8 @@ def compact_delta(spark, table_path: str) -> int:
     # APPLIED (a compaction folds deletion vectors away — the rewritten
     # files carry no masked rows, so the sidecars retire with the adds)
     df = _live_rows(spark, snap)
-    adds = (
-        _write_partitioned_data_files(
-            df, table_path, f"commit-{version}", snap.partition_columns[0]
-        )
-        if snap.partition_columns
-        else _write_data_files(df, table_path, f"commit-{version}", 1)
+    adds = _write_data_files(
+        df, table_path, version, snap.partition_columns, 1
     )
     now = int(time.time() * 1000)
     actions = [_commit_info("OPTIMIZE")]
@@ -665,9 +621,7 @@ def optimize_delta_zorder(
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    adds = _write_data_files(
-        laid_out, table_path, f"commit-{version}", n_files
-    )
+    adds = _write_data_files(laid_out, table_path, version, [], n_files)
     now = int(time.time() * 1000)
     actions = [_commit_info("OPTIMIZE ZORDER")]
     actions.extend(
@@ -721,7 +675,10 @@ def merge_delta(
     Concurrency: the merge validates against ``expected_version`` (the
     snapshot version it read, defaulting to the current one) and
     publishes version+1 put-if-absent; a racing writer that committed
-    first surfaces as ConcurrentWriteError, never a lost update.
+    first surfaces as ConcurrentWriteError, never a lost update.  Its
+    data and change files are claimed put-if-absent under job-unique
+    names beside the winner's, so losing the race deletes or replaces
+    none of the winner's files; the loser's stay unreferenced.
     """
     from pyspark.sql import functions as F
 
@@ -817,13 +774,8 @@ def merge_delta(
                 f"generated column {gname!r} (= {gexpr}) does not match "
                 f"the merge result: {bad[0].asDict()}"
             )
-    adds = (
-        _write_partitioned_data_files(
-            merged, table_path, f"commit-{version}",
-            snap.partition_columns[0],
-        )
-        if snap.partition_columns
-        else _write_data_files(merged, table_path, f"commit-{version}", 2)
+    adds = _write_data_files(
+        merged, table_path, version, snap.partition_columns, 2
     )
     # CHANGE DATA FEED (PROTOCOL.md §Change Data Files): with
     # delta.enableChangeDataFeed on, the merge also writes row-level
@@ -866,20 +818,17 @@ def merge_delta(
         changes = chunks[0]
         for ch in chunks[1:]:
             changes = changes.unionByName(ch)
-        cdc_dir = f"_change_data/cdc-{version}"
-        changes.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(table_path, cdc_dir)
-        )
-        for fname in sorted(os.listdir(os.path.join(table_path, cdc_dir))):
-            if not fname.endswith(".parquet"):
-                continue
-            full = os.path.join(table_path, cdc_dir, fname)
+        for rel, _values in write_data_files(
+            changes, table_path,
+            lambda rel, _values, _i: f"_change_data/cdc-{version}/{rel}",
+            n_files=1,
+        ):
             cdc_actions.append(
                 {
                     "cdc": {
-                        "path": f"{cdc_dir}/{fname}",
+                        "path": rel,
                         "partitionValues": {},
-                        "size": os.path.getsize(full),
+                        "size": os.path.getsize(os.path.join(table_path, rel)),
                         "dataChange": False,
                     }
                 }
@@ -1387,27 +1336,21 @@ def merge_delta_dv(
         # write unconditionally; emptiness (everything matched the
         # delete clause) is detected from the written footers' row
         # counts — no probe-count job re-running the matched join
-        if snap.partition_columns:
-            adds_new = _write_partitioned_data_files(
-                new_rows.select(*cols), table_path,
-                f"commit-{version}", snap.partition_columns[0],
-            )
-        else:
-            adds_new = _write_data_files(
-                new_rows.select(*cols), table_path, f"commit-{version}", 1
-            )
+        adds_new = _write_data_files(
+            new_rows.select(*cols), table_path, version,
+            snap.partition_columns, 1,
+        )
         kept = []
         for a in adds_new:
             if json.loads(a["stats"])["numRecords"] > 0:
                 kept.append(a)
             else:
-                os.unlink(os.path.join(table_path, a["path"]))
-        if not kept:
-            _sub = os.path.join(table_path, f"commit-{version}")
-            if os.path.isdir(_sub):
-                import shutil as _shutil
-
-                _shutil.rmtree(_sub)
+                full = os.path.join(table_path, a["path"])
+                os.unlink(full)
+                try:  # only an empty directory: others' files stay
+                    os.rmdir(os.path.dirname(full))
+                except OSError:
+                    pass
         adds_new = kept
     # union the new masks with each touched file's EXISTING DV rows
     # (untouched files keep their old descriptors); then encode one

@@ -24,6 +24,10 @@ Format notes (Hudi spec, https://hudi.apache.org/tech-specs/):
   file; an ``<instant>.commit.inflight`` marker precedes the commit
   (readers ignore it), and publishing the ``.commit`` file IS the
   atomic commit point (put-if-absent here, like the Delta writer).
+  Base files are named by the instant too, and each is claimed
+  put-if-absent BEFORE that point (parquet_stats.write_data_files): a
+  writer that computed an instant another writer already committed
+  fails on the first taken name, and the winner's base files stay.
 * instants are monotonically increasing timestamps; this writer uses
   a deterministic 14-digit sequence (20240101000000 + k) rather than
   wall clock, per the repo's determinism convention.
@@ -40,7 +44,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +52,9 @@ from pyspark.sql import types as T
 from datafusion_catalogprovider_glue_spark.errors import SparkError
 from datafusion_catalogprovider_glue_spark.sources.object_store import (
     file_path_col,
+)
+from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    write_data_files,
 )
 from datafusion_catalogprovider_glue_spark.sources.hudi import (
     table_partition_field,
@@ -153,29 +159,49 @@ def _refuse_clustered(location: str, op: str) -> None:
         )
 
 
+def _base_file(ppath: str, file_id: str, instant: str) -> str:
+    """The spec's ``<fileId>_<writeToken>_<instant>.parquet`` base
+    file name, under its partition path ("" = unpartitioned)."""
+    return os.path.join(ppath, f"{file_id}_0-0-0_{instant}.parquet")
+
+
+def _write_base_files(df: DataFrame, location: str, instant: str,
+                      group_of, layout: str = None,
+                      one_per_group: bool = False) -> dict:
+    """Write every base file of one instant in ONE distributed parquet
+    write (laid out by the ``layout`` column when given) and return
+    ``{ppath: [{"fileId", "path"}, ...]}`` ("" = unpartitioned) in
+    the writer's sorted file order.  ``group_of(values, index)`` maps
+    each written file to its ``(ppath, fileId)``; with
+    ``one_per_group`` a layout value that produced a second file
+    refuses, since a file group is ONE base file per instant (CoW)."""
+    by_part: dict[str, list[dict]] = {}
+
+    def _name(_rel: str, values: dict, i: int) -> str:
+        ppath, fid = group_of(values, i)
+        if one_per_group and i:
+            raise SparkError(
+                f"file-group write produced more than one file for "
+                f"{fid!r} — a group must stay one base file"
+            )
+        path = _base_file(ppath, fid, instant)
+        by_part.setdefault(ppath, []).append({"fileId": fid, "path": path})
+        return path
+
+    write_data_files(df, location, _name, [layout] if layout else ())
+    return by_part
+
+
 def _write_file_group(
     df: DataFrame, location: str, instant: str, file_id: str
 ) -> dict:
-    """One file group = one base file per instant (CoW).  The write is
-    the ordinary parquet sink; the part file is renamed to the spec's
-    ``<fileId>_<writeToken>_<instant>.parquet`` layout."""
-    staging = os.path.join(location, f"_staging_{file_id}_{instant}")
-    (
-        df.withColumn("_hoodie_commit_time", F.lit(instant))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    part = next(
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(staging)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    name = f"{file_id}_0-0-0_{instant}.parquet"
-    os.replace(part, os.path.join(location, name))
-    shutil.rmtree(staging)
-    return {"fileId": file_id, "path": name}
+    """One file group = one base file per instant (CoW), stamped with
+    the instant's ``_hoodie_commit_time``."""
+    [stat] = _write_base_files(
+        df.withColumn("_hoodie_commit_time", F.lit(instant)).coalesce(1),
+        location, instant, lambda _values, _i: ("", file_id),
+    )[""]
+    return stat
 
 
 def append_hudi(
@@ -252,52 +278,23 @@ def _extra_meta(extra_metadata: dict) -> dict:
 def _write_partitioned_file_groups(
     df: DataFrame, location: str, instant: str, partition_by: str
 ) -> dict:
-    """ONE distributed partitionBy job lays every partition out; the
-    driver then renames each part file into its ``<col>=<val>/``
-    directory under a file-group name.  The layout key ``__hp``
-    duplicates the partition column's STRING form (so the column
-    itself stays in the data files) and NULL maps to the Hive
-    sentinel directory."""
-    from urllib.parse import unquote
+    """ONE distributed partitionBy write lays every partition out, each
+    part file becoming a file group in its ``<col>=<val>/`` directory.
+    The layout key ``__hp`` duplicates the partition column's STRING
+    form (so the column itself stays in the data files); NULL lands in
+    the Hive sentinel directory."""
 
-    staging = os.path.join(location, f"_staging_append_{instant}")
-    (
-        df.withColumn(
-            "__hp",
-            F.coalesce(
-                F.col(partition_by).cast("string"),
-                F.lit("__HIVE_DEFAULT_PARTITION__"),
-            ),
-        )
-        .withColumn("_hoodie_commit_time", F.lit(instant))
-        .write.partitionBy("__hp")
-        .mode("overwrite")
-        .parquet(staging)
+    def _group(values: dict, j: int) -> tuple[str, str]:
+        raw = values["__hp"]
+        raw = "__HIVE_DEFAULT_PARTITION__" if raw is None else raw
+        return (f"{partition_by}={raw}",
+                f"fg-{instant}-{_part_slug(raw)}-{j}")
+
+    return _write_base_files(
+        df.withColumn("__hp", F.col(partition_by).cast("string"))
+        .withColumn("_hoodie_commit_time", F.lit(instant)),
+        location, instant, _group, "__hp",
     )
-    stats: dict[str, list[dict]] = {}
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("__hp="):
-            continue
-        raw = unquote(d[len("__hp="):])
-        ppath = f"{partition_by}={raw}"
-        os.makedirs(os.path.join(location, ppath), exist_ok=True)
-        names = sorted(
-            n
-            for n in os.listdir(os.path.join(staging, d))
-            if n.endswith(".parquet")
-        )
-        for j, n in enumerate(names):
-            fid = f"fg-{instant}-{_part_slug(raw)}-{j}"
-            name = f"{fid}_0-0-0_{instant}.parquet"
-            os.replace(
-                os.path.join(staging, d, n),
-                os.path.join(location, ppath, name),
-            )
-            stats.setdefault(ppath, []).append(
-                {"fileId": fid, "path": f"{ppath}/{name}"}
-            )
-    shutil.rmtree(staging)
-    return stats
 
 
 def _part_slug(raw: str) -> str:
@@ -341,55 +338,23 @@ def _write_dest_routed(
     ones are written as empty single-file groups.
     Returns ``{ppath: [{"fileId","path"}, ...]}`` ("" = unpartitioned).
     """
-    from urllib.parse import unquote
 
-    staging = os.path.join(location, f"_staging_routed_{instant}")
-    (
-        routed.repartition("_dest")
-        .write.partitionBy("_dest")
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    by_part: dict[str, list[dict]] = {}
-    seen_fids: set[str] = set()
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("_dest="):
-            continue
-        dest = unquote(d[len("_dest="):])
-        fid, _sep, ppath = dest.partition(_DEST_SEP)
+    def _group(values: dict, _i: int) -> tuple[str, str]:
+        fid, _sep, ppath = values["_dest"].partition(_DEST_SEP)
         if fid == _NEW_GROUP:
             if ppath:
-                # _dest was built as <fid>\x1f<col>=<raw>; the single
-                # unquote above already recovered raw verbatim
+                # _dest was built as <fid>\x1f<col>=<raw>, and the
+                # writer's unescape recovered raw verbatim
                 fid = f"fg-{instant}-{_part_slug(ppath.split('=', 1)[1])}-0"
             else:
                 fid = f"fg-{instant}-new"
-        names = sorted(
-            n
-            for n in os.listdir(os.path.join(staging, d))
-            if n.endswith(".parquet")
-        )
-        if len(names) != 1:
-            raise SparkError(
-                f"file-group write produced {len(names)} files for "
-                f"{fid!r} — a group must stay one base file"
-            )
-        if ppath:
-            os.makedirs(os.path.join(location, ppath), exist_ok=True)
-        name = f"{fid}_0-0-0_{instant}.parquet"
-        os.replace(
-            os.path.join(staging, d, names[0]),
-            os.path.join(location, ppath, name) if ppath
-            else os.path.join(location, name),
-        )
-        seen_fids.add(fid)
-        by_part.setdefault(ppath, []).append(
-            {
-                "fileId": fid,
-                "path": os.path.join(ppath, name) if ppath else name,
-            }
-        )
-    shutil.rmtree(staging)
+        return ppath, fid
+
+    by_part = _write_base_files(
+        routed.repartition("_dest"), location, instant, _group, "_dest",
+        one_per_group=True,
+    )
+    seen_fids = {st["fileId"] for sts in by_part.values() for st in sts}
     for fid in expect_fids or []:
         if fid in seen_fids:
             continue
@@ -944,40 +909,22 @@ def compact_hudi(spark: SparkSession, location: str, key: str) -> str:
                 F.coalesce(F.col("_log_t"), F.col("_hoodie_commit_time")),
             )
         merged = merged.drop("_log_t", *[f"_u_{c}" for c in upd_cols])
-    staging = os.path.join(location, f"_staging_compact_{instant}")
-    (
-        merged.repartition(F.col("_fg"))
-        .write.partitionBy("_fg")
-        .mode("overwrite")
-        .parquet(staging)
-    )
     # each group's new base file lands in ITS directory (the
     # partition dir on hive-partitioned tables — from the old base's
     # path, or the logs' for log-only groups); stats key by partition
     # path per the spec
-    by_part: dict[str, list[dict]] = {}
-    for file_id, live in work:
-        pdir = os.path.join(staging, f"_fg={file_id}")
-        part_file = next(
-            os.path.join(pdir, f)
-            for f in sorted(os.listdir(pdir))
-            if f.endswith(".parquet")
+    ppath_of = {
+        file_id: os.path.dirname(
+            base_latest[file_id][1] if file_id in base_latest
+            else live[0][1]
         )
-        if file_id in base_latest:
-            ppath = os.path.dirname(base_latest[file_id][1])
-        else:
-            ppath = os.path.dirname(live[0][1])
-        name = f"{file_id}_0-0-0_{instant}.parquet"
-        if ppath:
-            os.makedirs(os.path.join(location, ppath), exist_ok=True)
-        os.replace(part_file, os.path.join(location, ppath, name))
-        by_part.setdefault(ppath, []).append(
-            {
-                "fileId": file_id,
-                "path": os.path.join(ppath, name) if ppath else name,
-            }
-        )
-    shutil.rmtree(staging)
+        for file_id, live in work
+    }
+    by_part = _write_base_files(
+        merged.repartition(F.col("_fg")), location, instant,
+        lambda values, _i: (ppath_of[values["_fg"]], values["_fg"]),
+        "_fg", one_per_group=True,
+    )
     _publish(
         location, instant, by_part, action="commit",
         table_type="MERGE_ON_READ",
@@ -1034,27 +981,14 @@ def cluster_hudi(
         }
     )
     instant = _next_instant(location)
-    staging = os.path.join(location, f"_staging_cluster_{instant}")
-    (
+    by_part = _write_base_files(
         snapshot.repartitionByRange(n_groups, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode("overwrite")
-        .parquet(staging)
+        .sortWithinPartitions(sort_col),
+        location, instant,
+        lambda _values, i: ("", f"fg-cluster-{instant}-{i}"),
     )
-    parts = sorted(
-        n for n in os.listdir(staging) if n.endswith(".parquet")
-    )
-    stats = []
-    for i, part in enumerate(parts):
-        fid = f"fg-cluster-{instant}-{i}"
-        name = f"{fid}_0-0-0_{instant}.parquet"
-        os.replace(
-            os.path.join(staging, part), os.path.join(location, name)
-        )
-        stats.append({"fileId": fid, "path": name})
-    shutil.rmtree(staging)
     _publish(
-        location, instant, stats, action="replacecommit",
+        location, instant, by_part.get("", []), action="replacecommit",
         extra={"partitionToReplaceFileIds": {"": replaced}},
     )
     return instant

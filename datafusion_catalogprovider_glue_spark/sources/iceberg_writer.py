@@ -43,6 +43,8 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import posixpath
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -52,7 +54,9 @@ from datafusion_catalogprovider_glue_spark.sources.avro_fallback import (
     write_avro_container,
 )
 from datafusion_catalogprovider_glue_spark.sources.parquet_stats import (
+    claim,
     footer_stats,
+    write_data_files,
 )
 
 _SPARK_TO_ICEBERG = {
@@ -203,33 +207,21 @@ def _iceberg_schema(schema: T.StructType) -> list[dict]:
     return fields
 
 
+def _write_new_avro(path: str, schema: T.StructType, rows) -> None:
+    """Write one manifest or manifest list put-if-absent.  Their names
+    derive from the sequence number, so a writer holding stale
+    metadata fails here instead of replacing the files of the
+    snapshot that already took that sequence number."""
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    write_avro_container(tmp, schema, rows)
+    claim(tmp, path)
+
+
 def _load_meta(meta_dir: str) -> tuple[int, dict]:
     with open(os.path.join(meta_dir, "version-hint.text")) as fh:
         version = int(fh.read().strip())
     with open(os.path.join(meta_dir, f"v{version}.metadata.json")) as fh:
         return version, json.load(fh)
-
-
-def _write_data_files(
-    df: DataFrame, table_path: str, seq: int, n_files: int
-) -> list[tuple]:
-    """Distributed parquet write under ``data/commit-<seq>/``; returns
-    one ``_data_file_entry`` per file from the driver-side listing
-    (footer reads, no data scan)."""
-    subdir = f"data/commit-{seq}"
-    out_dir = os.path.join(table_path, subdir)
-    df.coalesce(n_files).write.mode("overwrite").parquet(out_dir)
-    out = []
-    for i, name in enumerate(
-        sorted(n for n in os.listdir(out_dir) if n.endswith(".parquet"))
-    ):
-        # deterministic names: Spark part files embed a random task
-        # UUID, which would leak nondeterminism into the manifests
-        final = f"part-{i:05d}.parquet"
-        os.rename(os.path.join(out_dir, name), os.path.join(out_dir, final))
-        full = os.path.join(out_dir, final)
-        out.append(_data_file_entry(f"{subdir}/{final}", full, None))
-    return out
 
 
 def _norm_spec(partition_by, transform: str = "identity") -> list[tuple[str, str]]:
@@ -244,32 +236,28 @@ def _norm_spec(partition_by, transform: str = "identity") -> list[tuple[str, str
     return [(c, t) for c, t in partition_by]
 
 
-def _write_partitioned_files(
-    df: DataFrame,
-    table_path: str,
-    seq: int,
-    partition_by,
-    transform: str = "identity",
+def _write_data_files(
+    df: DataFrame, table_path: str, seq: int, spec, n_files: int
 ) -> list[tuple]:
-    """Partitioned write under one or more TRANSFORM fields (spec
+    """Distributed parquet write under ``data/commit-<seq>/`` laid out
+    by the partition ``spec`` [(source col, transform)] (spec
     §partition-transforms; identity / bucket[N] / truncate[W] / year /
-    month / day / hour — sources/iceberg_transforms.py): one
-    distributed ``partitionBy`` job lays the data out by the
-    TRANSFORMED value tuple (the source columns stay in the data files
-    untouched, per the spec's rule that partition source columns are
-    stored in data files); the driver then walks the per-partition
-    directory tree and stamps each manifest entry with its full
-    partition tuple — the metadata Iceberg planners prune on without
-    opening files."""
-    from urllib.parse import unquote
-
+    month / day / hour — sources/iceberg_transforms.py; empty for an
+    unpartitioned write): the layout is the TRANSFORMED value tuple,
+    the source columns stay in the data files untouched (the spec's
+    rule), and each file is named ``part-NNNNN.parquet`` by its place
+    in its directory — Spark's part names embed a random job UUID,
+    which would leak nondeterminism into the manifests.  Returns one
+    ``_data_file_entry`` per file, stamped with its partition tuple
+    keyed by PARTITION FIELD names (ts_day, k_bucket, …; == the column
+    for identity) — the metadata planners prune on without opening
+    files."""
     from datafusion_catalogprovider_glue_spark.sources.iceberg_transforms import (
         partition_field_name,
         transform_column,
         transformed_dtype,
     )
 
-    spec = _norm_spec(partition_by, transform)
     dtype_of = dict(
         (f.name, f.dataType.simpleString()) for f in df.schema.fields
     )
@@ -284,47 +272,29 @@ def _write_partitioned_files(
             (layout, partition_field_name(col, tf),
              transformed_dtype(tf, dtype_of[col]))
         )
-    subdir = f"data/commit-{seq}"
-    out_dir = os.path.join(table_path, subdir)
-    (
-        out_df.write.partitionBy(*[f[0] for f in fields])
-        .mode("overwrite")
-        .parquet(out_dir)
-    )
 
-    def _parse(raw: str, dtype: str):
-        # Spark writes NULL partition values as the Hive default
-        # sentinel directory; record a null partition tuple value (not
-        # the sentinel string, and never int(<sentinel>))
-        if raw == "__HIVE_DEFAULT_PARTITION__":
-            return None
-        return int(raw) if dtype in ("int", "bigint") else raw
+    def _name(rel: str, _values: dict, i: int) -> str:
+        return posixpath.join(
+            f"data/commit-{seq}", posixpath.dirname(rel),
+            f"part-{i:05d}.parquet",
+        )
 
-    out = []
-    for root, _dirs, names in sorted(os.walk(out_dir)):
-        parquets = sorted(n for n in names if n.endswith(".parquet"))
-        if not parquets:
-            continue
-        rel_dir = os.path.relpath(root, out_dir)
-        comps = rel_dir.split(os.sep)
-        tup = {}
-        for comp in comps:
-            layout, _, raw = comp.partition("=")
-            fld = next(f for f in fields if f[0] == layout)
-            tup[fld[1]] = _parse(unquote(raw), fld[2])
-        for i, name in enumerate(parquets):
-            final = f"part-{i:05d}.parquet"
-            os.rename(os.path.join(root, name), os.path.join(root, final))
-            full = os.path.join(root, final)
-            # the partition tuple is keyed by PARTITION FIELD names
-            # (spec naming: ts_day, k_bucket, …; == the column for
-            # identity)
-            out.append(
-                _data_file_entry(
-                    f"{subdir}/{rel_dir}/{final}", full, dict(tup)
-                )
-            )
-    return out
+    def _parse(raw, dtype: str):
+        # a NULL partition value records null, never int(None)
+        if raw is None or dtype not in ("int", "bigint"):
+            return raw
+        return int(raw)
+
+    return [
+        _data_file_entry(
+            rel, os.path.join(table_path, rel),
+            {name: _parse(values[layout], dtype)
+             for layout, name, dtype in fields} or None,
+        )
+        for rel, values in write_data_files(
+            out_df, table_path, _name, [f[0] for f in fields], n_files
+        )
+    ]
 
 
 def append_iceberg(
@@ -483,14 +453,12 @@ def append_iceberg(
     meta["default-spec-id"] = spec_id
 
     snap_id = _snapshot_id(seq)
-    data_files = (
-        _write_partitioned_files(df, table_path, seq, partition_by, transform)
-        if partition_by
-        else _write_data_files(df, table_path, seq, n_files)
+    data_files = _write_data_files(
+        df, table_path, seq, _norm_spec(partition_by, transform), n_files
     )
 
     manifest_rel = f"metadata/manifest-{seq}-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, manifest_rel),
         _MANIFEST_SCHEMA,
         [
@@ -528,7 +496,7 @@ def append_iceberg(
             spec_id,
         )
     ]
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, list_rel), _MANIFEST_LIST_SCHEMA, list_rows
     )
 
@@ -684,14 +652,11 @@ def merge_iceberg(
     version, meta = _load_meta(meta_dir)
     seq = meta["last-sequence-number"] + 1
     snap_id = _snapshot_id(seq)
-    part_by = _default_spec_partition_by(meta)
-    data_files = (
-        _write_partitioned_files(merged, table_path, seq, part_by)
-        if part_by
-        else _write_data_files(merged, table_path, seq, 2)
+    data_files = _write_data_files(
+        merged, table_path, seq, _default_spec_partition_by(meta), 2
     )
     manifest_rel = f"metadata/manifest-{seq}-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, manifest_rel),
         _MANIFEST_SCHEMA,
         [
@@ -706,7 +671,7 @@ def merge_iceberg(
     list_rel = f"metadata/snap-{snap_id}.avro"
     # REPLACE: the new manifest list references ONLY the new manifest —
     # prior files are logically removed from this snapshot onward
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, list_rel),
         _MANIFEST_LIST_SCHEMA,
         [
@@ -768,14 +733,11 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int:
     version, meta = _load_meta(meta_dir)
     seq = meta["last-sequence-number"] + 1
     snap_id = _snapshot_id(seq)
-    part_by = _default_spec_partition_by(meta)
-    data_files = (
-        _write_partitioned_files(df, table_path, seq, part_by)
-        if part_by
-        else _write_data_files(df, table_path, seq, 1)
+    data_files = _write_data_files(
+        df, table_path, seq, _default_spec_partition_by(meta), 1
     )
     manifest_rel = f"metadata/manifest-{seq}-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, manifest_rel),
         _MANIFEST_SCHEMA,
         [
@@ -788,7 +750,7 @@ def compact_iceberg(spark: SparkSession, table_path: str) -> int:
         ],
     )
     list_rel = f"metadata/snap-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, list_rel),
         _MANIFEST_LIST_SCHEMA,
         [
@@ -915,34 +877,25 @@ def merge_iceberg_pos_delete(
     manifest_entries = []
     # ONE delete parquet for all matched pre-images (table-relative
     # file paths — the reader normalizes either form); written
-    # unconditionally to staging, published only when non-empty (the
-    # footer row count replaces the previous probe-count job)
-    del_rel = None
+    # unconditionally, dropped again when empty (the footer row count
+    # replaces the previous probe-count job)
     del_df = removed.select(
         F.replace(
             F.col("_file"), F.lit(root), F.lit("")
         ).alias("file_path"),
         F.col("_pos").cast("long").alias("pos"),
     ).orderBy("file_path", "pos")
-    staging = os.path.join(table_path, f"_staging_del_{seq}")
-    del_df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(staging)
-        for f in fs
-        if f.endswith(".parquet")
+    [(del_rel, _values)] = write_data_files(
+        del_df, table_path, lambda *_: f"data/deletes-{seq}.parquet",
+        n_files=1,
     )
-    import shutil as _shutil
-
-    n_del = pq.read_metadata(part).num_rows
+    n_del = pq.read_metadata(os.path.join(table_path, del_rel)).num_rows
     if n_del:
-        del_rel = f"data/deletes-{seq}.parquet"
-        os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-        os.replace(part, os.path.join(table_path, del_rel))
         manifest_entries.append(
             (1, 1, del_rel, "PARQUET", n_del, seq, None, None, None)
         )
-    _shutil.rmtree(staging)
+    else:
+        os.unlink(os.path.join(table_path, del_rel))
 
     if matched_delete is not None:
         drop_keys = matched_small.filter(F.col("_drop")).select(*on).distinct()
@@ -955,13 +908,9 @@ def merge_iceberg_pos_delete(
         # write unconditionally; emptiness (everything matched the
         # delete clause) is detected from the footer row counts the
         # listing already reads — no probe-count job
-        part_by = _default_spec_partition_by(meta)
-        data_files = (
-            _write_partitioned_files(
-                new_rows.select(*cols), table_path, seq, part_by
-            )
-            if part_by
-            else _write_data_files(new_rows.select(*cols), table_path, seq, 1)
+        data_files = _write_data_files(
+            new_rows.select(*cols), table_path, seq,
+            _default_spec_partition_by(meta), 1,
         )
         empty = [rel for rel, n, *_rest in data_files if n == 0]
         for rel in empty:
@@ -1168,21 +1117,18 @@ def merge_iceberg_dv_v3(
         body += _struct.pack("<I", 0)
         body += PUFFIN_MAGIC
         out_path = os.path.join(table_path, puffin_rel)
-        with open(out_path + ".tmp", "wb") as fh:
+        tmp = f"{out_path}.{uuid.uuid4().hex}.tmp"
+        with open(tmp, "wb") as fh:
             fh.write(bytes(body))
-        os.replace(out_path + ".tmp", out_path)
+        claim(tmp, out_path)  # a seq-derived name, like the manifests'
 
     if n_src > 0:
         # write unconditionally; emptiness (everything matched the
         # delete clause) is detected from the footer row counts the
         # listing already reads — no probe-count job
-        part_by = _default_spec_partition_by(meta)
-        data_files = (
-            _write_partitioned_files(
-                new_rows.select(*cols), table_path, seq, part_by
-            )
-            if part_by
-            else _write_data_files(new_rows.select(*cols), table_path, seq, 1)
+        data_files = _write_data_files(
+            new_rows.select(*cols), table_path, seq,
+            _default_spec_partition_by(meta), 1,
         )
         empty = [rel for rel, n, *_rest in data_files if n == 0]
         for rel in empty:
@@ -1247,7 +1193,7 @@ def _commit_fast_append(
     manifest path) still time-travel unchanged."""
     meta_dir = os.path.join(table_path, "metadata")
     manifest_rel = f"metadata/manifest-{seq}-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, manifest_rel),
         manifest_schema if manifest_schema is not None else _MANIFEST_SCHEMA,
         manifest_entries,
@@ -1284,7 +1230,7 @@ def _commit_fast_append(
             if not keep:
                 continue  # every entry superseded: manifest retires
             new_rel = f"metadata/manifest-{seq}-{snap_id}-rw{i}.avro"
-            write_avro_container(
+            _write_new_avro(
                 os.path.join(table_path, new_rel),
                 _struct_from_avro_schema(m_schema),
                 keep,
@@ -1300,7 +1246,7 @@ def _commit_fast_append(
             )
         prior_manifests = rewritten
     list_rel = f"metadata/snap-{snap_id}.avro"
-    write_avro_container(
+    _write_new_avro(
         os.path.join(table_path, list_rel),
         _MANIFEST_LIST_SCHEMA,
         [
@@ -1375,22 +1321,13 @@ def delete_iceberg_eq(
     version, meta = _load_meta(meta_dir)
     seq = meta["last-sequence-number"] + 1
     snap_id = _snapshot_id(seq)
-    staging = os.path.join(table_path, f"_staging_eqdel_{seq}")
-    keys.distinct().coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        os.path.join(r, f)
-        for r, _d, fs in os.walk(staging)
-        for f in fs
-        if f.endswith(".parquet")
+    [(del_rel, _values)] = write_data_files(
+        keys.distinct(), table_path,
+        lambda *_: f"data/eq-deletes-{seq}.parquet", n_files=1,
     )
-    del_rel = f"data/eq-deletes-{seq}.parquet"
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
-    os.replace(part, os.path.join(table_path, del_rel))
-    import shutil as _shutil
-
-    _shutil.rmtree(staging)
     n = pq.read_metadata(os.path.join(table_path, del_rel)).num_rows
     if not n:
+        os.unlink(os.path.join(table_path, del_rel))
         raise ValueError("empty equality delete: no key rows")
     return _commit_fast_append(
         table_path, version, meta, seq, snap_id,
@@ -1779,8 +1716,11 @@ def _publish_metadata(meta_dir: str, version: int, meta: dict) -> None:
     metadata file in ``metadata-log`` (spec §table-metadata: "a list
     of previous metadata files" — what the metadata_log_entries
     metadata table and catalog rollback tooling read), then write the
-    next metadata.json + hint swap atomically.  Timestamps are
-    version-derived (deterministic), clamped strictly increasing."""
+    next metadata.json + hint swap atomically.  The metadata file is
+    claimed put-if-absent — the commit point: of two writers that read
+    the same version, the second gets ConcurrentWriteError and the
+    first's snapshot stays.  Timestamps are version-derived
+    (deterministic), clamped strictly increasing."""
     new_version = version + 1
     meta = dict(meta)
     prev = os.path.join(meta_dir, f"v{version}.metadata.json")
@@ -1794,10 +1734,11 @@ def _publish_metadata(meta_dir: str, version: int, meta: dict) -> None:
             }
         )
         meta["metadata-log"] = log
-    tmp = os.path.join(meta_dir, f"v{new_version}.metadata.json.tmp")
+    path = os.path.join(meta_dir, f"v{new_version}.metadata.json")
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as fh:
         json.dump(meta, fh, sort_keys=True)
-    os.rename(tmp, os.path.join(meta_dir, f"v{new_version}.metadata.json"))
+    claim(tmp, path)
     hint = os.path.join(meta_dir, "version-hint.text")
     tmp_hint = hint + ".tmp"
     with open(tmp_hint, "w") as fh:

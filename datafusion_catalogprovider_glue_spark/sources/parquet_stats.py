@@ -1,5 +1,12 @@
-"""Parquet footer statistics: the one fold every table-format writer
-records and the one range test every table-format reader prunes with.
+"""Parquet data files of the lake tables: the one writer that lays
+them down and the footer statistics every format records for them.
+
+``write_data_files`` is the only Spark parquet write of Delta, Iceberg
+and Hudi data files (delta_writer, iceberg_writer, hudi_writer): one
+write into a private staging directory, then each part file is
+claimed at the name its format gives it put-if-absent, so a writer
+that lost a commit race fails before its commit and never deletes or
+replaces a file another writer committed.
 
 Delta's per-add ``stats`` (delta_writer), Iceberg's manifest
 ``lower_bounds``/``upper_bounds`` (iceberg_writer) and Hudi's
@@ -11,6 +18,92 @@ drive pruning.
 """
 
 from __future__ import annotations
+
+import os
+import posixpath
+import shutil
+import uuid
+from urllib.parse import unquote
+
+
+class ConcurrentWriteError(RuntimeError):
+    """Another writer committed this version, or claimed this file
+    name, first — the caller must re-read the table and retry
+    (optimistic concurrency)."""
+
+
+def claim(src: str, dest: str) -> None:
+    """Publish ``src`` at ``dest`` put-if-absent and drop ``src``.
+    ``os.link`` fails on an existing target where ``os.rename`` would
+    replace it, so a name another writer holds is never overwritten:
+    the later writer gets ``ConcurrentWriteError`` instead."""
+    try:
+        os.link(src, dest)
+    except FileExistsError:
+        raise ConcurrentWriteError(
+            f"{dest} already exists — another writer claimed it first"
+        ) from None
+    finally:
+        os.unlink(src)
+
+
+def write_data_files(df, root: str, name, partition_by=(),
+                     n_files: int = None) -> list[tuple[str, dict]]:
+    """Write ``df`` as parquet data files of the table at ``root`` and
+    return ``[(path relative to root, layout values)]``, sorted by
+    directory and then by Spark's part-file name.
+
+    One Spark write lands in a fresh ``_staging-<uuid>`` directory
+    under ``root`` (no reader lists it), laid out by the
+    ``partition_by`` columns; ``n_files`` coalesces an unpartitioned
+    write to at most that many files.  Only this write's part files
+    are listed — never a directory another writer shares — and each
+    is claimed put-if-absent at ``name(rel, values, index)``: ``rel``
+    is its staging path (Spark's escaped ``col=value/`` directories
+    and part name), ``values`` maps each layout column to its
+    unescaped value (``None`` for Hive's ``__HIVE_DEFAULT_PARTITION__``
+    NULL directory) and ``index`` is its position in its directory.
+    A taken name raises ``ConcurrentWriteError`` and unlinks the files
+    this call already placed; the staging directory, with Spark's
+    ``_SUCCESS`` and ``.crc`` files, is removed either way."""
+    staging = os.path.join(root, f"_staging-{uuid.uuid4().hex}")
+    try:
+        if n_files and not partition_by:
+            df = df.coalesce(n_files)
+        df.write.partitionBy(*partition_by).parquet(staging)
+        staged = []
+        for d, _dirs, names in os.walk(staging):
+            rel_dir = os.path.relpath(d, staging)
+            rel_dir = "" if rel_dir == "." else rel_dir
+            values = {}
+            for comp in rel_dir.split(os.sep) if rel_dir else ():
+                col, _, raw = comp.partition("=")
+                raw = unquote(raw)
+                values[col] = (
+                    None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
+                )
+            parts = sorted(n for n in names if n.endswith(".parquet"))
+            staged.extend(
+                (rel_dir, i, n, dict(values)) for i, n in enumerate(parts)
+            )
+        staged.sort(key=lambda f: (f[0], f[1]))
+        placed = []
+        try:
+            for rel_dir, i, part, values in staged:
+                rel = posixpath.join(rel_dir, part)
+                dest = name(rel, values, i)
+                full = os.path.join(root, dest)
+                os.makedirs(os.path.dirname(full), exist_ok=True)
+                claim(os.path.join(staging, rel), full)
+                placed.append((dest, values))
+        except BaseException:
+            for dest, _values in placed:
+                os.unlink(os.path.join(root, dest))
+            raise
+        return placed
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
 
 # physical types whose footer min/max order is the column's value
 # order (strings as-is; a writer that truncates them only WIDENS the

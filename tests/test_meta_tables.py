@@ -649,3 +649,34 @@ def test_hudi_mor_log_ops_refuse_clustered_tables(spark, tmp_path):
         )
     with pytest.raises(SparkError, match="replacecommit"):
         append_hudi_log(spark, df.filter(F.col("k") < 2), t, file_id="x")
+
+
+def test_scratch_tables_of_two_processes_never_share_a_path():
+    """Two processes asking ``_tmp_table`` for the same key and sf_dir
+    get different paths (each under its own scratch directory, gone at
+    exit), so one process's rebuild cannot delete the other's table."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from datafusion_catalogprovider_glue_spark.operators.meta_ops "
+        "import _tmp_table, _scratch_root\n"
+        "p = _tmp_table('meta_delta_history', '/sf')\n"
+        "assert p == _tmp_table('meta_delta_history', '/sf')\n"
+        "print(p, _scratch_root())\n"
+    )
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", code], cwd=repo, stdout=subprocess.PIPE,
+            text=True,
+        )
+        for _ in range(2)
+    ]
+    outs = [p.communicate(timeout=120)[0].split() for p in procs]
+    assert [p.returncode for p in procs] == [0, 0]
+    (path_a, root_a), (path_b, root_b) = outs
+    assert path_a != path_b
+    assert path_a.startswith(root_a + os.sep)
+    assert path_b.startswith(root_b + os.sep)
+    assert not os.path.exists(root_a) and not os.path.exists(root_b)
